@@ -124,16 +124,6 @@ def build_index(
 
     docs_path = run_stage("documents", fp_docs, make_documents, plain_writer)
     documents = spark.read.parquet(docs_path)
-    # the doc count is needed only for wave-2 shard sizing — run it
-    # overlapped with wave 1 instead of as a serial step between waves
-    # (every fixed serial second costs a wide cluster proportionally more)
-    _n_docs_box: dict[str, int] = {}
-    _count_thread: threading.Thread | None = None
-    if n_shards is None:
-        _count_thread = threading.Thread(
-            target=lambda: _n_docs_box.setdefault("n", documents.count())
-        )
-        _count_thread.start()
 
     # -- wave 1 (all depend on documents only): fingerprints || tokens ||
     # links_resolved — reference order (runner.py:36-52: dedup, then link
@@ -142,7 +132,12 @@ def build_index(
     fp_fprints = fingerprint("document_fingerprints", base_params, [fp_docs])
     fp_tokens = fingerprint("tokens", base_params, [fp_docs])
     fp_links = fingerprint("links_resolved", base_params, [fp_docs])
-    with ThreadPoolExecutor(3) as pool:
+    with ThreadPoolExecutor(4) as pool:
+        # the doc count is needed only for wave-2 shard sizing — run it
+        # overlapped with wave 1 instead of as a serial step between waves
+        # (every fixed serial second costs a wide cluster proportionally
+        # more); as a future, its .result() re-raises any failure
+        f_count = pool.submit(documents.count) if n_shards is None else None
         f_fprints = pool.submit(
             run_stage,
             "document_fingerprints",
@@ -169,11 +164,7 @@ def build_index(
     # -- wave 2: term_statistics || postings (consumers of tokens) ||
     # pagerank (consumer of links) || spellcheck dictionary (documents)
     fp_stats = fingerprint("term_statistics", base_params, [fp_tokens])
-    if n_shards is not None:
-        shards = n_shards
-    else:
-        _count_thread.join()
-        shards = n_shards_for(_n_docs_box["n"])
+    shards = n_shards if f_count is None else n_shards_for(f_count.result())
     fp_post = fingerprint(
         "postings",
         {**base_params, "n_shards": shards, "n_term_buckets": n_term_buckets},

@@ -149,3 +149,18 @@ def test_load_engines_and_search(spark, clean_build):
     stats = wand_eng.scan_stats()
     assert stats["blocks_total"] > 0
     assert 0 < stats["blocks_decoded"] <= stats["blocks_total"]
+
+
+def test_failed_doc_count_surfaces_its_cause(spark, pages, tmp_path, monkeypatch):
+    """The doc count that sizes the shards runs beside wave 1; its failure
+    must reach the caller as the original error, not as a later KeyError."""
+
+    def broken_count(self):
+        raise RuntimeError("doc count failed")
+
+    # the concrete DataFrame class (pyspark 4 splits classic/connect)
+    monkeypatch.setattr(type(pages), "count", broken_count)
+    with pytest.raises(RuntimeError, match="doc count failed"):
+        build_index(
+            spark, pages, str(tmp_path), FIXED_NOW, pagerank_iterations=PR_ITERS
+        )
