@@ -1,4 +1,9 @@
-"""Full index-build DAG: pages -> every derived table, resumable.
+"""The index-build DAG: documents -> every derived table, resumable.
+
+This module is the one place the index tables are derived. ``build_index``
+feeds the DAG from pages; ``streaming.incremental.apply_batch`` feeds it
+from its merged raw tables. Both go through ``_derive_tables``, which is
+also the only writer of ``build_meta.json``.
 
 Stage graph (reference pipeline order preserved — runner.py:36-52: dedup,
 then link graph BEFORE pagerank; bm25 stats independent):
@@ -8,10 +13,11 @@ then link graph BEFORE pagerank; bm25 stats independent):
                                                  ├─> fingerprints
                                                  └─> links_resolved ──> document_authority
 
-Each stage writes parquet under ``out_root/<table>`` and appends lineage +
-per-partition metrics to ``out_root/_checkpoints`` (checkpoints.py). A rerun
-after any interruption skips committed stages whose fingerprints match —
-kill-and-resume converges to byte-identical tables (tested).
+Each stage writes parquet under ``out_root/<table>``, then replaces its
+commit marker ``out_root/_checkpoints/<stage>.json`` (lineage + per-file
+metrics, checkpoints.py). A rerun after any interruption skips committed
+stages whose fingerprints match — kill-and-resume converges to
+byte-identical tables (tested).
 
 Scale notes:
 - postings are written ``partitionBy('term_bucket')`` so query IN-list scans
@@ -26,8 +32,8 @@ Scale notes:
 from __future__ import annotations
 
 import os
-import threading
 import time
+from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from datetime import datetime
@@ -42,7 +48,7 @@ from ..operators.postings import build_postings, n_shards_for
 from ..operators.term_stats import build_term_statistics
 from ..operators.tokens import build_tokens
 from ..sources.tableio import ParquetIO
-from .checkpoints import CheckpointLog, fingerprint
+from .checkpoints import CheckpointLog, fingerprint, write_json_atomic
 
 
 @dataclass
@@ -51,9 +57,6 @@ class BuildResult:
     tables: dict = field(default_factory=dict)
     stages_run: list = field(default_factory=list)
     stages_skipped: list = field(default_factory=list)
-
-    def read(self, spark: SparkSession, table: str) -> DataFrame:
-        return spark.read.parquet(os.path.join(self.out_root, table))
 
 
 def build_index(
@@ -71,48 +74,6 @@ def build_index(
     """Run (or resume) the full build. ``build_id`` + params + stage chain
     form the lineage fingerprints; rerunning with identical inputs is a no-op.
     """
-    log = CheckpointLog(spark, out_root)
-    result = BuildResult(out_root=out_root)
-    base_params = {"build_id": build_id, "now": now.isoformat(), "dedup": dedup}
-    # independent stages run CONCURRENTLY (r04: the DAG's sibling stages —
-    # e.g. term_statistics and postings, both consumers of tokens — submit
-    # their Spark jobs from separate threads, so one stage's scheduling /
-    # commit / read-back tail overlaps the other's executor work; measured
-    # worth ~10% wall at local[16] and more at wider parallelism, where
-    # idle waves at stage boundaries cost proportionally more). The
-    # checkpoint-log append is the ONE shared write path (a single parquet
-    # directory in append mode, whose commit staging dir is not safe for
-    # concurrent jobs) — serialized under a lock; stage outputs are
-    # disjoint paths and need none.
-    record_lock = threading.Lock()
-
-    def run_stage(name: str, fp: str, producer, writer) -> str:
-        out_path = os.path.join(out_root, name)
-        if log.is_complete(name, fp, out_path):
-            result.stages_skipped.append(name)
-            result.tables[name] = out_path
-            return out_path
-        t0 = time.perf_counter()
-        df = producer()
-        writer(df, out_path)
-        wall_ms = int((time.perf_counter() - t0) * 1000)
-        out_df = spark.read.parquet(out_path)
-        with record_lock:
-            log.record(name, fp, out_df, rows_in=None, wall_ms=wall_ms)
-        result.stages_run.append(name)
-        result.tables[name] = out_path
-        return out_path
-
-    # all stage writes go through the storage seam (sources/tableio.py):
-    # ParquetIO here; an Iceberg deployment swaps in IcebergIO, whose
-    # replace() is createOrReplace on the catalog table
-    io = ParquetIO(out_root)
-
-    def plain_writer(df: DataFrame, path: str) -> None:
-        io.replace(df, os.path.basename(path))
-
-    # -- documents (extract + validate + dedup + scores) ----------------------
-    fp_docs = fingerprint("documents", base_params, [])
 
     def make_documents() -> DataFrame:
         # upsert-by-url first (worker.py:200-214): re-crawled urls keep only
@@ -122,16 +83,72 @@ def build_index(
             d = exact_dedup(d)
         return d
 
-    docs_path = run_stage("documents", fp_docs, make_documents, plain_writer)
-    documents = spark.read.parquet(docs_path)
+    return _derive_tables(
+        spark,
+        out_root,
+        {"build_id": build_id, "now": now.isoformat(), "dedup": dedup},
+        make_documents,
+        build_tokens,
+        n_shards=n_shards,
+        n_term_buckets=n_term_buckets,
+        pagerank_iterations=pagerank_iterations,
+    )
+
+
+def _derive_tables(
+    spark: SparkSession,
+    out_root: str,
+    lineage: dict,
+    make_documents: Callable[[], DataFrame],
+    make_tokens: Callable[[DataFrame], DataFrame],
+    *,
+    n_shards: int | None,
+    n_term_buckets: int,
+    pagerank_iterations: int,
+) -> BuildResult:
+    """The stage DAG every index writer runs: ``make_documents()`` is the
+    documents table, ``make_tokens(documents)`` the tokens table, and the
+    rest derive from those two. ``lineage`` is the root of every stage
+    fingerprint, so it must change whenever the two producers' output can.
+    """
+    log = CheckpointLog(spark, out_root)
+    result = BuildResult(out_root=out_root)
+    # all stage writes go through the storage seam (sources/tableio.py):
+    # ParquetIO here; an Iceberg deployment swaps in IcebergIO, whose
+    # replace() is createOrReplace on the catalog table
+    io = ParquetIO(out_root)
+
+    # independent stages run CONCURRENTLY (r04: the DAG's sibling stages —
+    # e.g. term_statistics and postings, both consumers of tokens — submit
+    # their Spark jobs from separate threads, so one stage's scheduling /
+    # commit tail overlaps the other's executor work; measured worth ~10%
+    # wall at local[16] and more at wider parallelism, where idle waves at
+    # stage boundaries cost proportionally more). Stage outputs and their
+    # commit markers are disjoint paths, so no write needs a lock.
+    def run_stage(name: str, fp: str, producer, partition_by=None) -> None:
+        out_path = os.path.join(out_root, name)
+        if log.is_complete(name, fp, out_path):
+            result.stages_skipped.append(name)
+        else:
+            log.clear(name)
+            t0 = time.perf_counter()
+            io.replace(producer(), name, partition_by=partition_by)
+            log.record(name, fp, out_path, int((time.perf_counter() - t0) * 1000))
+            result.stages_run.append(name)
+        result.tables[name] = out_path
+
+    # -- documents (extract + validate + dedup + scores) ----------------------
+    fp_docs = fingerprint("documents", lineage, [])
+    run_stage("documents", fp_docs, make_documents)
+    documents = io.read(spark, "documents")
 
     # -- wave 1 (all depend on documents only): fingerprints || tokens ||
     # links_resolved — reference order (runner.py:36-52: dedup, then link
     # graph BEFORE pagerank) concerns the dedup->links->pagerank chain,
     # which the DAG dependencies preserve; siblings may overlap
-    fp_fprints = fingerprint("document_fingerprints", base_params, [fp_docs])
-    fp_tokens = fingerprint("tokens", base_params, [fp_docs])
-    fp_links = fingerprint("links_resolved", base_params, [fp_docs])
+    fp_fprints = fingerprint("document_fingerprints", lineage, [fp_docs])
+    fp_tokens = fingerprint("tokens", lineage, [fp_docs])
+    fp_links = fingerprint("links_resolved", lineage, [fp_docs])
     with ThreadPoolExecutor(4) as pool:
         # the doc count is needed only for wave-2 shard sizing — run it
         # overlapped with wave 1 instead of as a serial step between waves
@@ -143,39 +160,36 @@ def build_index(
             "document_fingerprints",
             fp_fprints,
             lambda: build_fingerprints(documents),
-            plain_writer,
         )
         f_tokens = pool.submit(
-            run_stage, "tokens", fp_tokens, lambda: build_tokens(documents), plain_writer
+            run_stage, "tokens", fp_tokens, lambda: make_tokens(documents)
         )
         f_links = pool.submit(
             run_stage,
             "links_resolved",
             fp_links,
             lambda: build_links_resolved(documents),
-            plain_writer,
         )
-        tokens_path = f_tokens.result()
-        links_path = f_links.result()
-        f_fprints.result()
-    tokens = spark.read.parquet(tokens_path)
-    links = spark.read.parquet(links_path)
+        for f in (f_fprints, f_tokens, f_links):
+            f.result()
+    tokens = io.read(spark, "tokens")
+    links = io.read(spark, "links_resolved")
 
     # -- wave 2: term_statistics || postings (consumers of tokens) ||
     # pagerank (consumer of links) || spellcheck dictionary (documents)
-    fp_stats = fingerprint("term_statistics", base_params, [fp_tokens])
+    fp_stats = fingerprint("term_statistics", lineage, [fp_tokens])
     shards = n_shards if f_count is None else n_shards_for(f_count.result())
     fp_post = fingerprint(
         "postings",
-        {**base_params, "n_shards": shards, "n_term_buckets": n_term_buckets},
+        {**lineage, "n_shards": shards, "n_term_buckets": n_term_buckets},
         [fp_tokens],
     )
     fp_pr = fingerprint(
         "document_authority",
-        {**base_params, "iterations": pagerank_iterations},
+        {**lineage, "iterations": pagerank_iterations},
         [fp_docs, fp_links],
     )
-    fp_dict = fingerprint("spellcheck_dictionary", base_params, [fp_docs])
+    fp_dict = fingerprint("spellcheck_dictionary", lineage, [fp_docs])
 
     def make_dictionary() -> DataFrame:
         from ..spellcheck.service import build_dictionary
@@ -189,7 +203,6 @@ def build_index(
                 "term_statistics",
                 fp_stats,
                 lambda: build_term_statistics(tokens, documents),
-                plain_writer,
             ),
             pool.submit(
                 run_stage,
@@ -198,9 +211,7 @@ def build_index(
                 lambda: build_postings(
                     tokens, n_shards=shards, n_term_buckets=n_term_buckets
                 ),
-                lambda df, path: io.replace(
-                    df, os.path.basename(path), partition_by=["term_bucket"]
-                ),
+                ["term_bucket"],
             ),
             pool.submit(
                 run_stage,
@@ -209,22 +220,19 @@ def build_index(
                 lambda: build_document_authority(
                     documents, links, iterations=pagerank_iterations
                 ),
-                plain_writer,
             ),
-            pool.submit(
-                run_stage, "spellcheck_dictionary", fp_dict, make_dictionary, plain_writer
-            ),
+            pool.submit(run_stage, "spellcheck_dictionary", fp_dict, make_dictionary),
         ]
         for f in futures:
             f.result()
 
     # layout meta so readers (load_engines) use the same term_bucket
-    # modulus for partition pruning as the writer did
-    import json
-
-    with open(os.path.join(out_root, "build_meta.json"), "w") as f:
-        json.dump({"n_shards": shards, "n_term_buckets": n_term_buckets}, f)
-
+    # modulus for partition pruning as the writer did; this is its only
+    # writer, and the swap is atomic
+    write_json_atomic(
+        os.path.join(out_root, "build_meta.json"),
+        {"n_shards": shards, "n_term_buckets": n_term_buckets},
+    )
     return result
 
 

@@ -1,18 +1,23 @@
-"""Per-stage checkpoint manifest: lineage + metrics + resume decisions.
+"""Per-stage commit markers: lineage + metrics + resume decisions.
 
 north_rule: "resumable from checkpoint with per-partition lineage + metrics".
 Design:
 
 - every stage output is a parquet dir under the build root
-- after a stage commits, one manifest row per output partition is appended to
-  ``<root>/_checkpoints`` (stage, partition_id, input_fingerprint, rows_out,
-  wall_ms, completed_at), plus a partition_id = -1 summary row with rows_in
+- after a stage's table commits, its marker ``<root>/_checkpoints/<stage>.json``
+  is replaced atomically (temp file + ``os.replace``). It holds the
+  ``input_fingerprint``, ``rows_out``, ``wall_ms``, ``completed_at`` and the
+  row count of every output file, read from the parquet footers — recording
+  a stage runs no Spark job
 - ``input_fingerprint`` chains: sha256(stage name + params + upstream
   fingerprints), so ANY upstream change invalidates downstream stages while
   an interrupted build resumes exactly where it stopped
-- resume = skip the stage iff a summary manifest row exists with the same
-  fingerprint AND the output dir has a _SUCCESS marker; otherwise recompute
-  and overwrite (idempotent writes — reruns converge to the same bytes)
+- resume = skip the stage iff its marker carries the same fingerprint AND
+  the output dir has a _SUCCESS marker; otherwise drop the marker, then
+  recompute and overwrite (idempotent writes — reruns converge to the same
+  bytes). Only the latest marker per stage is kept, so returning to an
+  earlier parameter set rebuilds the stage instead of trusting a stale
+  record
 
 The reference's analog is much weaker: a work queue with status flags
 (``crawl_queue``, queue_manager.py) and blind full-refresh batch jobs; this
@@ -21,20 +26,16 @@ gives deterministic stage-level resume with auditable lineage.
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import json
 import os
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+import pyarrow.parquet as pq
+from pyspark.sql import SparkSession
 
 CHECKPOINT_DIR = "_checkpoints"
-
-_MANIFEST_SCHEMA = (
-    "stage string, partition_id int, input_fingerprint string, "
-    "rows_in long, rows_out long, wall_ms long, completed_at timestamp"
-)
 
 
 def fingerprint(stage: str, params: dict, upstream: list) -> str:
@@ -47,61 +48,82 @@ def fingerprint(stage: str, params: dict, upstream: list) -> str:
     return hashlib.sha256(payload.encode()).hexdigest()
 
 
+def write_json_atomic(path: str, obj: dict) -> None:
+    """Readers see the old file or the new one whole, never a prefix."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
+
+
+def parquet_files(path: str) -> list[str]:
+    """Data files of a parquet dir (partition subdirs included), relative
+    to ``path`` and sorted."""
+    return sorted(
+        os.path.relpath(os.path.join(d, n), path)
+        for d, _dirs, names in os.walk(path)
+        for n in names
+        if n.endswith(".parquet")
+    )
+
+
 class CheckpointLog:
     def __init__(self, spark: SparkSession, root: str) -> None:
-        self.spark = spark
         self.root = root
         self.path = os.path.join(root, CHECKPOINT_DIR)
 
-    def _manifest(self) -> DataFrame | None:
-        if not os.path.exists(self.path):
-            return None
+    def _marker(self, stage: str) -> str:
+        return os.path.join(self.path, f"{stage}.json")
+
+    def _load(self, stage: str) -> dict | None:
         try:
-            return self.spark.read.schema(_MANIFEST_SCHEMA).parquet(self.path)
-        except Exception:
+            with open(self._marker(stage)) as f:
+                return json.load(f)
+        except FileNotFoundError:
             return None
 
     def is_complete(self, stage: str, fp: str, out_path: str) -> bool:
         if not os.path.exists(os.path.join(out_path, "_SUCCESS")):
             return False
-        m = self._manifest()
-        if m is None:
-            return False
-        return (
-            m.filter(
-                (F.col("stage") == stage)
-                & (F.col("input_fingerprint") == fp)
-                & (F.col("partition_id") == -1)
-            ).count()
-            > 0
-        )
+        marker = self._load(stage)
+        return marker is not None and marker["input_fingerprint"] == fp
 
-    def record(
-        self,
-        stage: str,
-        fp: str,
-        out_df: DataFrame,
-        rows_in: int | None,
-        wall_ms: int,
-    ) -> None:
-        """Append per-partition metrics + a summary row for the stage."""
-        per_part = [
-            (stage, int(r["pid"]), fp, None, int(r["rows"]), wall_ms)
-            for r in out_df.groupBy(
-                F.spark_partition_id().alias("pid")
-            )
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .collect()
-        ]
-        total_out = sum(p[4] for p in per_part)
-        rows = per_part + [(stage, -1, fp, rows_in, total_out, wall_ms)]
-        now = datetime.now(timezone.utc).replace(tzinfo=None)
-        df = self.spark.createDataFrame(
-            [(s, p, f, ri, ro, w, now) for (s, p, f, ri, ro, w) in rows],
-            schema=_MANIFEST_SCHEMA,
+    def clear(self, stage: str) -> None:
+        """Drop the stage's marker before its table is rewritten, so a crash
+        before ``record`` cannot leave the old marker beside the new table."""
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(self._marker(stage))
+
+    def record(self, stage: str, fp: str, out_path: str, wall_ms: int) -> None:
+        """Replace the stage's marker after its table at ``out_path`` committed."""
+        names = parquet_files(out_path)
+        rows = [pq.read_metadata(os.path.join(out_path, n)).num_rows for n in names]
+        os.makedirs(self.path, exist_ok=True)
+        write_json_atomic(
+            self._marker(stage),
+            {
+                "stage": stage,
+                "input_fingerprint": fp,
+                "rows_out": sum(rows),
+                "wall_ms": wall_ms,
+                "completed_at": datetime.now(timezone.utc).isoformat(),
+                "files": [{"file": n, "rows": r} for n, r in zip(names, rows)],
+            },
         )
-        df.coalesce(1).write.mode("append").parquet(self.path)
 
     def stage_rows(self, stage: str) -> list:
-        m = self._manifest()
-        return [] if m is None else m.filter(F.col("stage") == stage).collect()
+        """One row per output file (``partition_id`` = file index) plus a
+        ``partition_id = -1`` summary row; empty when the stage has no marker."""
+        m = self._load(stage)
+        if m is None:
+            return []
+        common = {
+            "stage": stage,
+            "input_fingerprint": m["input_fingerprint"],
+            "wall_ms": m["wall_ms"],
+            "completed_at": m["completed_at"],
+        }
+        return [
+            {**common, "partition_id": i, "file": f["file"], "rows_out": f["rows"]}
+            for i, f in enumerate(m["files"])
+        ] + [{**common, "partition_id": -1, "rows_out": m["rows_out"]}]

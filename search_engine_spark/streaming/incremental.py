@@ -10,14 +10,19 @@ rebuild). This module maps that onto Structured Streaming:
   all new files then stops (the 300 s cadence becomes scheduler cadence);
   the stream checkpoint remembers which files were already indexed.
 - per micro-batch (``foreachBatch``):
-  1. extract/score ONLY the new pages (the expensive Arrow UDF work is
-     incremental — matching the reference, which only parses fetched pages)
+  1. extract/score ONLY the new pages, once (the expensive Arrow UDF work
+     is incremental — matching the reference, which only parses fetched
+     pages)
   2. upsert into ``documents_raw`` by url (last warc_ts wins)
   3. token rows: recompute for touched urls only, carry the rest forward
-     (the reference's per-doc DELETE+INSERT, worker.py:229-239)
-  4. full-refresh the derived tables (term_statistics, postings, links,
-     pagerank) from the merged state — faithful to the reference's
-     TRUNCATE+rebuild batch jobs
+     in one write of ``tokens_raw`` (the reference's per-doc
+     DELETE+INSERT, worker.py:229-239)
+  4. run the build DAG (``pipeline.build``) on the merged state:
+     documents = exact_dedup(documents_raw), tokens = tokens_raw of the
+     surviving documents, and every other table derived from those two
+     exactly as ``build_index`` derives it — faithful to the reference's
+     TRUNCATE+rebuild batch jobs. The DAG's lineage root holds the raw
+     tables' file listing, so each batch rebuilds every stage
 - exact dedup is re-derived per batch from documents_raw, so an update that
   changes a previously-duplicated content correctly resurrects the dropped
   twin.
@@ -32,27 +37,14 @@ import os
 from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.documents import build_documents, latest_by_url
-from ..operators.fingerprints import build_fingerprints, exact_dedup
-from ..operators.link_graph import build_links_resolved
-from ..operators.pagerank import build_document_authority
-from ..operators.postings import build_postings
-from ..operators.term_stats import build_term_statistics
+from ..operators.fingerprints import exact_dedup
 from ..operators.tokens import build_tokens
+from ..pipeline.build import _derive_tables
+from ..pipeline.checkpoints import parquet_files
 from ..schemas import PAGES
-
-
-def _overwrite(df: DataFrame, path: str) -> None:
-    # parquet can't overwrite a path that feeds the same plan; stage via temp
-    tmp = path + "._tmp"
-    df.write.mode("overwrite").parquet(tmp)
-    final_df = df.sparkSession.read.parquet(tmp)
-    final_df.write.mode("overwrite").parquet(path)
-    import shutil
-
-    shutil.rmtree(tmp, ignore_errors=True)
+from ..sources.tableio import ParquetIO
 
 
 def apply_batch(
@@ -66,77 +58,44 @@ def apply_batch(
     pagerank_iterations: int = 20,
 ) -> None:
     """Fold one micro-batch of pages into the index tables under out_root."""
-    raw_path = os.path.join(out_root, "documents_raw")
-    tokens_path = os.path.join(out_root, "tokens_raw")
-
-    new_docs = build_documents(latest_by_url(batch_pages), now)
+    io = ParquetIO(out_root)
+    # materialized once: both raw folds and the tokens read these rows, so
+    # each batch page is extracted exactly once
+    new_docs = build_documents(latest_by_url(batch_pages), now).localCheckpoint(
+        eager=True
+    )
+    io.upsert(new_docs, "documents_raw", key="url")
     new_tokens = build_tokens(new_docs)
-
-    if os.path.exists(os.path.join(raw_path, "_SUCCESS")):
-        existing = spark.read.parquet(raw_path)
-        touched = new_docs.select("url").distinct()
-        kept = existing.join(touched, "url", "left_anti")
-        merged_docs = kept.unionByName(new_docs)
-        existing_tokens = spark.read.parquet(tokens_path)
-        kept_tokens = existing_tokens.join(
-            new_docs.select("doc_id").distinct(), "doc_id", "left_anti"
+    if io.exists(spark, "tokens_raw"):
+        # overwriting a table the plan reads needs a materialization barrier
+        new_tokens = (
+            io.read(spark, "tokens_raw")
+            .join(new_docs.select("doc_id"), "doc_id", "left_anti")
+            .unionByName(new_tokens)
+            .localCheckpoint(eager=True)
         )
-        merged_tokens = kept_tokens.unionByName(new_tokens)
-    else:
-        merged_docs = new_docs
-        merged_tokens = new_tokens
-
-    _overwrite(merged_docs, raw_path)
-    _overwrite(merged_tokens, tokens_path)
+    io.replace(new_tokens, "tokens_raw")
 
     # ---- derived state: full refresh (reference TRUNCATE+rebuild parity) ----
-    documents_raw = spark.read.parquet(raw_path)
-    tokens_raw = spark.read.parquet(tokens_path)
-
-    documents = exact_dedup(documents_raw)
-    _overwrite(documents, os.path.join(out_root, "documents"))
-    documents = spark.read.parquet(os.path.join(out_root, "documents"))
-
-    live_tokens = tokens_raw.join(
-        documents.select("doc_id").distinct(), "doc_id", "left_semi"
+    # Spark names every file it writes uniquely, so the raw tables' file
+    # listing changes with every batch, replays included: no stage of an
+    # earlier batch is ever reused
+    raw_files = {
+        t: parquet_files(os.path.join(out_root, t))
+        for t in ("documents_raw", "tokens_raw")
+    }
+    _derive_tables(
+        spark,
+        out_root,
+        {"now": now.isoformat(), "raw_files": raw_files},
+        lambda: exact_dedup(io.read(spark, "documents_raw")),
+        lambda documents: io.read(spark, "tokens_raw").join(
+            documents.select("doc_id"), "doc_id", "left_semi"
+        ),
+        n_shards=n_shards,
+        n_term_buckets=n_term_buckets,
+        pagerank_iterations=pagerank_iterations,
     )
-    _overwrite(live_tokens, os.path.join(out_root, "tokens"))
-    tokens = spark.read.parquet(os.path.join(out_root, "tokens"))
-
-    _overwrite(
-        build_fingerprints(documents),
-        os.path.join(out_root, "document_fingerprints"),
-    )
-    _overwrite(
-        build_term_statistics(tokens, documents),
-        os.path.join(out_root, "term_statistics"),
-    )
-    build_postings(tokens, n_shards=n_shards, n_term_buckets=n_term_buckets).write.mode(
-        "overwrite"
-    ).partitionBy("term_bucket").parquet(os.path.join(out_root, "postings"))
-
-    links = build_links_resolved(documents)
-    _overwrite(links, os.path.join(out_root, "links_resolved"))
-    links = spark.read.parquet(os.path.join(out_root, "links_resolved"))
-    _overwrite(
-        build_document_authority(documents, links, iterations=pagerank_iterations),
-        os.path.join(out_root, "document_authority"),
-    )
-
-    from ..spellcheck.service import build_dictionary
-
-    _overwrite(
-        build_dictionary(documents),
-        os.path.join(out_root, "spellcheck_dictionary"),
-    )
-
-    # layout meta for readers (same contract as pipeline/build.py)
-    import json
-
-    with open(os.path.join(out_root, "build_meta.json"), "w") as f:
-        json.dump(
-            {"n_shards": n_shards, "n_term_buckets": n_term_buckets}, f
-        )
 
 
 def run_micro_batch_pipeline(

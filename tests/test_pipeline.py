@@ -1,5 +1,6 @@
 """Build pipeline: resumability, lineage, determinism across parallelism."""
 
+import json
 import os
 import shutil
 
@@ -79,6 +80,43 @@ def test_param_change_invalidates_only_dependents(
         spark, pages, copy, FIXED_NOW, n_shards=3, pagerank_iterations=PR_ITERS
     )
     assert r.stages_run == ["postings"]
+    # stepping back to the first layout must rebuild postings: the marker
+    # left by the first build names a table the 3-shard build replaced
+    r = build_index(
+        spark, pages, copy, FIXED_NOW, n_shards=2, pagerank_iterations=PR_ITERS
+    )
+    assert r.stages_run == ["postings"]
+    assert _table_snapshot(spark, copy, "postings") == _table_snapshot(
+        spark, root, "postings"
+    )
+
+
+def test_crash_before_marker_reruns_the_stage(
+    spark, pages, clean_build, tmp_path_factory, monkeypatch
+):
+    """A build killed after a table commits but before its marker is
+    recorded must not let the next build trust the old marker."""
+    root, _ = clean_build
+    copy = str(tmp_path_factory.mktemp("marker_crash"))
+    shutil.rmtree(copy)
+    shutil.copytree(root, copy)
+
+    def killed(*args, **kwargs):
+        raise RuntimeError("killed before the marker")
+
+    monkeypatch.setattr(CheckpointLog, "record", killed)
+    with pytest.raises(RuntimeError, match="killed before the marker"):
+        build_index(
+            spark, pages, copy, FIXED_NOW, n_shards=3, pagerank_iterations=PR_ITERS
+        )
+    monkeypatch.undo()
+    r = build_index(
+        spark, pages, copy, FIXED_NOW, n_shards=2, pagerank_iterations=PR_ITERS
+    )
+    assert r.stages_run == ["postings"]
+    assert _table_snapshot(spark, copy, "postings") == _table_snapshot(
+        spark, root, "postings"
+    )
 
 
 def test_kill_and_resume_matches_clean_build(
@@ -149,6 +187,35 @@ def test_load_engines_and_search(spark, clean_build):
     stats = wand_eng.scan_stats()
     assert stats["blocks_total"] > 0
     assert 0 < stats["blocks_decoded"] <= stats["blocks_total"]
+
+
+def test_failed_meta_write_keeps_the_old_meta(
+    spark, pages, clean_build, tmp_path_factory, monkeypatch
+):
+    """A crash while build_meta.json is written leaves the previous meta
+    whole, so readers still open the index with its term_bucket modulus."""
+    root, _ = clean_build
+    copy = str(tmp_path_factory.mktemp("meta_crash"))
+    shutil.rmtree(copy)
+    shutil.copytree(root, copy)
+    meta_path = os.path.join(copy, "build_meta.json")
+    with open(meta_path) as f:
+        old_meta = json.load(f)
+
+    def torn_dump(obj, fp, **kwargs):
+        fp.write(json.dumps(obj)[:5])
+        raise OSError("disk full")
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="disk full"):
+        build_index(
+            spark, pages, copy, FIXED_NOW, n_shards=2, pagerank_iterations=PR_ITERS
+        )
+    monkeypatch.undo()
+    with open(meta_path) as f:
+        assert json.load(f) == old_meta
+    _, wand_eng = load_engines(spark, copy)
+    assert wand_eng.n_term_buckets == old_meta["n_term_buckets"]
 
 
 def test_failed_doc_count_surfaces_its_cause(spark, pages, tmp_path, monkeypatch):

@@ -21,7 +21,6 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "search_engine_spark"
 
 KNOWN_UNREACHABLE = {
-    f"{PKG}.sources.bucketed",
     f"{PKG}.streaming.stateful",
     f"{PKG}.streaming.windowed",
 }

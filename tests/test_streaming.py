@@ -8,7 +8,11 @@ import pytest
 
 from search_engine_spark.corpus import FIXED_NOW, generate_pages, pages_dataframe
 from search_engine_spark.pipeline.build import build_index
-from search_engine_spark.streaming.incremental import run_micro_batch_pipeline
+from search_engine_spark.operators import documents as documents_mod
+from search_engine_spark.streaming.incremental import (
+    apply_batch,
+    run_micro_batch_pipeline,
+)
 
 TABLES = [
     "documents",
@@ -85,6 +89,16 @@ def test_incremental_equals_batch(spark, chunks, tmp_path_factory):
     )
     assert n3 == 0
 
+    # foreachBatch is at-least-once: replaying batch 2 changes nothing
+    apply_batch(
+        spark,
+        pages_dataframe(spark, chunk_b),
+        out_inc,
+        FIXED_NOW,
+        n_shards=2,
+        pagerank_iterations=PR_ITERS,
+    )
+
     # batch build over ALL pages (upsert-by-url inside build_index)
     all_pages = pages_dataframe(spark, chunk_a + chunk_b)
     build_index(
@@ -127,3 +141,32 @@ def test_update_actually_changed_the_document(spark, chunks, tmp_path_factory):
     )
     assert before["content"] != after["content"]
     assert after["content"] == chunk_b[-1].text
+
+
+def test_batch_pages_are_extracted_once(spark, chunks, tmp_path, monkeypatch):
+    """apply_batch parses each page of a batch once, however many tables
+    read the batch's documents."""
+    chunk_a, chunk_b = chunks
+    out = str(tmp_path)
+    apply_batch(
+        spark, pages_dataframe(spark, chunk_a), out, FIXED_NOW, pagerank_iterations=2
+    )
+
+    rows_parsed = spark.sparkContext.accumulator(0)
+    real = documents_mod.make_extract_map
+
+    def counting_extract_map(now):
+        extract = real(now)
+
+        def counted(batches):
+            for pdf in batches:
+                rows_parsed.add(len(pdf))
+                yield pdf
+
+        return lambda batches: extract(counted(batches))
+
+    monkeypatch.setattr(documents_mod, "make_extract_map", counting_extract_map)
+    apply_batch(
+        spark, pages_dataframe(spark, chunk_b), out, FIXED_NOW, pagerank_iterations=2
+    )
+    assert rows_parsed.value == len({p.url for p in chunk_b})
