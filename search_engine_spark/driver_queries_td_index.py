@@ -594,10 +594,11 @@ _SPELL_INPUT_SQL = ", ".join(f"('{w}')" for w in SPELL_INPUTS)
 
 
 def q_spellcheck_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J7/T5 via the SAME pg_trgm-padded trigram join the spellcheck
-    service ships (spellcheck/service.trigram_candidates) — one
-    implementation, not a divergent re-spelling; the oracle mirrors the
-    padded-trigram + GREATEST(2, len-2) band semantics."""
+    """J7/T5 via the library's pg_trgm-padded trigram join
+    (spellcheck/service.trigram_candidates). The spellcheck service answers
+    from in-memory trigram lists instead; tests/test_spellcheck.py holds it
+    equal to this join. The oracle mirrors the padded-trigram +
+    GREATEST(2, len-2) band semantics."""
     from .spellcheck.service import trigram_candidates
 
     docs = _read(spark, sf_dir, "documents")

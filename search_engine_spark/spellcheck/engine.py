@@ -7,8 +7,8 @@ Parity sources (studied, re-implemented):
 - case-preserving replacement: ``engine.py:164-169``
 
 Everything here is driver-side Python: the word set of a query is tiny, and
-the reference runs the same logic in-process. The distributed piece
-(candidate generation over the full dictionary) lives in ``service.py``.
+the reference runs the same logic in-process. Candidate generation over the
+dictionary lives in ``service.py``.
 """
 
 from __future__ import annotations

@@ -1,16 +1,18 @@
-"""Spellcheck service: dictionary build + distributed candidate generation.
+"""Spellcheck service: dictionary build + in-memory candidate generation.
 
 The reference generates candidates with a pg_trgm LATERAL join per suspect
 word (``app/api/main.py:36-56``): length band +-2, trigram-similar,
-popularity >= 2.0, top-120 by (similarity DESC, popularity DESC). Here the
-dictionary is a DataFrame; suspect words (a handful per query) broadcast
-against it, trigram similarity is computed natively with array functions
-(pg_trgm semantics: the word padded with two leading and one trailing
-space, distinct trigrams, |intersection| / |union|), and the per-word top-k
-is a window — the J7/T5 shape from SURVEY.md §2.3/§2.5.
+popularity >= 2.0, top-120 by (similarity DESC, popularity DESC). pg_trgm
+semantics: the word padded with two leading and one trailing space,
+distinct trigrams, similarity |intersection| / |union|.
 
-Scale: the dictionary is ~10^5 rows (tiny); the suspect side is tinier and
-always broadcast, so candidate generation never shuffles the dictionary.
+The dictionary is built as a DataFrame (``build_dictionary``).
+``SpellcheckService`` collects it once, at open, and serves every suggest
+from a trigram -> words inverted list held in driver memory: the shared
+trigram count of each candidate comes from walking the suspect word's
+trigram lists, so a suggest runs no Spark job. ``trigram_candidates`` is
+the same computation as a Spark join (broadcast suspects, window top-k:
+the J7/T5 shape from SURVEY.md §2.3/§2.5), kept for the operator pair.
 The final choose/apply stage is driver-side on <= 120 rows/word, exactly
 like the reference.
 """
@@ -32,6 +34,10 @@ from .engine import (
 
 MIN_CANDIDATE_POPULARITY = 2.0  # main.py:68
 MAX_CANDIDATES_PER_WORD = 120  # main.py:69
+# SpellcheckService holds the whole dictionary in driver memory: entries +
+# trigram lists measured 0.26-0.53 KB per word (tracemalloc), so this budget
+# stays under ~0.5 GB
+MAX_DICTIONARY_WORDS = 1_000_000
 
 # pg_trgm-style padded trigram set: '  ' + word + ' '
 _TRIGRAMS = (
@@ -43,6 +49,12 @@ _TRIGRAMS = (
 def _trigram_col(col: str) -> F.Column:
     padded = f"concat('  ', {col}, ' ')"
     return F.expr(_TRIGRAMS.format(p=padded))
+
+
+def _trigrams(word: str) -> set[str]:
+    """``_trigram_col`` in Python: distinct trigrams of '  ' + word + ' '."""
+    p = f"  {word} "
+    return {p[i : i + 3] for i in range(len(p) - 2)}
 
 
 def build_dictionary(documents: DataFrame, text_cols: tuple[str, ...] = ("title", "description", "content")) -> DataFrame:
@@ -133,49 +145,6 @@ def trigram_candidates(
             "input_word",
             "word",
             "similarity",
-            "doc_frequency",
-            "total_frequency",
-            "external_frequency",
-            "popularity_score",
-        )
-    )
-
-
-def prefix_candidates(
-    dictionary: DataFrame,
-    suspect_words: list[str],
-    min_popularity: float = MIN_CANDIDATE_POPULARITY,
-    limit: int = MAX_CANDIDATES_PER_WORD,
-) -> DataFrame:
-    """J8 fallback candidate generator (``main.py:58-66``): length band,
-    same first letter, popularity floor, top-``limit`` by popularity DESC
-    (word ASC appended for determinism). The reference uses this when
-    pg_trgm is unavailable; kept for surface parity and as the cheaper
-    candidate path when trigram arrays are not materialized."""
-    spark = dictionary.sparkSession
-    inputs = spark.createDataFrame(
-        [(w,) for w in sorted({normalize_word(w) for w in suspect_words})],
-        "input_word string",
-    )
-    joined = dictionary.join(F.broadcast(inputs)).filter(
-        (F.col("popularity_score") >= min_popularity)
-        & (
-            F.length("word").between(
-                F.greatest(F.lit(2), F.length("input_word") - 2),
-                F.length("input_word") + 2,
-            )
-        )
-        & (F.substring("word", 1, 1) == F.substring("input_word", 1, 1))
-    )
-    w = Window.partitionBy("input_word").orderBy(
-        F.desc("popularity_score"), F.asc("word")
-    )
-    return (
-        joined.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= limit)
-        .select(
-            "input_word",
-            "word",
             "doc_frequency",
             "total_frequency",
             "external_frequency",
@@ -279,26 +248,20 @@ def load_external_wordlist(spark: SparkSession, path: str) -> DataFrame:
 class SpellcheckService:
     """suggest(q) -> corrected query string or None (main.py:97-197).
 
-    The dictionary DataFrame is scanned once per suggest() for known-word
-    lookup + candidates; the hot top-meta cache (S10) is a driver dict of
-    the most popular ``meta_words`` entries, mirroring the reference's
-    mtime-cached JSON meta file.
+    Opening collects the whole dictionary (at most ``MAX_DICTIONARY_WORDS``
+    rows) into ``word -> DictEntry`` and indexes the words at or above the
+    popularity floor by trigram. Known-word lookup and candidate generation
+    then read only these structures, which never change after open.
     """
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        dictionary: DataFrame,
-        meta_words: int = 120_000,
-    ):
-        self.spark = spark
-        self.dictionary = dictionary
-        rows = (
-            dictionary.orderBy(F.desc("popularity_score"), F.asc("word"))
-            .limit(meta_words)
-            .collect()
-        )
-        self._meta: dict[str, DictEntry] = {
+    def __init__(self, spark: SparkSession, dictionary: DataFrame):
+        rows = dictionary.limit(MAX_DICTIONARY_WORDS + 1).collect()
+        if len(rows) > MAX_DICTIONARY_WORDS:
+            raise ValueError(
+                "spellcheck dictionary has more than MAX_DICTIONARY_WORDS = "
+                f"{MAX_DICTIONARY_WORDS} words; it must fit in driver memory"
+            )
+        self._entries: dict[str, DictEntry] = {
             r["word"]: DictEntry(
                 word=r["word"],
                 doc_frequency=r["doc_frequency"],
@@ -308,53 +271,61 @@ class SpellcheckService:
             )
             for r in rows
         }
+        # trigram -> words holding it, and each word's trigram count, over
+        # the words eligible as candidates
+        self._words_by_trigram: dict[str, list[str]] = {}
+        self._n_trigrams: dict[str, int] = {}
+        for w, e in self._entries.items():
+            if e.popularity_score < MIN_CANDIDATE_POPULARITY:
+                continue
+            grams = _trigrams(w)
+            self._n_trigrams[w] = len(grams)
+            for g in grams:
+                self._words_by_trigram.setdefault(g, []).append(w)
 
-    def _lookup_known(self, words: list[str]) -> dict[str, DictEntry]:
-        known = {w: self._meta[w] for w in words if w in self._meta}
-        missing = [w for w in words if w not in known]
-        if missing:
-            for r in self.dictionary.filter(F.col("word").isin(missing)).collect():
-                known[r["word"]] = DictEntry(
-                    word=r["word"],
-                    doc_frequency=r["doc_frequency"],
-                    total_frequency=r["total_frequency"],
-                    external_frequency=r["external_frequency"],
-                    popularity_score=r["popularity_score"],
-                )
-        return known
+    def candidates(self, word: str) -> list[tuple[DictEntry, float]]:
+        """(entry, similarity) top-``MAX_CANDIDATES_PER_WORD`` for ``word``,
+        ranked by (similarity DESC, popularity DESC, word ASC): the rows
+        ``trigram_candidates`` keeps for it."""
+        w = normalize_word(word)
+        grams = _trigrams(w)
+        shared: dict[str, int] = {}
+        for g in grams:
+            for cand in self._words_by_trigram.get(g, ()):
+                shared[cand] = shared.get(cand, 0) + 1
+        lo, hi = max(2, len(w) - 2), len(w) + 2
+        ranked = sorted(
+            (
+                -(n / (len(grams) + self._n_trigrams[cand] - n)),
+                -self._entries[cand].popularity_score,
+                cand,
+            )
+            for cand, n in shared.items()
+            if lo <= len(cand) <= hi
+        )
+        return [
+            (self._entries[cand], -neg_sim)
+            for neg_sim, _, cand in ranked[:MAX_CANDIDATES_PER_WORD]
+        ]
 
     def suggest(self, q: str) -> str | None:
         words = [normalize_word(w) for w in WORD_RE.findall(q)]
         words = [w for w in words if w and w not in STOPWORDS]
-        if not words:
-            return None
-
-        known = self._lookup_known(words)
         suspect = [
             w
             for w in words
             if not (
-                w in known and known[w].popularity_score >= TRUSTED_POPULARITY
+                w in self._entries
+                and self._entries[w].popularity_score >= TRUSTED_POPULARITY
             )
         ]
         if not suspect:
             return None
 
-        cand_rows = trigram_candidates(self.dictionary, suspect).collect()
-        by_word: dict[str, dict[str, DictEntry]] = {}
-        for r in cand_rows:
-            by_word.setdefault(r["input_word"], {})[r["word"]] = DictEntry(
-                word=r["word"],
-                doc_frequency=r["doc_frequency"],
-                total_frequency=r["total_frequency"],
-                external_frequency=r["external_frequency"],
-                popularity_score=r["popularity_score"],
-            )
-
         corrected: dict[str, str] = {}
         for w in suspect:
             best = choose_correction(
-                w, known.get(w), by_word.get(w, {}).values()
+                w, self._entries.get(w), (e for e, _ in self.candidates(w))
             )
             if best:
                 corrected[w] = best

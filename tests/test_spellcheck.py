@@ -131,7 +131,7 @@ def test_apply_case():
 
 
 # ---------------------------------------------------------------------------
-# distributed candidate generation + end-to-end service
+# candidate generation (Spark pair and in-memory service) + end-to-end service
 # ---------------------------------------------------------------------------
 @pytest.fixture(scope="module")
 def dictionary(spark):
@@ -180,7 +180,7 @@ def test_pg_trgm_similarity_value(dictionary):
 
 
 def test_service_end_to_end(spark, dictionary):
-    svc = S.SpellcheckService(spark, dictionary, meta_words=10)
+    svc = S.SpellcheckService(spark, dictionary)
     assert svc.suggest("Spakr tabel query") == "Spark table query"
     # trusted known words are never corrected
     assert svc.suggest("spark search") is None
@@ -188,13 +188,78 @@ def test_service_end_to_end(spark, dictionary):
     assert svc.suggest("the and of") is None
 
 
-def test_prefix_candidates_fallback(dictionary):
-    out = S.prefix_candidates(dictionary, ["spakr"]).collect()
-    words = [r["word"] for r in out]
-    # same first letter + length band [3,7]: spark, sparse, search
-    assert set(words) == {"spark", "sparse", "search"}
-    pops = [r["popularity_score"] for r in out]
-    assert pops == sorted(pops, reverse=True)
+SUSPECTS = [
+    ["spakr"],
+    ["tabel"],
+    ["taxes"],  # shares '  t', ' ta' with "ta"; band 3..7 excludes it
+    ["xyzzy"],  # no trigram in common with any dictionary word
+    ["tabel", "tabel"],
+]
+
+
+def _spark_ranked(dictionary, words):
+    """trigram_candidates' rows for ``words`` in (-similarity, -popularity,
+    word) order."""
+    return sorted(
+        S.trigram_candidates(dictionary, words).collect(),
+        key=lambda r: (-r["similarity"], -r["popularity_score"], r["word"]),
+    )
+
+
+@pytest.mark.parametrize("words", SUSPECTS)
+def test_suggest_hands_choose_correction_the_spark_candidates(
+    spark, dictionary, words, monkeypatch
+):
+    seen = []
+    real = S.choose_correction
+
+    def spy(word, known, candidates, *args, **kwargs):
+        candidates = list(candidates)
+        seen.append((word, [(c.word, c.popularity_score) for c in candidates]))
+        return real(word, known, candidates, *args, **kwargs)
+
+    svc = S.SpellcheckService(spark, dictionary)
+    monkeypatch.setattr(S, "choose_correction", spy)
+    svc.suggest(" ".join(words))
+    assert seen == [
+        (w, [(r["word"], r["popularity_score"]) for r in _spark_ranked(dictionary, [w])])
+        for w in words
+    ]
+
+
+@pytest.mark.parametrize("words", SUSPECTS)
+def test_service_candidates_equal_trigram_candidates(spark, dictionary, words):
+    # "spar" is in the band of "spakr" but under the popularity floor
+    dictionary = dictionary.unionByName(
+        spark.createDataFrame(
+            [("spar", 1, 1, 0, 1.0)],
+            "word string, doc_frequency long, total_frequency long,"
+            " external_frequency int, popularity_score double",
+        )
+    )
+    got = S.SpellcheckService(spark, dictionary).candidates(words[0])
+    assert [(e.word, sim) for e, sim in got] == [
+        (r["word"], r["similarity"]) for r in _spark_ranked(dictionary, words)
+    ]
+
+
+def test_suggest_runs_no_spark_job(spark, dictionary):
+    svc = S.SpellcheckService(spark, dictionary)
+    assert svc.suggest("Spakr tabel query") == "Spark table query"  # warm
+    sc = spark.sparkContext
+    group = "spellcheck-suggest-probe"
+    sc.setJobGroup(group, "a suggest must not run a Spark job")
+    try:
+        assert svc.suggest("Spakr tabel query") == "Spark table query"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+def test_open_rejects_dictionary_over_budget(spark, dictionary, monkeypatch):
+    monkeypatch.setattr(S, "MAX_DICTIONARY_WORDS", 3)
+    with pytest.raises(ValueError, match="MAX_DICTIONARY_WORDS = 3"):
+        S.SpellcheckService(spark, dictionary)
 
 
 def test_merge_frequency_sources(spark):
