@@ -61,7 +61,7 @@ class OracleIndex:
     def __init__(self, records: list[PageRecord], now: datetime) -> None:
         self.now = now
         self.docs: dict[str, OracleDoc] = {}
-        # tokens: url -> list of (term, field, freq)
+        # tokens: url -> list of (term, field, freq), in (term, field) order
         self.tokens: dict[str, list[tuple[str, int, int]]] = {}
 
         for r in records:
@@ -87,7 +87,7 @@ class OracleIndex:
             for fld, source in ((1, r.title), (2, r.description), (4, r.text)):
                 for term, freq in tokenize(source).items():
                     rows.append((term, fld, freq))
-            self.tokens[r.url] = rows
+            self.tokens[r.url] = sorted(rows)
 
         # term statistics (bm25_stats.py:9-27)
         n = len(self.docs)
@@ -111,7 +111,10 @@ class OracleIndex:
     # -- retrieval ----------------------------------------------------------
     def candidates(self, query_terms: list[str], limit: int):
         """SEARCH_SQL semantics: per-doc weighted tf-idf sum + matched terms,
-        ordered by (score desc, url asc), LIMIT ``limit``."""
+        ordered by (score desc, url asc), LIMIT ``limit``. The sum runs over
+        the doc's token rows in (term, field) order, not text order: two docs
+        with the same frequencies per (term, field) then score the same to
+        the last bit, so a tie at the LIMIT is decided by url alone."""
         qset = set(query_terms)
         scored = []
         for url, rows in self.tokens.items():

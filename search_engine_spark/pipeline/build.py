@@ -245,12 +245,14 @@ def load_engines(
 ):
     """Convenience: open the built tables and return both search engines.
 
-    A long-lived query service passes ``interactive=True`` (scoped
-    serving configs around each search action) and
-    ``pin_shard_layout=True`` (cache the postings in the shard-hash
-    layout once at startup so every query's WAND stage skips the shard
-    shuffle — see PostingsSearchEngine). Batch/one-shot callers keep the
-    defaults: no cache is built, the parquet scans stay partition-pruned.
+    A long-lived query service passes ``pin_shard_layout=True``: the
+    postings engine collects the posting rows, idf and the document fields
+    into driver memory once at open (at most
+    ``postings_search.MAX_SERVING_DOCUMENTS`` documents) and then serves
+    every search from memory, with no Spark job. ``interactive=True``
+    scopes the serving configs around the Spark search actions of an
+    unpinned engine. Batch/one-shot callers keep the defaults: nothing is
+    collected, each search runs partition-pruned parquet scans.
     """
     from ..query.postings_search import PostingsSearchEngine
     from ..query.search import SearchEngine

@@ -14,18 +14,27 @@ Columns over the <=2000-row candidate DataFrame — zero Python in the loop:
 Hit counting tokenizes the target with the same regex as the reference
 (``TOKEN_RE.findall(lower(text))`` -> set membership), expressed as
 ``array_contains(regexp_extract_all(lower(col), '[a-z0-9]{2,}'), word)``.
+
+``intent_score`` / ``rerank_rows`` are the same score in plain Python, for
+an engine that holds its candidates in driver memory: the same components,
+added in the same order (an ordered fold, CLAUDE.md invariant 4), over the
+same token runs and normalize/compact rules.
 """
 
 from __future__ import annotations
 
+import math
+import re
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .analysis import QueryContext
+from .analysis import QueryContext, compact_text, normalize_text
 
 # On lowercased text the reference token regex \b[a-zA-Z0-9]{2,}\b reduces to
 # maximal alnum runs of length >= 2.
 _TOKEN_RUN = r"[a-z0-9]{2,}"
+_TOKEN_RUN_RE = re.compile(_TOKEN_RUN)
 
 
 def _normalize(col: F.Column) -> F.Column:
@@ -110,3 +119,71 @@ def rerank(candidates: DataFrame, ctx: QueryContext) -> DataFrame:
         .select("title", "description", "url", "score")
         .orderBy(F.desc("score"), F.asc("url"))
     )
+
+
+def _word_hits(text: str, words: tuple[str, ...]) -> int:
+    """Python twin of ``_hits``."""
+    token_set = set(_TOKEN_RUN_RE.findall(text.lower()))
+    return sum(1 for w in words if w in token_set)
+
+
+def intent_score(
+    ctx: QueryContext,
+    token_score: float,
+    matched_terms: int,
+    title: str | None,
+    description: str | None,
+    url: str | None,
+) -> float:
+    """``intent_score_col`` for one candidate row, term by term in the
+    Column's order of additions (a component the Column adds as 0.0 is
+    skipped: adding 0.0 leaves the sum unchanged)."""
+    title, description, url = title or "", description or "", url or ""
+    score = math.log1p(max(float(token_score), 0.0)) * 12.0
+
+    if ctx.total_terms:
+        score = score + matched_terms / ctx.total_terms * 25.0
+        if matched_terms == ctx.total_terms:
+            score = score + 40.0
+
+    compact_url = compact_text(url)
+    if ctx.query_phrase:
+        if ctx.query_phrase in normalize_text(title):
+            score = score + 140.0
+        if ctx.query_phrase in normalize_text(url):
+            score = score + 70.0
+        if ctx.query_phrase in normalize_text(description):
+            score = score + 25.0
+    if ctx.query_compact and ctx.query_compact in compact_url:
+        score = score + 90.0
+
+    words = ctx.query_words
+    title_hits = _word_hits(title, words)
+    url_hits = _word_hits(url, words)
+    c_hits = sum(1 for w in words if w in compact_url) if compact_url else 0
+    score = score + title_hits * 22.0
+    score = score + url_hits * 16.0
+    score = score + c_hits * 12.0
+
+    if words:
+        n = len(words)
+        if title_hits == n:
+            score = score + 80.0
+        if url_hits == n:
+            score = score + 55.0
+        if c_hits == n:
+            score = score + 45.0
+
+    return score
+
+
+def rerank_rows(candidates: list, ctx: QueryContext) -> list:
+    """``rerank`` over in-memory (title, description, url, token_score,
+    matched_terms) rows -> [(title, description, url, score)] ordered by
+    (score DESC, url ASC)."""
+    ranked = [
+        (title, description, url, intent_score(ctx, token_score, matched, title, description, url))
+        for title, description, url, token_score, matched in candidates
+    ]
+    ranked.sort(key=lambda r: (-r[3], r[2]))
+    return ranked

@@ -1,18 +1,32 @@
-"""Distributed query execution over the compressed postings index.
+"""Query execution over the compressed postings index.
 
-Plan (SURVEY.md §3.1 "Spark rebuild"):
+A pinned engine (``pin_shard_layout=True``, how ``load_engines`` opens a
+serving index) is served from driver memory. ``__init__`` collects, once:
+the posting rows (term -> per-shard ``TermPostings`` with the term's idf,
+1.0 for a term missing from term_statistics), and (title, description,
+url) per doc_id. A search then runs no Spark job:
 
-1. driver: analyze query; collect the <= |terms| idf rows (broadcast-scale).
+1. analyze the query (``search_context``);
+2. block-max WAND top-k per shard (wand.py), pure Python;
+3. merge the shards, join the document fields, order by
+   (token_score DESC, url ASC) and cut at candidate_limit;
+4. intent re-rank in Python (``intent.rerank_rows``), order by
+   (score DESC, url ASC), page.
+
+An unpinned engine plans the same steps as Spark jobs (SURVEY.md §3.1
+"Spark rebuild"):
+
+1. driver: collect the <= |terms| idf rows (broadcast-scale).
 2. scan postings WHERE term IN (...) — partition-prunes on term_bucket when
    the table is written partitioned, plus parquet min/max skipping on term.
-3. groupBy(shard) -> applyInPandas: shard-local block-max WAND top-k
-   (wand.py). Each shard emits <= candidate_limit rows (+boundary ties).
+3. groupBy(shard) -> applyInPandas: shard-local block-max WAND top-k.
+   Each shard emits <= candidate_limit rows (+boundary ties).
 4. join document metadata on the surviving <= k * n_shards rows only, then
    global TakeOrderedAndProject by (token_score DESC, url ASC).
 5. intent re-rank Columns + pagination (shared with the row-index engine).
 
-The per-shard k equals the final candidate_limit, so the global top-k is
-exact (any doc in the global top-k is in its shard's top-k).
+On both paths the per-shard k equals the final candidate_limit, so the
+global top-k is exact (any doc in the global top-k is in its shard's top-k).
 """
 
 from __future__ import annotations
@@ -26,7 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .analysis import QueryContext, search_context
-from .intent import rerank
+from .intent import rerank, rerank_rows
 from .search import SearchResponse, SearchResult
 from .wand import TermPostings, score_shard_wand
 
@@ -35,6 +49,12 @@ from .wand import TermPostings, score_shard_wand
 _INTERACTIVE_LOCK = threading.Lock()
 _INTERACTIVE_DEPTH: dict[int, int] = {}
 _INTERACTIVE_SAVED: dict[int, dict[str, str | None]] = {}
+
+# Documents a pinned engine holds in driver memory; open fails above it.
+# tracemalloc over one pinned open of the perfbench serve index (889
+# documents, 1,979 posting rows) measured ~2.9 KB per document for the
+# documents and posting structures together, so this budget is ~1.5 GB.
+MAX_SERVING_DOCUMENTS = 500_000
 
 _CANDIDATE_SCHEMA = T.StructType(
     [
@@ -106,20 +126,13 @@ class PostingsSearchEngine:
         # 16.1s < parts=16 19.4s for the 20-query set — 8 keeps the doc
         # join / top-k parallel without AQE's per-exchange round trips
         self.interactive_shuffle_partitions = 8
-        # Serving-cache layout (r04): pin the postings cache to
-        # HashPartitioning(shard, interactive_shuffle_partitions) so each
-        # query's groupBy(shard) -> WAND stage reuses the cached
-        # partitioning instead of shuffling the hit lists — one fewer
-        # stage boundary per query (~100 ms at local[32]; plan-asserted
-        # in tests/test_plans.py). Requires querying under
-        # interactive_conf (same shuffle-partition count at plan time).
-        # Materialized eagerly: serving pays the layout cost once at
-        # startup, never on the first user query.
+        # Served from driver memory: every search after this runs no
+        # Spark job (module docstring).
+        self._documents: dict | None = None
+        self._postings_by_term: dict | None = None
         if pin_shard_layout:
-            self.postings = postings.repartition(
-                self.interactive_shuffle_partitions, "shard"
-            ).cache()
-            self.postings.count()
+            self._documents = _collect_documents(documents)
+            self._postings_by_term = _collect_postings(postings, term_statistics)
         # MUST match the modulus the postings were built with, or bucket
         # pruning silently drops valid partitions (CLAUDE.md invariant 7;
         # load_engines reads it from the build's meta file). When the
@@ -132,11 +145,15 @@ class PostingsSearchEngine:
         # repeated query terms cost zero jobs (the reference's term_statistics
         # read is amortized by Postgres' buffer cache — this is our analog)
         self._idf_cache: dict[str, float | None] = {}
-        # accumulator-backed pruning telemetry from the executor-side WAND
-        # scorers; read via scan_stats() after an action
+        # pruning telemetry: accumulators for the executor-side WAND
+        # scorers, lock-guarded counters for the in-memory ones; read via
+        # scan_stats()
         sc = documents.sparkSession.sparkContext
         self._acc_decoded = sc.accumulator(0)
         self._acc_total = sc.accumulator(0)
+        self._stats_lock = threading.Lock()
+        self._blocks_decoded = 0
+        self._blocks_total = 0
 
     @contextmanager
     def interactive_conf(self):
@@ -194,10 +211,11 @@ class PostingsSearchEngine:
                             conf.set(k, v)
 
     def scan_stats(self) -> dict:
-        """Cumulative executor-side WAND telemetry: blocks decoded vs total
+        """Cumulative WAND telemetry of both paths: blocks decoded vs total
         blocks in the scanned posting lists (skipped = never deserialized)."""
-        total = self._acc_total.value
-        decoded = self._acc_decoded.value
+        with self._stats_lock:
+            total = self._acc_total.value + self._blocks_total
+            decoded = self._acc_decoded.value + self._blocks_decoded
         return {
             "blocks_decoded": decoded,
             "blocks_total": total,
@@ -274,20 +292,82 @@ class PostingsSearchEngine:
             return None
         return self._candidates(ctx)
 
+    def _ranked_in_memory(self, ctx: QueryContext) -> list:
+        by_shard: dict[int, list] = {}
+        for term in ctx.query_terms:
+            for shard, tp in self._postings_by_term.get(term, ()):
+                by_shard.setdefault(shard, []).append(tp)
+        stats: dict = {}
+        candidates = []
+        for entries in by_shard.values():
+            for doc_id, token_score, matched in score_shard_wand(
+                entries, ctx.candidate_limit, stats
+            ):
+                doc = self._documents.get(doc_id)
+                if doc is not None:
+                    candidates.append((*doc, token_score, matched))
+        with self._stats_lock:
+            self._blocks_decoded += stats.get("blocks_decoded", 0)
+            self._blocks_total += stats.get("blocks_total", 0)
+        candidates.sort(key=lambda c: (-c[3], c[2]))
+        return rerank_rows(candidates[: ctx.candidate_limit], ctx)
+
     def search(self, q: str, limit: int = 20, offset: int = 0) -> SearchResponse:
         ctx = search_context(q, limit, offset)
         if ctx is None:
             return SearchResponse(results=[], count=0)
-        with self.interactive_conf():
-            ranked_rows = rerank(self._candidates(ctx), ctx).collect()
+        if self._documents is not None:
+            ranked = self._ranked_in_memory(ctx)
+        else:
+            with self.interactive_conf():
+                ranked = rerank(self._candidates(ctx), ctx).collect()
         page = [
             SearchResult(
-                title=r["title"] or "",
-                description=r["description"] or "",
-                url=r["url"],
-                score=float(r["score"]),
+                title=title or "",
+                description=description or "",
+                url=url,
+                score=float(score),
             )
-            for r in ranked_rows[offset : offset + limit]
+            for title, description, url, score in ranked[offset : offset + limit]
         ]
-        count = max(len(ranked_rows), offset + len(page))
+        count = max(len(ranked), offset + len(page))
         return SearchResponse(results=page, count=count)
+
+
+def _collect_documents(documents: DataFrame) -> dict:
+    """doc_id -> (title, description, url), at most MAX_SERVING_DOCUMENTS."""
+    rows = (
+        documents.select("doc_id", "title", "description", "url")
+        .limit(MAX_SERVING_DOCUMENTS + 1)
+        .collect()
+    )
+    if len(rows) > MAX_SERVING_DOCUMENTS:
+        raise ValueError(
+            "a pinned search engine holds at most MAX_SERVING_DOCUMENTS = "
+            f"{MAX_SERVING_DOCUMENTS} documents in memory; this index has more"
+        )
+    return {r[0]: (r[1], r[2], r[3]) for r in rows}
+
+
+def _collect_postings(postings: DataFrame, term_statistics: DataFrame) -> dict:
+    """term -> [(shard, TermPostings)], idf 1.0 for a term missing from
+    term_statistics (as the Spark scorer)."""
+    idf = {r[0]: float(r[1]) for r in term_statistics.select("term", "idf").collect()}
+    by_term: dict[str, list] = {}
+    for r in postings.select(
+        "term", "shard", "postings", "block_max", "block_last", "block_offset"
+    ).collect():
+        by_term.setdefault(r[0], []).append(
+            (
+                r[1],
+                TermPostings(
+                    term=r[0],
+                    idf=idf.get(r[0], 1.0),
+                    blob=bytes(r[2]),
+                    block_max=list(r[3]),
+                    block_last=list(r[4]),
+                    block_offset=list(r[5]),
+                ),
+            )
+        )
+    return by_term

@@ -10,10 +10,19 @@ Scoring matches the reference exactly: contribution of term t to doc d is
 ``idf(t) * (3.2*f_title + 1.7*f_desc + 1.0*f_body)`` with idf defaulting to
 1.0 for terms missing from term_statistics (search_service.py:13-40).
 
+A doc's score sums its terms' contributions in ascending term order (an
+ordered fold, CLAUDE.md invariant 4): float addition is not associative,
+so a cursor-order sum could score two docs with the same per-term
+frequencies differently in the last bit, and split a tie that the
+candidate cut decides by url.
+
 Tie safety for rank identity: the top-k threshold prunes strictly below
 theta, and the final cut keeps every doc scoring >= the kth score — docs that
 TIE at the boundary all survive to the global (score DESC, url ASC) reduce,
-so the url tie-break is decided globally, never lost shard-side.
+so the url tie-break is decided globally, never lost shard-side. Upper bounds
+carry a relative slack of _BOUND_SLACK: a bound sums its cursors in doc
+order, a score in term order, so a tied doc's bound can round one ulp below
+theta and would otherwise be pruned.
 
 An exhaustive scorer (decode everything, accumulate) provides the oracle for
 tests and a fallback for tiny shards.
@@ -46,6 +55,8 @@ class TermPostings:
 
 
 _NEG_INF_DOC = -(1 << 63)
+# covers the rounding of a sum of a few hundred non-negative terms in any order
+_BOUND_SLACK = 1.0 + 1e-12
 
 
 class _Cursor:
@@ -57,6 +68,7 @@ class _Cursor:
     position — the main loop re-pivots if the bound was loose."""
 
     __slots__ = (
+        "term",
         "idf",
         "blob",
         "block_max",
@@ -79,6 +91,7 @@ class _Cursor:
     )
 
     def __init__(self, tp: TermPostings, stats: dict | None = None) -> None:
+        self.term = tp.term
         self.idf = tp.idf
         self.blob = tp.blob
         self.block_max = tp.block_max
@@ -86,7 +99,7 @@ class _Cursor:
         self.block_offset = tp.block_offset
         self.n = postings_count(tp.blob)
         self.n_blocks = len(tp.block_offset)
-        self.max_score = tp.idf * max(tp.block_max) if tp.block_max else 0.0
+        self.max_score = tp.idf * max(tp.block_max) * _BOUND_SLACK if tp.block_max else 0.0
         self.stats = stats
         self.exhausted = self.n == 0
         self.loaded = False
@@ -114,7 +127,7 @@ class _Cursor:
 
     def block_upper(self) -> float:
         # skip-array read only — legal on an undecoded block
-        return self.idf * self.block_max[self.bi]
+        return self.idf * self.block_max[self.bi] * _BOUND_SLACK
 
     def block_end(self) -> int:
         return self.block_last[self.bi]
@@ -163,7 +176,7 @@ def score_shard_exhaustive(entries: list) -> dict:
     from ..codec import decode_postings
 
     acc: dict = {}
-    for tp in entries:
+    for tp in sorted(entries, key=lambda tp: tp.term):
         ids, f1, f2, f4 = decode_postings(tp.blob)
         idf = tp.idf
         for j, d in enumerate(ids):
@@ -244,6 +257,7 @@ def score_shard_wand(entries: list, k: int, stats: dict | None = None) -> list:
                             moved = True
                 if moved:
                     continue
+                at_pivot.sort(key=lambda c: c.term)
                 score = 0.0
                 for c in at_pivot:
                     score += c.contribution()

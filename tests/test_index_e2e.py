@@ -32,9 +32,12 @@ def engine(index):
     return SearchEngine(docs, tokens, stats)
 
 
-@pytest.fixture(scope="module")
-def postings_engine(docs, postings3, term_stats):
-    return PostingsSearchEngine(docs, postings3, term_stats)
+@pytest.fixture(scope="module", params=[False, True], ids=["unpinned", "pinned"])
+def postings_engine(request, docs, postings3, term_stats):
+    """Both query paths: Spark jobs (unpinned) and driver memory (pinned)."""
+    return PostingsSearchEngine(
+        docs, postings3, term_stats, pin_shard_layout=request.param
+    )
 
 
 def test_documents_match_oracle(index, oracle):
@@ -116,6 +119,25 @@ def _queries(oracle):
         "zzzzqqqqxxxx",  # absent term -> empty
         f"{head_term} zzzzqqqqxxxx",  # present + absent (idf COALESCE path)
     ]
+
+
+def test_oracle_token_score_ignores_text_order(corpus):
+    """Two docs whose text holds the same words in another order get the
+    same oracle token score to the last bit, so a tie at the candidate
+    LIMIT is decided by url, as an index (which keeps no word order) can."""
+    import dataclasses
+
+    page = next(p for p in corpus if len(set(p.text.split())) > 20)
+    words = page.text.split()
+    pages = [
+        page,
+        dataclasses.replace(page, url=page.url + "-reversed", text=" ".join(reversed(words))),
+    ]
+    oracle = OracleIndex(pages, FIXED_NOW)
+    terms = list(dict.fromkeys(t for t, fld, _ in oracle.tokens[page.url] if fld == 4))
+    for i in range(0, len(terms) - 2):
+        rows = oracle.candidates(terms[i : i + 3], 10)
+        assert len(rows) == 2 and rows[0][3] == rows[1][3], terms[i : i + 3]
 
 
 def test_search_rank_identical(engine, oracle):

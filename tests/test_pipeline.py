@@ -187,6 +187,16 @@ def test_load_engines_and_search(spark, clean_build):
     stats = wand_eng.scan_stats()
     assert stats["blocks_total"] > 0
     assert 0 < stats["blocks_decoded"] <= stats["blocks_total"]
+    # a pinned engine serves from driver memory: same answer, and its
+    # driver-side WAND counts blocks too
+    _, pinned = load_engines(spark, root, interactive=True, pin_shard_layout=True)
+    c = pinned.search(title, 10)
+    assert [(r.url, round(r.score, 6)) for r in c.results] == [
+        (r.url, round(r.score, 6)) for r in b.results
+    ]
+    assert c.count == b.count
+    stats = pinned.scan_stats()
+    assert 0 < stats["blocks_decoded"] <= stats["blocks_total"]
 
 
 def test_failed_meta_write_keeps_the_old_meta(

@@ -45,8 +45,10 @@ def test_postings_scan_prunes_and_pushes(spark, built):
     plan = _formatted_plan(pe.candidates_df(" ".join(terms), 10, 0))
     assert "PartitionFilters" in plan and "term_bucket" in plan, plan
     assert "PushedFilters" in plan and "In(term" in plan, plan
-    # doc metadata joins broadcast; final cut is the distributed top-k
-    assert "BroadcastHashJoin" in plan, plan
+    # doc metadata joins broadcast, and the candidates (<= candidate_limit
+    # rows, the Arrow-stage output) — not the documents table — are the
+    # BuildLeft broadcast side; final cut is the distributed top-k
+    assert "BroadcastHashJoin Inner BuildLeft" in plan, plan
     assert "TakeOrderedAndProject" in plan, plan
     # column pruning: the scan must not read the full doc row
     assert "ReadSchema: struct<term:string,shard:int" in plan, plan
@@ -73,41 +75,3 @@ def test_search_topk_is_distributed_topk(spark):
 
     plan = _formatted_plan(q_search_topk(spark, "/root/testdata/sf0.001"))
     assert "TakeOrderedAndProject" in plan, plan
-
-
-def test_pinned_shard_layout_serves_without_exchange(spark):
-    """Serving-cache layout (r04): with pin_shard_layout the per-query
-    groupBy(shard) -> WAND stage must reuse the cached
-    HashPartitioning(shard, interactive_shuffle_partitions) instead of
-    re-shuffling the hit lists, and the tiny Arrow-stage candidate set —
-    not the documents table — must be the broadcast side of the metadata
-    join (at 10^12 docs a shuffle there moves the documents table once
-    per query)."""
-    from search_engine_spark.operators.documents import build_documents
-    from search_engine_spark.operators.postings import build_postings
-    from search_engine_spark.operators.term_stats import build_term_statistics
-    from search_engine_spark.operators.tokens import build_tokens
-    from search_engine_spark.query.postings_search import PostingsSearchEngine
-
-    pages = pages_dataframe(spark, generate_pages(300, seed=42))
-    docs = build_documents(pages, FIXED_NOW)
-    tokens = build_tokens(docs)
-    stats = build_term_statistics(tokens, docs)
-    postings = build_postings(tokens, n_shards=1)
-    engine = PostingsSearchEngine(
-        docs, postings, stats, interactive=True, pin_shard_layout=True
-    )
-    terms = [
-        r["term"]
-        for r in stats.orderBy(F.desc("doc_frequency")).limit(2).collect()
-    ]
-    with engine.interactive_conf():
-        plan = _formatted_plan(engine.candidates_df(" ".join(terms), 10, 0))
-    assert "FlatMapGroupsInPandas" in plan, plan
-    # cached shard layout feeds the WAND stage directly: no shard
-    # re-shuffle anywhere in the serving plan
-    assert "InMemoryTableScan" in plan, plan
-    assert "Exchange hashpartitioning(shard" not in plan, plan
-    # candidates (<= candidate_limit rows, the Arrow-stage output) are
-    # the BuildLeft broadcast side of the metadata join
-    assert "BroadcastHashJoin Inner BuildLeft" in plan, plan

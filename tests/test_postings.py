@@ -85,35 +85,107 @@ def test_ctf_matches_tokens(built):
     assert got == want
 
 
+def _top_terms(term_stats, n):
+    return [
+        r["term"]
+        for r in term_stats.orderBy(F.desc("doc_frequency"), "term").limit(n).collect()
+    ]
+
+
 def test_search_results_invariant_under_shard_count(spark, docs, tokens, term_stats, postings3):
     """Doc-range sharding is pure layout: top-k results (urls AND scores)
     must be identical whether the index is built as one shard or five —
     the distributed-correctness property that makes the per-shard WAND +
-    global top-k reduce exact."""
-    from pyspark.sql import functions as F
-
-    from search_engine_spark.operators.postings import build_postings
+    global top-k reduce exact. Pinned engines (served from driver memory)
+    return the same pages as the unpinned (Spark) ones."""
     from search_engine_spark.query.postings_search import PostingsSearchEngine
 
     p1 = build_postings(tokens, n_shards=1).cache()
     p5 = build_postings(tokens, n_shards=5).cache()
     p1.count(), p5.count()
-    e1 = PostingsSearchEngine(docs, p1, term_stats)
-    e3 = PostingsSearchEngine(docs, postings3, term_stats)
-    e5 = PostingsSearchEngine(docs, p5, term_stats)
-
-    top = [
-        r["term"]
-        for r in term_stats.orderBy(F.desc("doc_frequency"), "term").limit(5).collect()
+    layouts = (p1, postings3, p5)
+    unpinned = [PostingsSearchEngine(docs, p, term_stats) for p in layouts]
+    pinned = [
+        PostingsSearchEngine(docs, p, term_stats, pin_shard_layout=True) for p in layouts
     ]
+
+    top = _top_terms(term_stats, 5)
     queries = [top[0], f"{top[1]} {top[2]}", f"{top[0]} {top[3]} {top[4]}"]
     for q in queries:
         results = [
-            [(x.url, round(x.score, 6)) for x in eng.search(q, 20, 0).results]
-            for eng in (e1, e3, e5)
+            ([(x.url, round(x.score, 6)) for x in resp.results], resp.count)
+            for resp in (eng.search(q, 20, 0) for eng in unpinned + pinned)
         ]
-        assert results[0] == results[1] == results[2], f"shard-variant results for {q!r}"
+        assert all(r == results[0] for r in results), f"shard-variant results for {q!r}"
     p1.unpersist(), p5.unpersist()
+
+
+@pytest.fixture(scope="module")
+def pinned_engine(docs, postings3, term_stats):
+    from search_engine_spark.query.postings_search import PostingsSearchEngine
+
+    # opened as load_engines opens a serving index
+    return PostingsSearchEngine(
+        docs, postings3, term_stats, interactive=True, pin_shard_layout=True
+    )
+
+
+def test_pinned_web_search_runs_no_spark_job(spark, pinned_engine, term_stats):
+    from search_engine_spark.api import SearchAPI
+
+    api = SearchAPI(pinned_engine)
+    q = " ".join(_top_terms(term_stats, 2))
+    want = api.web_search(q, 10, 0)  # warm
+    assert want["count"] > 0
+    sc = spark.sparkContext
+    group = "pinned-web-search-probe"
+    sc.setJobGroup(group, "a pinned search must not run a Spark job")
+    try:
+        assert api.web_search(q, 10, 0) == want
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+def test_pinned_concurrent_searches_match_serial(spark, pinned_engine, term_stats):
+    """Two clients searching one pinned engine at once get their serial
+    answers, and the session's serving configs never change meanwhile."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    top = _top_terms(term_stats, 6)
+    queries = [
+        (top[0], 20, 0),
+        (f"{top[1]} {top[2]}", 5, 5),
+        (f"{top[0]} {top[3]} {top[4]}", 10, 0),
+        (top[5], 20, 40),
+    ]
+    serial = {q: pinned_engine.search(*q) for q in queries}
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    conf_before = tuple(spark.conf.get(k, None) for k in keys)
+
+    def client(order):
+        return [(q, pinned_engine.search(*q)) for _ in range(20) for q in order]
+
+    seen_conf = set()
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        futures = [pool.submit(client, queries), pool.submit(client, queries[::-1])]
+        while True:
+            seen_conf.add(tuple(spark.conf.get(k, None) for k in keys))
+            if all(f.done() for f in futures):
+                break
+        answers = [a for f in futures for a in f.result()]
+    assert len(answers) == 2 * 20 * len(queries)
+    for q, resp in answers:
+        assert resp == serial[q], q
+    assert seen_conf == {conf_before}
+
+
+def test_pinned_open_rejects_documents_over_budget(docs, postings3, term_stats, monkeypatch):
+    from search_engine_spark.query import postings_search as PS
+
+    monkeypatch.setattr(PS, "MAX_SERVING_DOCUMENTS", 3)
+    with pytest.raises(ValueError, match="MAX_SERVING_DOCUMENTS = 3"):
+        PS.PostingsSearchEngine(docs, postings3, term_stats, pin_shard_layout=True)
 
 
 def test_interactive_conf_overlapping_scopes_restore_original(

@@ -175,3 +175,22 @@ def test_property_random_seeds(seed):
     entries = _random_case(rng, n_terms, rng.randint(1, 600), rng.uniform(0.05, 0.8))
     if entries:
         _check(entries, rng.choice([1, 3, 10, 100]))
+
+
+def test_score_is_an_ordered_fold_over_terms():
+    """A doc's score sums its terms in term order, whatever order the
+    posting rows arrive in: docs with the same per-term frequencies score
+    the same to the last bit (0.1 + 0.2 + 0.3 depends on the order), and
+    all 100 of them tie at the kth score, so all survive — even when the
+    bound, summed in another order, rounds below the score."""
+    postings = {d: (0, 0, 1) for d in range(0, 300, 3)}
+    entries = [_make_tp(t, idf, postings) for t, idf in (("a", 0.1), ("b", 0.2), ("c", 0.3))]
+    results = []
+    for order in ([0, 1, 2], [2, 1, 0], [1, 2, 0], [0, 2, 1]):
+        got = score_shard_wand([entries[i] for i in order], 10)
+        results.append(sorted(got))
+        assert len(got) == 100
+        assert len({s for _, s, _ in got}) == 1
+        exhaustive = score_shard_exhaustive([entries[i] for i in order])
+        assert {s for s, _ in exhaustive.values()} == {s for _, s, _ in got}
+    assert all(r == results[0] for r in results)
