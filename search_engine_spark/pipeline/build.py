@@ -246,10 +246,12 @@ def load_engines(
     """Convenience: open the built tables and return both search engines.
 
     A long-lived query service passes ``pin_shard_layout=True``: the
-    postings engine collects the posting rows, idf and the document fields
+    postings engine collects the posting lists, idf and the document fields
     into driver memory once at open (at most
-    ``postings_search.MAX_SERVING_DOCUMENTS`` documents) and then serves
-    every search from memory, with no Spark job. ``interactive=True``
+    ``postings_search.MAX_SERVING_DOCUMENTS`` documents), decodes them into
+    per-term arrays of document ordinals and baked score contributions, and
+    precomputes what the intent re-rank reads of each document. It then
+    serves every search from those arrays, with no Spark job. ``interactive=True``
     scopes the serving configs around the Spark search actions of an
     unpinned engine. Batch/one-shot callers keep the defaults: nothing is
     collected, each search runs partition-pruned parquet scans.

@@ -15,16 +15,17 @@ Hit counting tokenizes the target with the same regex as the reference
 (``TOKEN_RE.findall(lower(text))`` -> set membership), expressed as
 ``array_contains(regexp_extract_all(lower(col), '[a-z0-9]{2,}'), word)``.
 
-``intent_score`` / ``rerank_rows`` are the same score in plain Python, for
-an engine that holds its candidates in driver memory: the same components,
-added in the same order (an ordered fold, CLAUDE.md invariant 4), over the
-same token runs and normalize/compact rules.
+``intent_score_fields`` is the same score in plain Python, for an engine
+that holds its documents in driver memory: the same components, added in the
+same order (an ordered fold, CLAUDE.md invariant 4), over the same token runs
+and normalize/compact rules. What it reads of a document is computed once by
+``doc_fields``; ``intent_score`` scores one raw row through both.
 """
 
 from __future__ import annotations
 
 import math
-import re
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -34,7 +35,6 @@ from .analysis import QueryContext, compact_text, normalize_text
 # On lowercased text the reference token regex \b[a-zA-Z0-9]{2,}\b reduces to
 # maximal alnum runs of length >= 2.
 _TOKEN_RUN = r"[a-z0-9]{2,}"
-_TOKEN_RUN_RE = re.compile(_TOKEN_RUN)
 
 
 def _normalize(col: F.Column) -> F.Column:
@@ -121,24 +121,39 @@ def rerank(candidates: DataFrame, ctx: QueryContext) -> DataFrame:
     )
 
 
-def _word_hits(text: str, words: tuple[str, ...]) -> int:
-    """Python twin of ``_hits``."""
-    token_set = set(_TOKEN_RUN_RE.findall(text.lower()))
-    return sum(1 for w in words if w in token_set)
+class DocFields(NamedTuple):
+    """What the intent score reads of one document, computed once.
+
+    A token set is held as the normalized text with a space at each end:
+    normalizing leaves a text's maximal ``[a-z0-9]`` runs joined by single
+    spaces, so a query word (always ``[a-z0-9]{2,}``) is one of the text's
+    ``_hits`` tokens iff ``" word "`` occurs in it, and a phrase occurs in
+    it iff it occurs in the normalized text. Two frozensets per document
+    would hold ~1.8 KB more per document on the serve corpus, more than the
+    document fields and these forms together."""
+
+    title: str
+    url: str
+    description: str
+    compact_url: str
 
 
-def intent_score(
-    ctx: QueryContext,
-    token_score: float,
-    matched_terms: int,
-    title: str | None,
-    description: str | None,
-    url: str | None,
+def doc_fields(title: str | None, description: str | None, url: str | None) -> DocFields:
+    """The normalized and compacted forms of one document."""
+    return DocFields(
+        title=f" {normalize_text(title)} ",
+        url=f" {normalize_text(url)} ",
+        description=normalize_text(description),
+        compact_url=compact_text(url),
+    )
+
+
+def intent_score_fields(
+    ctx: QueryContext, token_score: float, matched_terms: int, doc: DocFields
 ) -> float:
-    """``intent_score_col`` for one candidate row, term by term in the
-    Column's order of additions (a component the Column adds as 0.0 is
-    skipped: adding 0.0 leaves the sum unchanged)."""
-    title, description, url = title or "", description or "", url or ""
+    """``intent_score_col`` for one candidate, term by term in the Column's
+    order of additions (a component the Column adds as 0.0 is skipped:
+    adding 0.0 leaves the sum unchanged)."""
     score = math.log1p(max(float(token_score), 0.0)) * 12.0
 
     if ctx.total_terms:
@@ -146,20 +161,21 @@ def intent_score(
         if matched_terms == ctx.total_terms:
             score = score + 40.0
 
-    compact_url = compact_text(url)
     if ctx.query_phrase:
-        if ctx.query_phrase in normalize_text(title):
+        if ctx.query_phrase in doc.title:
             score = score + 140.0
-        if ctx.query_phrase in normalize_text(url):
+        if ctx.query_phrase in doc.url:
             score = score + 70.0
-        if ctx.query_phrase in normalize_text(description):
+        if ctx.query_phrase in doc.description:
             score = score + 25.0
+    compact_url = doc.compact_url
     if ctx.query_compact and ctx.query_compact in compact_url:
         score = score + 90.0
 
     words = ctx.query_words
-    title_hits = _word_hits(title, words)
-    url_hits = _word_hits(url, words)
+    tokens = [f" {w} " for w in words]
+    title_hits = sum(1 for t in tokens if t in doc.title)
+    url_hits = sum(1 for t in tokens if t in doc.url)
     c_hits = sum(1 for w in words if w in compact_url) if compact_url else 0
     score = score + title_hits * 22.0
     score = score + url_hits * 16.0
@@ -177,13 +193,13 @@ def intent_score(
     return score
 
 
-def rerank_rows(candidates: list, ctx: QueryContext) -> list:
-    """``rerank`` over in-memory (title, description, url, token_score,
-    matched_terms) rows -> [(title, description, url, score)] ordered by
-    (score DESC, url ASC)."""
-    ranked = [
-        (title, description, url, intent_score(ctx, token_score, matched, title, description, url))
-        for title, description, url, token_score, matched in candidates
-    ]
-    ranked.sort(key=lambda r: (-r[3], r[2]))
-    return ranked
+def intent_score(
+    ctx: QueryContext,
+    token_score: float,
+    matched_terms: int,
+    title: str | None,
+    description: str | None,
+    url: str | None,
+) -> float:
+    """``intent_score_fields`` over one raw candidate row."""
+    return intent_score_fields(ctx, token_score, matched_terms, doc_fields(title, description, url))

@@ -1,17 +1,30 @@
 """Query execution over the compressed postings index.
 
 A pinned engine (``pin_shard_layout=True``, how ``load_engines`` opens a
-serving index) is served from driver memory. ``__init__`` collects, once:
-the posting rows (term -> per-shard ``TermPostings`` with the term's idf,
-1.0 for a term missing from term_statistics), and (title, description,
-url) per doc_id. A search then runs no Spark job:
+serving index) is served from driver memory. ``__init__`` builds, once:
+
+- each document's dense ordinal: its rank in url order, so comparing
+  ordinals is comparing urls;
+- per term, the ordinals of its postings and each posting's baked
+  contribution ``idf * weighted_tf`` (idf 1.0 for a term missing from
+  term_statistics), the blobs decoded in a few vectorized passes
+  (``codec.decode_postings_batch``); a posting whose doc is missing from
+  documents is dropped;
+- per ordinal, the document's (title, description, url) and the fields the
+  intent re-rank reads (``intent.doc_fields``).
+
+A search then runs no Spark job, and its array work releases the GIL to
+concurrent searches:
 
 1. analyze the query (``search_context``);
-2. block-max WAND top-k per shard (wand.py), pure Python;
-3. merge the shards, join the document fields, order by
-   (token_score DESC, url ASC) and cut at candidate_limit;
-4. intent re-rank in Python (``intent.rerank_rows``), order by
-   (score DESC, url ASC), page.
+2. fold each query term's contributions into a per-request score vector,
+   in ascending term order (the ordered fold of CLAUDE.md invariant 4, the
+   same as WAND's, so scores match it to the bit), counting matched terms
+   beside it;
+3. order the matched documents by (token_score DESC, ordinal) and cut at
+   candidate_limit;
+4. intent re-rank in Python (``intent.intent_score_fields``), order by
+   (score DESC, ordinal), page.
 
 An unpinned engine plans the same steps as Spark jobs (SURVEY.md §3.1
 "Spark rebuild"):
@@ -25,22 +38,26 @@ An unpinned engine plans the same steps as Spark jobs (SURVEY.md §3.1
    global TakeOrderedAndProject by (token_score DESC, url ASC).
 5. intent re-rank Columns + pagination (shared with the row-index engine).
 
-On both paths the per-shard k equals the final candidate_limit, so the
-global top-k is exact (any doc in the global top-k is in its shard's top-k).
+The per-shard k equals the final candidate_limit, so the global top-k is
+exact (any doc in the global top-k is in its shard's top-k).
 """
 
 from __future__ import annotations
 
+import itertools
 import threading
 from contextlib import contextmanager
 
+import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..codec import BLOCK_SIZE, W_BODY, W_DESC, W_TITLE, decode_postings_batch
 from .analysis import QueryContext, search_context
-from .intent import rerank, rerank_rows
+from .intent import doc_fields, intent_score_fields, rerank
 from .search import SearchResponse, SearchResult
 from .wand import TermPostings, score_shard_wand
 
@@ -52,9 +69,14 @@ _INTERACTIVE_SAVED: dict[int, dict[str, str | None]] = {}
 
 # Documents a pinned engine holds in driver memory; open fails above it.
 # tracemalloc over one pinned open of the perfbench serve index (889
-# documents, 1,979 posting rows) measured ~2.9 KB per document for the
-# documents and posting structures together, so this budget is ~1.5 GB.
+# documents, 1,979 posting rows, 73,767 postings) measured ~2.3 KB held per
+# document: the document fields and their precomputed re-rank forms
+# ~0.85 KB, the posting arrays (12 B per posting) ~1.0 KB, the per-term
+# offsets and term strings ~0.45 KB. So this budget is ~1.2 GB.
 MAX_SERVING_DOCUMENTS = 500_000
+# blob bytes the open decodes per NumPy pass: the decode's temporaries take
+# ~18 B per blob byte, so this bounds them at ~300 MB whatever the index size
+_DECODE_BATCH_BYTES = 16 << 20
 
 _CANDIDATE_SCHEMA = T.StructType(
     [
@@ -128,11 +150,9 @@ class PostingsSearchEngine:
         self.interactive_shuffle_partitions = 8
         # Served from driver memory: every search after this runs no
         # Spark job (module docstring).
-        self._documents: dict | None = None
-        self._postings_by_term: dict | None = None
+        self._pinned: _PinnedIndex | None = None
         if pin_shard_layout:
-            self._documents = _collect_documents(documents)
-            self._postings_by_term = _collect_postings(postings, term_statistics)
+            self._pinned = _PinnedIndex(documents, postings, term_statistics)
         # MUST match the modulus the postings were built with, or bucket
         # pruning silently drops valid partitions (CLAUDE.md invariant 7;
         # load_engines reads it from the build's meta file). When the
@@ -145,9 +165,8 @@ class PostingsSearchEngine:
         # repeated query terms cost zero jobs (the reference's term_statistics
         # read is amortized by Postgres' buffer cache — this is our analog)
         self._idf_cache: dict[str, float | None] = {}
-        # pruning telemetry: accumulators for the executor-side WAND
-        # scorers, lock-guarded counters for the in-memory ones; read via
-        # scan_stats()
+        # block telemetry: accumulators for the executor-side WAND scorers,
+        # lock-guarded counters for the pinned path; read via scan_stats()
         sc = documents.sparkSession.sparkContext
         self._acc_decoded = sc.accumulator(0)
         self._acc_total = sc.accumulator(0)
@@ -211,8 +230,10 @@ class PostingsSearchEngine:
                             conf.set(k, v)
 
     def scan_stats(self) -> dict:
-        """Cumulative WAND telemetry of both paths: blocks decoded vs total
-        blocks in the scanned posting lists (skipped = never deserialized)."""
+        """Cumulative block telemetry of both paths: blocks decoded vs total
+        blocks in the scanned posting lists. WAND never deserializes a
+        skipped block; the pinned path reads every block of the query
+        terms' rows (decoded at open), so it counts each as both."""
         with self._stats_lock:
             total = self._acc_total.value + self._blocks_total
             decoded = self._acc_decoded.value + self._blocks_decoded
@@ -293,30 +314,35 @@ class PostingsSearchEngine:
         return self._candidates(ctx)
 
     def _ranked_in_memory(self, ctx: QueryContext) -> list:
-        by_shard: dict[int, list] = {}
-        for term in ctx.query_terms:
-            for shard, tp in self._postings_by_term.get(term, ()):
-                by_shard.setdefault(shard, []).append(tp)
-        stats: dict = {}
-        candidates = []
-        for entries in by_shard.values():
-            for doc_id, token_score, matched in score_shard_wand(
-                entries, ctx.candidate_limit, stats
-            ):
-                doc = self._documents.get(doc_id)
-                if doc is not None:
-                    candidates.append((*doc, token_score, matched))
+        index = self._pinned
+        score = np.zeros(len(index.docs))
+        matched = np.zeros(len(index.docs), dtype=np.int32)
+        blocks = 0
+        for term in sorted(ctx.query_terms):
+            postings = index.by_term.get(term)
+            if postings is not None:
+                lo, hi, n_blocks = postings
+                ords = index.ords[lo:hi]
+                score[ords] += index.contrib[lo:hi]
+                matched[ords] += 1
+                blocks += n_blocks
         with self._stats_lock:
-            self._blocks_decoded += stats.get("blocks_decoded", 0)
-            self._blocks_total += stats.get("blocks_total", 0)
-        candidates.sort(key=lambda c: (-c[3], c[2]))
-        return rerank_rows(candidates[: ctx.candidate_limit], ctx)
+            self._blocks_decoded += blocks
+            self._blocks_total += blocks
+        hits = np.flatnonzero(matched)
+        top = hits[np.lexsort((hits, -score[hits]))[: ctx.candidate_limit]]
+        ranked = [
+            (intent_score_fields(ctx, s, m, index.fields[o]), o)
+            for o, s, m in zip(top.tolist(), score[top].tolist(), matched[top].tolist())
+        ]
+        ranked.sort(key=lambda r: (-r[0], r[1]))
+        return [(*index.docs[o], s) for s, o in ranked]
 
     def search(self, q: str, limit: int = 20, offset: int = 0) -> SearchResponse:
         ctx = search_context(q, limit, offset)
         if ctx is None:
             return SearchResponse(results=[], count=0)
-        if self._documents is not None:
+        if self._pinned is not None:
             ranked = self._ranked_in_memory(ctx)
         else:
             with self.interactive_conf():
@@ -334,40 +360,76 @@ class PostingsSearchEngine:
         return SearchResponse(results=page, count=count)
 
 
-def _collect_documents(documents: DataFrame) -> dict:
-    """doc_id -> (title, description, url), at most MAX_SERVING_DOCUMENTS."""
-    rows = (
-        documents.select("doc_id", "title", "description", "url")
-        .limit(MAX_SERVING_DOCUMENTS + 1)
-        .collect()
-    )
-    if len(rows) > MAX_SERVING_DOCUMENTS:
-        raise ValueError(
-            "a pinned search engine holds at most MAX_SERVING_DOCUMENTS = "
-            f"{MAX_SERVING_DOCUMENTS} documents in memory; this index has more"
+class _PinnedIndex:
+    """A serving index in driver memory, indexed by dense ordinal (a
+    document's rank in url order). ``by_term`` maps a term to (lo, hi,
+    blocks): its postings are ``ords[lo:hi]`` (their documents) and
+    ``contrib[lo:hi]`` (each one's ``idf * weighted_tf``), and its rows
+    hold ``blocks`` codec blocks."""
+
+    def __init__(
+        self, documents: DataFrame, postings: DataFrame, term_statistics: DataFrame
+    ) -> None:
+        docs = (
+            documents.select("doc_id", "title", "description", "url")
+            .limit(MAX_SERVING_DOCUMENTS + 1)
+            .toArrow()
         )
-    return {r[0]: (r[1], r[2], r[3]) for r in rows}
-
-
-def _collect_postings(postings: DataFrame, term_statistics: DataFrame) -> dict:
-    """term -> [(shard, TermPostings)], idf 1.0 for a term missing from
-    term_statistics (as the Spark scorer)."""
-    idf = {r[0]: float(r[1]) for r in term_statistics.select("term", "idf").collect()}
-    by_term: dict[str, list] = {}
-    for r in postings.select(
-        "term", "shard", "postings", "block_max", "block_last", "block_offset"
-    ).collect():
-        by_term.setdefault(r[0], []).append(
-            (
-                r[1],
-                TermPostings(
-                    term=r[0],
-                    idf=idf.get(r[0], 1.0),
-                    blob=bytes(r[2]),
-                    block_max=list(r[3]),
-                    block_last=list(r[4]),
-                    block_offset=list(r[5]),
-                ),
+        if docs.num_rows > MAX_SERVING_DOCUMENTS:
+            raise ValueError(
+                "a pinned search engine holds at most MAX_SERVING_DOCUMENTS = "
+                f"{MAX_SERVING_DOCUMENTS} documents in memory; this index has more"
             )
+        docs = docs.sort_by([("url", "ascending"), ("doc_id", "ascending")])
+        self.docs = list(
+            zip(*(docs.column(c).to_pylist() for c in ("title", "description", "url")))
         )
-    return by_term
+        self.fields = [doc_fields(*d) for d in self.docs]
+        ordinal_ids = docs.column("doc_id").to_numpy()
+
+        stats = term_statistics.select("term", "idf").toArrow()
+        idf = dict(zip(stats.column("term").to_pylist(), stats.column("idf").to_pylist()))
+        lists = (
+            postings.select("term", "shard", "postings")
+            .toArrow()
+            .sort_by([("term", "ascending"), ("shard", "ascending")])
+        )
+        terms = lists.column("term").to_pylist()
+        row_idf = np.array([idf.get(t, 1.0) for t in terms], dtype=np.float64)
+        blobs = lists.column("postings")
+        sizes = pc.binary_length(blobs).to_numpy(zero_copy_only=False)
+        by_id = np.argsort(ordinal_ids)
+        sorted_ids = ordinal_ids[by_id]
+        ords, contrib = [np.empty(0, np.int32)], [np.empty(0)]
+        kept, blocks = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+        for a, b in _row_batches(sizes, _DECODE_BATCH_BYTES):
+            counts, doc_ids, f1, f2, f4 = decode_postings_batch(blobs[a:b].to_pylist())
+            # doc_id -> ordinal; a doc_id past every document's id lands at
+            # searchsorted's end and is dropped with the other orphans
+            pos = np.searchsorted(sorted_ids, doc_ids)
+            found = pos < sorted_ids.size
+            found[found] = sorted_ids[pos[found]] == doc_ids[found]
+            weighted = W_TITLE * f1[found] + W_DESC * f2[found] + W_BODY * f4[found]
+            row = np.repeat(np.arange(b - a), counts)[found]
+            ords.append(by_id[pos[found]].astype(np.int32))
+            contrib.append(row_idf[a:b][row] * weighted)
+            kept.append(np.bincount(row, minlength=b - a))
+            blocks.append(-(-counts // BLOCK_SIZE))
+        self.ords = np.concatenate(ords)
+        self.contrib = np.concatenate(contrib)
+        start = np.concatenate(([0], np.cumsum(np.concatenate(kept))))  # each row's postings
+        blocks = np.concatenate(blocks)
+        self.by_term: dict[str, tuple] = {}
+        for term, group in itertools.groupby(range(len(terms)), key=terms.__getitem__):
+            group = list(group)
+            lo, hi = start[group[0]], start[group[-1] + 1]
+            self.by_term[term] = (int(lo), int(hi), int(blocks[group].sum()))
+
+
+def _row_batches(sizes: np.ndarray, batch_bytes: int) -> list[tuple[int, int]]:
+    """Consecutive row ranges [a, b), each holding at most ``batch_bytes``
+    blob bytes past its first row."""
+    ends = np.cumsum(sizes)
+    cuts = np.searchsorted(ends, np.arange(batch_bytes, sizes.sum(), batch_bytes), side="right")
+    edges = np.unique(np.concatenate(([0], cuts, [sizes.size]))).tolist()
+    return list(zip(edges[:-1], edges[1:]))

@@ -11,6 +11,7 @@ from search_engine_spark.codec import (
     block_length,
     decode_block,
     decode_postings,
+    decode_postings_batch,
     encode_postings,
     postings_count,
     weighted_tf,
@@ -64,6 +65,61 @@ def test_extreme_doc_ids():
     blob, _, blast, _ = encode_postings(ids, one, one, one)
     assert decode_postings(blob)[0] == ids
     assert blast == [2**63 - 1]
+
+
+_INT64_MIN, _INT64_MAX = -(2**63), 2**63 - 1
+
+
+@st.composite
+def _posting_blob(draw):
+    """One encoded list: 0-257 postings across block boundaries, the int64
+    extremes (10-byte varints) when drawn, zero frequencies among others."""
+    n = draw(st.sampled_from([0, 1, 127, 128, 129, 257]))
+    rng = random.Random(draw(st.integers(min_value=0, max_value=2**32)))
+    ids = set(draw(st.sets(st.sampled_from([_INT64_MIN, _INT64_MAX]))))
+    while len(ids) < n:
+        ids.add(rng.randint(_INT64_MIN, _INT64_MAX))
+    doc_ids = sorted(ids)[:n]
+    f = lambda: [rng.choice([0, 0, 1, 127, 128, 5000, 2**35]) for _ in doc_ids]  # noqa: E731
+    return encode_postings(doc_ids, f(), f(), f())[0]
+
+
+def _decode_each(blobs):
+    counts, columns = [], ([], [], [], [])
+    for blob in blobs:
+        decoded = decode_postings(blob)
+        counts.append(len(decoded[0]))
+        for col, part in zip(columns, decoded):
+            col.extend(part)
+    return counts, columns
+
+
+@given(st.lists(_posting_blob(), max_size=6))
+@settings(max_examples=60, deadline=None)
+def test_batch_decode_equals_decode_postings(blobs):
+    """Concatenated blobs, each with its own count header and block
+    restarts, decode in one pass to what decode_postings gives per blob."""
+    counts, columns = _decode_each(blobs)
+    got_counts, *got = decode_postings_batch(blobs)
+    assert got_counts.tolist() == counts
+    assert [a.tolist() for a in got] == list(columns)
+
+
+def test_batch_decode_sizes_and_extremes():
+    rng = random.Random(7)
+    blobs = []
+    for n in (0, 1, 127, 128, 129, 257):
+        ids = {_INT64_MIN, _INT64_MAX} if n > 1 else {_INT64_MAX} if n else set()
+        while len(ids) < n:
+            ids.add(rng.randint(_INT64_MIN, _INT64_MAX))
+        ids = sorted(ids)
+        zeros = [0] * n
+        blobs.append(encode_postings(ids, zeros, [1] * n, zeros)[0])
+    counts, columns = _decode_each(blobs)
+    got_counts, *got = decode_postings_batch(blobs)
+    assert got_counts.tolist() == [0, 1, 127, 128, 129, 257] == counts
+    assert [a.tolist() for a in got] == list(columns)
+    assert _INT64_MIN in columns[0] and _INT64_MAX in columns[0]
 
 
 def test_compression_is_real():

@@ -1,10 +1,15 @@
 """The intent re-rank in Python (in-memory serving) equals the Column
 expression (Spark serving) on the same candidate rows."""
 
-import pytest
+import math
+import re
 
-from search_engine_spark.query.analysis import search_context
-from search_engine_spark.query.intent import intent_score, intent_score_col, rerank_rows
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
+from search_engine_spark.query.analysis import compact_text, normalize_text, search_context
+from search_engine_spark.query.intent import doc_fields, intent_score_col, intent_score_fields
 
 ROWS = [
     # (token_score, matched_terms, title, description, url)
@@ -28,17 +33,69 @@ def test_python_intent_score_equals_column(spark, q):
         r["score"]
         for r in df.withColumn("score", intent_score_col(ctx)).select("score").collect()
     ]
-    want = [intent_score(ctx, s, m, t, d, u) for s, m, t, d, u in ROWS]
-    assert got == pytest.approx(want, rel=1e-9, abs=1e-9)
+    precomputed = [intent_score_fields(ctx, s, m, doc_fields(t, d, u)) for s, m, t, d, u in ROWS]
+    assert got == pytest.approx(precomputed, rel=1e-9, abs=1e-9)
 
 
-def test_rerank_rows_orders_by_score_then_url():
-    ctx = search_context("spark table", 20, 0)
-    rows = [(t, d, u, s, m) for s, m, t, d, u in ROWS]
-    rows.append((None, None, "https://example.com/0", 3.5, 2))  # ties ROWS[0]
-    ranked = rerank_rows(rows, ctx)
-    assert [r[3] for r in ranked] == sorted((r[3] for r in ranked), reverse=True)
-    urls = [r[2] for r in ranked]
-    i = urls.index("https://example.com/0")
-    assert urls[i + 1] == "https://example.com/a"
-    assert ranked[i][3] == ranked[i + 1][3]
+def _set_based_intent_score(ctx, token_score, matched_terms, title, description, url):
+    """The intent score with token sets built per row by the Column's
+    ``[a-z0-9]{2,}`` runs: the reference for the padded-text fields."""
+    title, description, url = title or "", description or "", url or ""
+    score = math.log1p(max(float(token_score), 0.0)) * 12.0
+    if ctx.total_terms:
+        score = score + matched_terms / ctx.total_terms * 25.0
+        if matched_terms == ctx.total_terms:
+            score = score + 40.0
+    compact_url = compact_text(url)
+    if ctx.query_phrase:
+        for text, bonus in ((title, 140.0), (url, 70.0), (description, 25.0)):
+            if ctx.query_phrase in normalize_text(text):
+                score = score + bonus
+    if ctx.query_compact and ctx.query_compact in compact_url:
+        score = score + 90.0
+    words = ctx.query_words
+    title_hits = sum(1 for w in words if w in set(re.findall("[a-z0-9]{2,}", title.lower())))
+    url_hits = sum(1 for w in words if w in set(re.findall("[a-z0-9]{2,}", url.lower())))
+    c_hits = sum(1 for w in words if w in compact_url) if compact_url else 0
+    score = score + title_hits * 22.0
+    score = score + url_hits * 16.0
+    score = score + c_hits * 12.0
+    if words:
+        n = len(words)
+        for hits, bonus in ((title_hits, 80.0), (url_hits, 55.0), (c_hits, 45.0)):
+            if hits == n:
+                score = score + bonus
+    return score
+
+
+# pieces that are, contain or straddle the query words, joined by
+# separators that normalize to a space, to nothing or to a non-ASCII letter
+_PIECES = ["ab", "aab", "ab1", "ba", "a", "1", "AB", "Éab", "ab\u212a", "_ab", "abab"]
+_SEPS = [" ", "-", "/", "?", "=", "", "İ", ".", "é"]
+_TEXT = st.one_of(
+    st.none(),
+    st.lists(st.tuples(st.sampled_from(_PIECES), st.sampled_from(_SEPS)), max_size=6).map(
+        lambda parts: "".join(p + s for p, s in parts)
+    ),
+)
+
+
+@given(
+    q=st.lists(st.sampled_from(["ab", "ba", "aab", "ab1", "abab", "the"]), min_size=1, max_size=3).map(
+        " ".join
+    ),
+    token_score=st.floats(min_value=-5, max_value=50),
+    matched=st.integers(min_value=0, max_value=3),
+    title=_TEXT,
+    description=_TEXT,
+    url=_TEXT,
+)
+@settings(max_examples=300, deadline=None)
+def test_precomputed_fields_equal_set_based_score(q, token_score, matched, title, description, url):
+    """Phrase and token hits read off the padded normalized text equal the
+    per-row token sets, whatever the punctuation, case or non-ASCII text."""
+    ctx = search_context(q, 20, 0)
+    if ctx is None:
+        return
+    got = intent_score_fields(ctx, token_score, matched, doc_fields(title, description, url))
+    assert got == _set_based_intent_score(ctx, token_score, matched, title, description, url)

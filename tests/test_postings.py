@@ -180,6 +180,153 @@ def test_pinned_concurrent_searches_match_serial(spark, pinned_engine, term_stat
     assert seen_conf == {conf_before}
 
 
+def _wand_search(postings_rows, docs_by_id, idf, q, limit, offset):
+    """The pinned search as block-max WAND per shard plus the raw-row intent
+    score: the reference the array scorer must equal to the bit."""
+    from search_engine_spark.query.analysis import search_context
+    from search_engine_spark.query.intent import intent_score
+    from search_engine_spark.query.wand import TermPostings, score_shard_wand
+
+    ctx = search_context(q, limit, offset)
+    by_shard = {}
+    for r in postings_rows:
+        if r["term"] in ctx.query_terms:
+            by_shard.setdefault(r["shard"], []).append(
+                TermPostings(
+                    r["term"],
+                    idf.get(r["term"], 1.0),
+                    bytes(r["postings"]),
+                    list(r["block_max"]),
+                    list(r["block_last"]),
+                    list(r["block_offset"]),
+                )
+            )
+    candidates = [
+        (*docs_by_id[d], s, m)
+        for entries in by_shard.values()
+        for d, s, m in score_shard_wand(entries, ctx.candidate_limit)
+        if d in docs_by_id
+    ]
+    candidates.sort(key=lambda c: (-c[3], c[2]))
+    ranked = sorted(
+        (
+            (t, d, u, intent_score(ctx, s, m, t, d, u))
+            for t, d, u, s, m in candidates[: ctx.candidate_limit]
+        ),
+        key=lambda r: (-r[3], r[2]),
+    )
+    page = [(t or "", d or "", u, s) for t, d, u, s in ranked[offset : offset + limit]]
+    return page, max(len(ranked), offset + len(page))
+
+
+def _answer(resp):
+    return [(r.title, r.description, r.url, r.score) for r in resp.results], resp.count
+
+
+def test_pinned_search_equals_wand_and_intent_score(
+    docs, postings3, term_stats, pinned_engine, monkeypatch
+):
+    """Over 3 shards, the array scorer's pages, scores and counts are
+    ==-identical to score_shard_wand + intent_score on the same rows, also
+    when the open decodes the blobs in many small batches."""
+    from search_engine_spark.query import postings_search as PS
+
+    monkeypatch.setattr(PS, "_DECODE_BATCH_BYTES", 512)
+    batched = PS.PostingsSearchEngine(docs, postings3, term_stats, pin_shard_layout=True)
+    postings_rows = postings3.collect()
+    idf = {r["term"]: r["idf"] for r in term_stats.select("term", "idf").collect()}
+    docs_by_id = {
+        r[0]: (r[1], r[2], r[3])
+        for r in docs.select("doc_id", "title", "description", "url").collect()
+    }
+    top = _top_terms(term_stats, 40)
+    queries = [
+        (top[0], 20, 0),
+        (top[7], 10, 10),
+        (f"{top[1]} {top[2]}", 20, 0),
+        (f"{top[3]} {top[30]}", 5, 20),
+        (f"{top[0]} {top[3]} {top[4]}", 10, 0),
+        (f"{top[12]} {top[25]} {top[39]}", 10, 30),
+    ]
+    for q, limit, offset in queries:
+        want = _wand_search(postings_rows, docs_by_id, idf, q, limit, offset)
+        assert want[1] > 0, q
+        assert _answer(pinned_engine.search(q, limit, offset)) == want, q
+        assert _answer(batched.search(q, limit, offset)) == want, q
+
+
+def _tiny_pinned_engine(spark):
+    """Four documents and two terms over two shards. ``alpha`` has orphan
+    postings (doc ids with no document): one between the documents' ids and
+    one past all of them. ``omega`` has no term_statistics row. Documents 9
+    and 11 hold the largest doc id and url and never contain ``alpha``."""
+    from search_engine_spark.codec import encode_postings
+    from search_engine_spark.query.postings_search import PostingsSearchEngine
+
+    docs = [
+        (-7, None, None, "https://example.com/a"),
+        (3, None, None, "https://example.com/0"),
+        (9, "omega", "about omega", "https://example.com/o"),
+        (11, "last", "no alpha here", "https://example.com/z"),
+    ]
+    lists = {
+        ("alpha", 0): {-7: (0, 0, 2), 3: (0, 0, 2), 5: (4, 4, 4)},
+        ("alpha", 1): {2**62: (9, 9, 9)},
+        ("omega", 0): {3: (0, 0, 1)},
+        ("omega", 1): {9: (1, 1, 3)},
+    }
+    rows = []
+    for (term, shard), postings in sorted(lists.items()):
+        ids = sorted(postings)
+        blob, block_max, block_last, block_offset = encode_postings(
+            ids, *([postings[d][i] for d in ids] for i in range(3))
+        )
+        rows.append((term, shard, block_max, block_last, block_offset, blob))
+    postings = spark.createDataFrame(
+        rows,
+        "term string, shard int, block_max array<double>, block_last array<bigint>, "
+        "block_offset array<int>, postings binary",
+    )
+    stats = spark.createDataFrame([("alpha", 0.75)], "term string, idf double")
+    documents = spark.createDataFrame(
+        docs, "doc_id bigint, title string, description string, url string"
+    )
+    engine = PostingsSearchEngine(documents, postings, stats, pin_shard_layout=True)
+    return engine, postings.collect(), {d[0]: d[1:] for d in docs}
+
+
+def test_pinned_drops_orphan_postings_and_defaults_idf(spark):
+    """An orphan posting past every doc id (searchsorted's end of array) is
+    dropped, not mapped onto the last ordinal; a term missing from
+    term_statistics scores with idf 1.0."""
+    from search_engine_spark.codec import weighted_tf
+
+    engine, postings_rows, docs_by_id = _tiny_pinned_engine(spark)
+    alpha = engine.search("alpha", 10, 0)
+    assert sorted(r.url for r in alpha.results) == [
+        "https://example.com/0",
+        "https://example.com/a",
+    ]
+    assert alpha.count == 2
+    omega, _ = _wand_search(postings_rows, docs_by_id, {}, "omega", 10, 0)
+    assert _answer(engine.search("omega", 10, 0)) == (omega, 2)
+    # doc 9 matches omega alone: its token score is weighted_tf * idf 1.0
+    lo, hi, _ = engine._pinned.by_term["omega"]
+    assert engine._pinned.contrib[lo:hi].tolist() == [weighted_tf(0, 0, 1), weighted_tf(1, 1, 3)]
+    for q in ("alpha", "alpha omega", "omega alpha"):
+        want = _wand_search(postings_rows, docs_by_id, {"alpha": 0.75}, q, 10, 0)
+        assert _answer(engine.search(q, 10, 0)) == want, q
+    assert engine.scan_stats()["blocks_decoded"] == engine.scan_stats()["blocks_total"] > 0
+
+
+def test_pinned_search_breaks_score_ties_by_url(spark):
+    """Two documents with equal scores rank by url, whatever their doc ids."""
+    engine, _, _ = _tiny_pinned_engine(spark)
+    results = engine.search("alpha", 10, 0).results
+    assert [r.url for r in results] == ["https://example.com/0", "https://example.com/a"]
+    assert results[0].score == results[1].score
+
+
 def test_pinned_open_rejects_documents_over_budget(docs, postings3, term_stats, monkeypatch):
     from search_engine_spark.query import postings_search as PS
 
