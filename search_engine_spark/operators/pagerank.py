@@ -1,4 +1,4 @@
-"""PageRank as an iterative DataFrame job (reference ``pagerank.py`` semantics).
+"""PageRank over the collected link graph (reference ``pagerank.py`` semantics).
 
 Exact reference constants and quirks (``pagerank.py:6-38``):
 
@@ -9,28 +9,50 @@ Exact reference constants and quirks (``pagerank.py:6-38``):
   ranks do not sum to 1 — a "correct" PageRank would redistribute; parity
   requires reproducing the drop.
 
-Spark shape (classic): cache the edges+outdeg DataFrame once; per iteration
-one join + one groupBy-sum + one left join back onto the node list (left join
-keeps isolated/dangling nodes at (1-d)/n). ``localCheckpoint`` every few
-iterations truncates the lineage so the plan doesn't grow exponentially.
+Shape: like the reference, which keeps its adjacency in RAM, the stage
+collects the node ids and the edge list to the driver once (two Spark
+jobs) and runs every iteration there as NumPy over dense int32 ordinals;
+no Spark job runs per iteration. Ids map to ordinals by ``searchsorted``
+over the sorted node ids, with a membership check, so edges into or out
+of unknown ids drop as the reference's membership test drops them. The
+contributing edges are sorted by (dst, src) ordinal once, and each
+iteration's ``bincount`` sums every target's contributions in that fixed
+order (invariant 4). The ranks return as one single-partition DataFrame.
+``MAX_PAGERANK_EDGES`` bounds the collect; a larger graph raises rather
+than exhausting the driver.
 
 An optional L1 tolerance turns it into the "convergent iterative job" the
 north_star names, while the default stays fixed-20 for rank identity.
-
-Scale: each iteration shuffles edge contributions by dst — hash partitioning;
-hub skew is bounded because contributions are pre-aggregated map-side by the
-partial sum. ranks (n rows) is the small side relative to edges and reuses
-its partitioning across iterations.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 DAMPING = 0.85
 ITERATIONS = 20
 CHECKPOINT_EVERY = 5
+# edges the stage collects to the driver. At its peak it holds ~52 B per
+# edge: 43 B of NumPy arrays (tracemalloc; ordinals, sort permutation,
+# per-edge weights) and 9 B of Arrow buffers, measured on a 2M-edge graph
+# over 500k documents. The 4,000-page build corpus (10,840 edges) peaks at
+# ~111 B per edge, where per-document arrays and fixed costs dominate.
+# So this budget keeps the stage under ~0.85 GB.
+MAX_PAGERANK_EDGES = 16_000_000
+
+
+def _ordinals(ids: np.ndarray, col: pa.ChunkedArray) -> tuple[np.ndarray, np.ndarray]:
+    """-> (ordinal of each value in the sorted ``ids``, is-member mask).
+    Nulls and ids not in ``ids`` are non-members; their ordinal is junk."""
+    vals = pc.fill_null(col, 0).to_numpy()
+    pos = np.searchsorted(ids, vals).astype(np.int32)
+    np.minimum(pos, len(ids) - 1, out=pos)
+    known = (ids[pos] == vals) & pc.is_valid(col).to_numpy()
+    return pos, known
 
 
 def build_document_authority(
@@ -40,107 +62,63 @@ def build_document_authority(
     damping: float = DAMPING,
     tol: float | None = None,
 ) -> DataFrame:
-    """-> (doc_id, pagerank, inlink_count).
+    """-> (doc_id, pagerank, inlink_count), one partition.
 
-    ``tol``: optional L1 early-stop (checked every CHECKPOINT_EVERY iters to
-    avoid per-iteration actions); None = fixed ``iterations`` (reference).
+    ``tol``: optional L1 early-stop against the ranks of the previous
+    CHECKPOINT_EVERY-th iteration; None = fixed ``iterations`` (reference).
     """
-    # ids-only node list cached: the rank-refresh left join touches it every
-    # iteration, and without the cache each of the 20 iterations re-scans
-    # the (wide) documents source. No forced repartition — at bench scale
-    # AQE broadcasts the contribs side into it (cheapest), and at scale the
-    # first shuffle's partitioning is preserved by the cache.
-    nodes = documents.select("doc_id").cache()
-    n = nodes.count()
+    spark = documents.sparkSession
+    schema = "doc_id long, pagerank double, inlink_count int"
+    ids = np.sort(documents.select("doc_id").toArrow().column("doc_id").to_numpy())
+    n = len(ids)
     if n == 0:
-        nodes.unpersist()
-        return documents.sparkSession.createDataFrame(
-            [], "doc_id long, pagerank double, inlink_count int"
+        return spark.createDataFrame([], schema)
+    edges = (
+        links_resolved.select("source_doc_id", "target_doc_id")
+        .limit(MAX_PAGERANK_EDGES + 1)
+        .toArrow()
+    )
+    if edges.num_rows > MAX_PAGERANK_EDGES:
+        raise ValueError(
+            "PageRank collects at most MAX_PAGERANK_EDGES = "
+            f"{MAX_PAGERANK_EDGES} edges to the driver; this link graph has more"
         )
+    # an edge with a null source joins no out-degree, so it counts nowhere
+    if edges["source_doc_id"].null_count:
+        edges = edges.filter(pc.is_valid(edges["source_doc_id"]))
+    src, src_known = _ordinals(ids, edges["source_doc_id"])
+    dst, dst_known = _ordinals(ids, edges["target_doc_id"])
+    del edges
 
-    # edges restricted to known nodes on both sides (pagerank.py:25-27 checks
-    # membership in the node set; links_resolved already guarantees dst,
-    # src comes from documents by construction)
-    edges = links_resolved.select(
-        F.col("source_doc_id").alias("src"), F.col("target_doc_id").alias("dst")
-    )
-    out_degree = edges.groupBy("src").agg(F.count(F.lit(1)).alias("out_degree"))
-    # the per-iteration contribution join keys on src. Where the edge table
-    # is big (out_degree too large to broadcast) the cache-build join is a
-    # sort-merge on src, so the cached layout is already hash-partitioned
-    # on src and satisfies the iteration join's distribution requirement —
-    # the (huge) edge table shuffles once, not 20 times; only the small
-    # ranks side moves each iteration. At bench scale the joins broadcast
-    # instead, which is cheaper still — don't force an exchange here.
-    edges_deg = edges.join(out_degree, "src").cache()
-    edges_deg.count()
+    # out-degree counts every edge of a known source, wherever it points
+    out_degree = np.bincount(src[src_known], minlength=n).astype(np.float64)
+    inlink_count = np.bincount(dst[dst_known], minlength=n).astype(np.int32)
+    both = src_known & dst_known
+    src, dst = src[both], dst[both]
+    order = np.lexsort((src, dst))
+    src, dst = src[order], dst[order]
+    src_degree = out_degree[src]
+    del order, both, src_known, dst_known
 
-    # derived from the cached relation (an inner join on out_degree keeps
-    # every edge), not from `edges`, whose lineage would re-run the full
-    # upstream scan + distinct; materialized eagerly (≤n rows) so the final
-    # join stays valid after edges_deg is unpersisted below
-    inlinks = (
-        edges_deg.groupBy("dst")
-        .agg(F.count(F.lit(1)).alias("inlink_count"))
-        .localCheckpoint(eager=True)
-    )
-
-    base = 1.0 / n
     teleport = (1.0 - damping) / n
-    ranks = nodes.withColumn("pagerank", F.lit(base))
-
-    prev_ranks: DataFrame | None = None
+    ranks = np.full(n, 1.0 / n)
+    prev_ranks = None
     for i in range(iterations):
-        contribs = (
-            edges_deg.join(ranks, edges_deg.src == ranks.doc_id, "inner")
-            .select(
-                "dst",
-                (F.lit(damping) * F.col("pagerank") / F.col("out_degree")).alias(
-                    "contrib"
-                ),
-            )
-            .groupBy("dst")
-            .agg(F.sum("contrib").alias("contrib"))
-        )
-        ranks = (
-            nodes.join(contribs, nodes.doc_id == contribs.dst, "left")
-            .select(
-                "doc_id",
-                (F.lit(teleport) + F.coalesce(F.col("contrib"), F.lit(0.0))).alias(
-                    "pagerank"
-                ),
-            )
-        )
-        if (i + 1) % CHECKPOINT_EVERY == 0 or i == iterations - 1:
-            ranks = ranks.localCheckpoint(eager=True)
-            if tol is not None and prev_ranks is not None:
-                delta = (
-                    ranks.alias("a")
-                    .join(prev_ranks.alias("b"), "doc_id")
-                    .agg(
-                        F.sum(F.abs(F.col("a.pagerank") - F.col("b.pagerank"))).alias(
-                            "l1"
-                        )
-                    )
-                    .first()["l1"]
-                )
-                if delta is not None and delta < tol:
-                    break
+        contrib = np.bincount(dst, weights=damping * ranks[src] / src_degree, minlength=n)
+        ranks = teleport + contrib
+        if tol is not None and ((i + 1) % CHECKPOINT_EVERY == 0 or i == iterations - 1):
+            if prev_ranks is not None and np.abs(ranks - prev_ranks).sum() < tol:
+                break
             prev_ranks = ranks
 
-    result = (
-        ranks.join(inlinks, ranks.doc_id == inlinks.dst, "left")
-        .select(
-            "doc_id",
-            "pagerank",
-            F.coalesce(F.col("inlink_count"), F.lit(0)).cast("int").alias(
-                "inlink_count"
-            ),
-        )
+    table = pa.table(
+        {
+            "doc_id": pa.array(ids, pa.int64()),
+            "pagerank": pa.array(ranks, pa.float64()),
+            "inlink_count": pa.array(inlink_count, pa.int32()),
+        }
     )
-    edges_deg.unpersist()
-    nodes.unpersist()
-    return result
+    return spark.createDataFrame(table, schema).coalesce(1)
 
 
 def personalized_pagerank(
@@ -160,9 +138,9 @@ def personalized_pagerank(
     new[t] = (1-d)/|S|·[t∈S] + d·Σ_src pr[src]/outdeg(src). Fixed
     ``iterations`` rounds, no convergence test (reference quirk kept).
 
-    Scale: identical to ``build_document_authority`` — the edge relation
-    shuffles once into the cache, per iteration only the n-row rank
-    vector moves; the seed flag is a column on the cached node list.
+    Scale: the edge relation shuffles once into the cache, per iteration
+    only the n-row rank vector moves; the seed flag is a column on the
+    cached node list.
     """
     seed_ids = seeds.select("doc_id").distinct()
     ns = seed_ids.count()

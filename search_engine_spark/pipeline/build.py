@@ -50,6 +50,11 @@ from ..operators.tokens import build_tokens
 from ..sources.tableio import ParquetIO
 from .checkpoints import CheckpointLog, fingerprint, write_json_atomic
 
+# part of document_authority's lineage: change it whenever the PageRank
+# code's values change for the same inputs (even in the last bits), so a
+# root written by the earlier code rebuilds that table once
+PAGERANK_IMPL = "csr"
+
 
 @dataclass
 class BuildResult:
@@ -186,7 +191,7 @@ def _derive_tables(
     )
     fp_pr = fingerprint(
         "document_authority",
-        {**lineage, "iterations": pagerank_iterations},
+        {**lineage, "iterations": pagerank_iterations, "pagerank": PAGERANK_IMPL},
         [fp_docs, fp_links],
     )
     fp_dict = fingerprint("spellcheck_dictionary", lineage, [fp_docs])

@@ -52,6 +52,96 @@ def test_pagerank_convergent_mode(docs):
         assert abs(tolstop[k] - v) < 1e-6
 
 
+def _pagerank_replica(nodes, edges, iterations=20, damping=0.85):
+    """Reference PageRank in plain Python: uniform 1/n start, dangling mass
+    dropped, out-degree over every edge of a source, contributions only
+    along edges whose two ends are nodes. -> {node: (pagerank, inlinks)}."""
+    from collections import Counter
+
+    n = len(nodes)
+    known = set(nodes)
+    out_degree = Counter(s for s, _ in edges if s is not None)
+    inlinks = Counter(d for s, d in edges if s is not None and d in known)
+    ranks = {v: 1.0 / n for v in nodes}
+    for _ in range(iterations):
+        new = {v: 0.0 for v in nodes}
+        for s, d in edges:
+            if s in known and d in known:
+                new[d] += damping * ranks[s] / out_degree[s]
+        ranks = {v: (1.0 - damping) / n + new[v] for v in nodes}
+    return {v: (ranks[v], inlinks[v]) for v in nodes}
+
+
+# -7 is linked from 3 and links to 1; 5 is dangling (in-links only); 6 is
+# isolated; 99 and 4 are sources missing from the documents (above the
+# largest id and between two ids), 98 and -100 missing targets (above and
+# below); 2 -> 3 appears twice; the null ends join nothing
+_NODES = [-7, 1, 2, 3, 5, 6]
+_EDGES = [
+    (1, 2), (2, 3), (2, 3), (3, 1), (3, 5), (3, -7), (-7, 1),
+    (99, 1), (4, 2), (1, 98), (2, -100), (None, 2), (3, None),
+]
+
+
+@pytest.mark.parametrize(
+    "nodes,edge_list",
+    [(_NODES, _EDGES), (_NODES, []), ([], _EDGES)],
+    ids=["edge-cases", "no-edges", "no-documents"],
+)
+def test_pagerank_matches_python_replica(spark, nodes, edge_list):
+    docs = spark.createDataFrame([(v,) for v in nodes], "doc_id long")
+    edges = spark.createDataFrame(edge_list, "source_doc_id long, target_doc_id long")
+    got = {
+        r["doc_id"]: (r["pagerank"], r["inlink_count"])
+        for r in build_document_authority(docs, edges).collect()
+    }
+    want = _pagerank_replica(nodes, edge_list)
+    assert got.keys() == want.keys()
+    for v, (pr, inl) in want.items():
+        assert abs(got[v][0] - pr) < TOL, v
+        assert got[v][1] == inl, v
+
+
+def test_pagerank_is_independent_of_edge_order(spark, docs):
+    from pyspark.sql import functions as F
+
+    edges = build_links_resolved(docs).localCheckpoint()
+
+    def ranks(e):
+        return sorted(build_document_authority(docs, e).collect())
+
+    want = ranks(edges)
+    assert ranks(edges.repartition(7)) == want
+    assert ranks(edges.orderBy(F.rand(3))) == want
+
+
+def test_pagerank_jobs_do_not_grow_with_iterations(spark, docs):
+    edges = build_links_resolved(docs).localCheckpoint()
+    sc = spark.sparkContext
+    jobs = {}
+    for iterations in (5, 40):
+        group = f"pagerank-jobs-{iterations}"
+        sc.setJobGroup(group, "PageRank's Spark jobs must not grow with iterations")
+        try:
+            build_document_authority(docs, edges, iterations=iterations).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[iterations] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs[5] == jobs[40] <= 3, jobs
+
+
+def test_pagerank_rejects_edges_over_budget(spark, monkeypatch):
+    from search_engine_spark.operators import pagerank
+
+    docs = spark.createDataFrame([(v,) for v in _NODES], "doc_id long")
+    edges = spark.createDataFrame(_EDGES, "source_doc_id long, target_doc_id long")
+    monkeypatch.setattr(pagerank, "MAX_PAGERANK_EDGES", len(_EDGES))
+    assert build_document_authority(docs, edges).count() == len(_NODES)
+    monkeypatch.setattr(pagerank, "MAX_PAGERANK_EDGES", 3)
+    with pytest.raises(ValueError, match="MAX_PAGERANK_EDGES = 3"):
+        build_document_authority(docs, edges)
+
+
 def test_triangle_counts_hand_built(spark):
     from search_engine_spark.operators.pagerank import triangle_counts
 

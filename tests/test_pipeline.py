@@ -7,6 +7,7 @@ import shutil
 import pytest
 
 from search_engine_spark.corpus import FIXED_NOW, generate_pages, pages_dataframe
+from search_engine_spark.pipeline import build as build_module
 from search_engine_spark.pipeline.build import build_index, load_engines
 from search_engine_spark.pipeline.checkpoints import CheckpointLog
 
@@ -88,6 +89,30 @@ def test_param_change_invalidates_only_dependents(
     assert r.stages_run == ["postings"]
     assert _table_snapshot(spark, copy, "postings") == _table_snapshot(
         spark, root, "postings"
+    )
+
+
+def test_pagerank_impl_change_rebuilds_only_document_authority(
+    spark, pages, clean_build, tmp_path_factory, monkeypatch
+):
+    """A root written by another PageRank implementation rebuilds that one
+    table, and keeps every other stage."""
+    root, _ = clean_build
+    copy = str(tmp_path_factory.mktemp("pagerank_impl"))
+    shutil.rmtree(copy)
+    shutil.copytree(root, copy)
+    monkeypatch.setattr(build_module, "PAGERANK_IMPL", "spark-loop")
+    r = build_index(
+        spark, pages, copy, FIXED_NOW, n_shards=2, pagerank_iterations=PR_ITERS
+    )
+    assert r.stages_run == ["document_authority"]
+    monkeypatch.undo()
+    r = build_index(
+        spark, pages, copy, FIXED_NOW, n_shards=2, pagerank_iterations=PR_ITERS
+    )
+    assert r.stages_run == ["document_authority"]
+    assert _table_snapshot(spark, copy, "document_authority") == _table_snapshot(
+        spark, root, "document_authority"
     )
 
 
