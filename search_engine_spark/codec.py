@@ -28,15 +28,17 @@ Closest reference analog: the B-tree ``idx_tokens_term``
 (0001_initial_schema.py:72) — a lookup structure, not a compressed list; this
 codec is a new capability required by BASELINE.json.
 
-Pure Python over ``bytes``; each call handles a whole (term, shard) group
-inside grouped-map pandas stages, not a row. ``decode_postings_batch``
-decodes many blobs at once in NumPy, for a reader that holds a whole index
-in memory.
+``encode_postings`` / ``decode_postings`` are the pure-Python reference over
+``bytes``, one posting list per call. Their NumPy twins work on many lists
+at once: ``encode_postings_batch`` encodes every posting list of an Arrow
+batch (the postings build), ``decode_postings_batch`` decodes many blobs
+(the merge, and a reader that holds a whole index in memory).
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 BLOCK_SIZE = 128
 _U63 = 1 << 63
@@ -220,3 +222,109 @@ def decode_postings_batch(
     unsigned = running - block_base[np.cumsum(restart) - 1]
     doc_ids = (unsigned ^ np.uint64(_U63)).view(np.int64)
     return counts, doc_ids, fields[:, 1], fields[:, 2], fields[:, 3]
+
+
+def _varints(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """uint64 values -> (their varints concatenated, each varint's start
+    byte), byte for byte as ``_write_varint`` writes them."""
+    # the byte-length ladder: a value >= 2^(7k) needs a (k+1)-th byte
+    length = np.ones(values.size, dtype=np.int64)
+    longer = np.flatnonzero(values >> np.uint64(7))
+    k = 1
+    while longer.size:
+        length[longer] += 1
+        k += 1
+        longer = longer[(values[longer] >> np.uint64(7 * k)) != 0]
+    start = np.cumsum(length) - length
+    out = np.empty(int(length.sum()), dtype=np.uint8)
+    # byte k carries bits 7k..7k+6; every byte but the last sets bit 7
+    todo = np.arange(values.size)
+    k = 0
+    while todo.size:
+        low = (values[todo] >> np.uint64(7 * k)) & np.uint64(0x7F)
+        more = (length[todo] > k + 1).astype(np.uint8) << np.uint8(7)
+        out[start[todo] + k] = low.astype(np.uint8) | more
+        k += 1
+        todo = todo[length[todo] > k]
+    return out, start
+
+
+def encode_postings_batch(
+    run_lengths, doc_ids, f_title, f_desc, f_body
+) -> tuple[np.ndarray, pa.BinaryArray, pa.ListArray, pa.ListArray, pa.ListArray]:
+    """Encode many posting lists in one vectorized pass, equal to
+    ``encode_postings`` of each list in turn.
+
+    List ``r`` is the next ``run_lengths[r]`` rows of ``doc_ids`` (int64)
+    and the three frequency arrays (non-negative int64). A run's rows are
+    sorted by doc id; rows that repeat a doc id are summed into one posting,
+    which pivots one row per (doc, field) into one posting per doc.
+
+    Returns ``(df, blobs, block_max, block_last, block_offset)``: ``df[r]``
+    postings of list ``r``, the blobs as one ``BinaryArray`` over a single
+    buffer, and the three skip arrays as ``ListArray``s, one list per run.
+    """
+    run_lengths = np.asarray(run_lengths, dtype=np.int64)
+    doc_ids = np.asarray(doc_ids, dtype=np.int64)
+    n_runs = run_lengths.size
+    row_first = np.cumsum(run_lengths) - run_lengths
+
+    # one posting per (run, doc): rows of a run are sorted by doc id
+    new_posting = np.ones(doc_ids.size, dtype=bool)
+    new_posting[1:] = doc_ids[1:] != doc_ids[:-1]
+    new_posting[row_first] = True
+    posting_row = np.flatnonzero(new_posting)
+    docs = doc_ids[posting_row]
+    f1, f2, f4 = (
+        np.add.reduceat(np.asarray(f, dtype=np.int64), posting_row)
+        for f in (f_title, f_desc, f_body)
+    )
+    n_post = docs.size
+    post_first = np.searchsorted(posting_row, row_first)
+    df = np.diff(np.append(post_first, n_post))
+    run_of = np.repeat(np.arange(n_runs), df)
+
+    # an absolute unsigned id at each block start, the delta to the previous
+    # posting elsewhere (exact in uint64: ids ascend inside a block)
+    restart = (np.arange(n_post) - post_first[run_of]) % BLOCK_SIZE == 0
+    unsigned = docs.view(np.uint64) ^ np.uint64(_U63)
+    id_value = unsigned.copy()
+    id_value[1:] -= unsigned[:-1]
+    id_value[restart] = unsigned[restart]
+
+    # blob r is varint(df[r]) then four varints per posting
+    header = np.arange(n_runs) + 4 * post_first
+    at = run_of + 1 + 4 * np.arange(n_post)
+    values = np.empty(n_runs + 4 * n_post, dtype=np.uint64)
+    values[header] = df
+    values[at] = id_value
+    values[at + 1] = f1
+    values[at + 2] = f2
+    values[at + 3] = f4
+    out, start = _varints(values)
+    if out.size > np.iinfo(np.int32).max:
+        raise ValueError(f"{out.size} blob bytes exceed one BinaryArray")
+    offsets = np.append(start[header], out.size).astype(np.int32)
+    blobs = pa.Array.from_buffers(
+        pa.binary(), n_runs, [None, pa.py_buffer(offsets), pa.py_buffer(out)]
+    )
+
+    block_first = np.flatnonzero(restart)
+    block_end = np.empty_like(block_first)
+    block_end[:-1] = block_first[1:] - 1
+    block_end[-1:] = n_post - 1
+    weighted = W_TITLE * f1 + W_DESC * f2 + W_BODY * f4  # encode_postings' order
+    list_offsets = pa.array(
+        np.append(0, np.cumsum(-(-df // BLOCK_SIZE))).astype(np.int32)
+    )
+
+    def per_run(values: np.ndarray) -> pa.ListArray:
+        return pa.ListArray.from_arrays(list_offsets, pa.array(values))
+
+    return (
+        df,
+        blobs,
+        per_run(np.maximum.reduceat(weighted, block_first)),
+        per_run(docs[block_end]),
+        per_run((start[at[block_first]] - start[header[run_of[block_first]]]).astype(np.int32)),
+    )

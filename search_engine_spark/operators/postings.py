@@ -9,12 +9,13 @@ Layout rationale (north_rule: explicit partitioning / shuffle / skew):
 
 - ``shard`` is a GLOBAL doc-id-range bucket: ``floor(unsigned(doc_id) / 2^64
   * n_shards)`` — identical boundaries for every term. Two properties follow:
-  (1) a Zipf head term's postings split into n_shards bounded groups, so no
-  single ``applyInPandas`` task ever holds more than ~corpus/n_shards
-  postings — the skew cap; (2) within one shard, EVERY query term's list
-  covers the same doc range, so a shard is a self-contained mini-index and
-  query-time block-max WAND runs shard-local with a plain global top-k reduce
-  after (document-partitioned search, the classic architecture).
+  (1) a Zipf head term's postings split into n_shards bounded runs, so no
+  encode task ever holds more than one run of ~corpus/n_shards postings
+  plus one Arrow batch — the skew cap; (2) within one shard, EVERY query
+  term's list covers the same doc range, so a shard is a self-contained
+  mini-index and query-time block-max WAND runs shard-local with a plain
+  global top-k reduce after (document-partitioned search, the classic
+  architecture).
 - The mapping is monotone in doc_id, so shards concatenate in global doc
   order; rare terms fragment across shards (the standard doc-partitioned
   tradeoff — bounded by one row per (term, shard), and min/max file skipping
@@ -32,12 +33,16 @@ from __future__ import annotations
 
 import math
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from ..codec import decode_postings, encode_postings
+from ..codec import decode_postings_batch, encode_postings_batch
+from .tokens import FIELD_IDS
 
 DEFAULT_DOCS_PER_SHARD = 4_194_304  # 2^22
 DEFAULT_TERM_BUCKETS = 64
@@ -57,6 +62,8 @@ POSTINGS_SCHEMA = T.StructType(
         T.StructField("postings", T.BinaryType(), False),
     ]
 )
+_POSTINGS_ARROW = to_arrow_schema(POSTINGS_SCHEMA)
+_RUN_KEY = ("term", "shard")
 
 
 def shard_col(n_shards: int) -> F.Column:
@@ -64,27 +71,6 @@ def shard_col(n_shards: int) -> F.Column:
     unit = (F.col("doc_id").cast("double") + F.lit(_U63)) / F.lit(_U64)  # [0,1)
     return F.least(
         F.floor(unit * F.lit(n_shards)).cast("int"), F.lit(n_shards - 1)
-    )
-
-
-def _encode_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    pdf = pdf.sort_values("doc_id")
-    doc_ids = pdf["doc_id"].tolist()
-    blob, block_max, block_last, block_offset = encode_postings(
-        doc_ids, pdf["f1"].tolist(), pdf["f2"].tolist(), pdf["f4"].tolist()
-    )
-    return pd.DataFrame(
-        {
-            "term": [pdf["term"].iloc[0]],
-            "term_bucket": [int(pdf["term_bucket"].iloc[0])],
-            "shard": [int(pdf["shard"].iloc[0])],
-            "df": [len(doc_ids)],
-            "ctf": [int(pdf["ctf_row"].sum())],
-            "block_max": [block_max],
-            "block_last": [block_last],
-            "block_offset": [block_offset],
-            "postings": [blob],
-        }
     )
 
 
@@ -105,37 +91,127 @@ _DECODED_SCHEMA = T.StructType(
     ]
 )
 
-_DECODE_CHUNK = 1 << 18  # rows per yielded frame: bounds pandas memory
+_DECODED_ARROW = to_arrow_schema(_DECODED_SCHEMA)
+_DECODE_CHUNK = 1 << 18  # rows per yielded batch: bounds what the JVM reads at once
 
 
-def _decode_rows(iterator):
-    """postings rows -> per-(term, doc) frequency rows (mapInPandas).
+def _decode_batches(batches):
+    """postings rows -> per-(term, doc) frequency rows (mapInArrow), every
+    blob of a batch decoded in one ``decode_postings_batch`` pass."""
+    for batch in batches:
+        if not batch.num_rows:
+            continue
+        counts, doc_ids, f1, f2, f4 = decode_postings_batch(batch["postings"].to_pylist())
+        keys = batch.select(["term", "term_bucket", "shard", "_segment"]).take(
+            np.repeat(np.arange(batch.num_rows), counts)
+        )
+        out = pa.RecordBatch.from_arrays(
+            [
+                *keys.columns[:3],
+                pa.array(doc_ids),
+                *(pa.array(f.view(np.int64)) for f in (f1, f2, f4)),
+                keys["_segment"],
+            ],
+            schema=_DECODED_ARROW,
+        )
+        for lo in range(0, out.num_rows, _DECODE_CHUNK):
+            yield out.slice(lo, _DECODE_CHUNK)
 
-    (itertuples would rename the underscore-prefixed ``_segment`` column,
-    so columns are pulled as plain lists.)"""
-    for pdf in iterator:
-        terms = pdf["term"].tolist()
-        buckets = pdf["term_bucket"].tolist()
-        shards = pdf["shard"].tolist()
-        blobs = pdf["postings"].tolist()
-        segs = pdf["_segment"].tolist()
-        for i in range(len(pdf)):
-            ids, f1, f2, f4 = decode_postings(bytes(blobs[i]))
-            for lo in range(0, len(ids), _DECODE_CHUNK):
-                hi = lo + _DECODE_CHUNK
-                n = len(ids[lo:hi])
-                yield pd.DataFrame(
-                    {
-                        "term": [terms[i]] * n,
-                        "term_bucket": [buckets[i]] * n,
-                        "shard": [shards[i]] * n,
-                        "doc_id": ids[lo:hi],
-                        "f1": f1[lo:hi],
-                        "f2": f2[lo:hi],
-                        "f4": f4[lo:hi],
-                        "_segment": [segs[i]] * n,
-                    }
-                )
+
+def _run_starts(batch: pa.RecordBatch) -> np.ndarray:
+    """Rows of a (term, shard)-sorted batch where a new run starts."""
+    n = batch.num_rows
+    term, shard = batch["term"], batch["shard"].to_numpy()
+    start = np.ones(n, dtype=bool)
+    start[1:] = pc.not_equal(term.slice(1), term.slice(0, n - 1)).to_numpy(
+        zero_copy_only=False
+    ) | (shard[1:] != shard[:-1])
+    return np.flatnonzero(start)
+
+
+def _continues(last: pa.RecordBatch, batch: pa.RecordBatch) -> bool:
+    """Whether ``batch``'s first row is in the run of ``last``'s last row."""
+    i = last.num_rows - 1
+    return all(last[c][i].as_py() == batch[c][0].as_py() for c in _RUN_KEY)
+
+
+def _whole_runs(batches):
+    """(term, shard)-sorted Arrow batches -> (table, run lengths) holding
+    whole runs only.
+
+    The run that reaches a batch's end may go on in the next batch, so it
+    is carried as a list of slices and concatenated once, when it ends: a
+    head-term run spanning many batches costs time linear in its rows, and
+    a task holds at most that one run plus one batch."""
+    carry, carry_rows = [], 0
+    for batch in batches:
+        if not batch.num_rows:
+            continue
+        starts = _run_starts(batch)
+        lengths = np.diff(starts, append=batch.num_rows)
+        if carry and _continues(carry[-1], batch):
+            carry.append(batch.slice(0, lengths[0]))
+            carry_rows += int(lengths[0])
+            starts, lengths = starts[1:], lengths[1:]
+            if not starts.size:
+                continue
+        run_lengths = [carry_rows] * bool(carry) + lengths[:-1].tolist()
+        if run_lengths:
+            body = batch.slice(starts[0], starts[-1] - starts[0])
+            yield pa.Table.from_batches([*carry, body]), run_lengths
+        carry, carry_rows = [batch.slice(starts[-1])], int(lengths[-1])
+    if carry:
+        yield pa.Table.from_batches(carry), [carry_rows]
+
+
+def _encode_runs(batches, fields):
+    """(term, shard)-sorted rows -> one postings row per run (mapInArrow).
+
+    ``fields(table)`` gives each row's (f1, f2, f4, ctf) contribution; the
+    codec sums a doc's rows into its posting."""
+    for table, run_lengths in _whole_runs(batches):
+        f1, f2, f4, ctf_row = fields(table)
+        first = np.cumsum(run_lengths) - run_lengths
+        df, blobs, block_max, block_last, block_offset = encode_postings_batch(
+            run_lengths, table["doc_id"].to_numpy(), f1, f2, f4
+        )
+        keys = table.select(["term", "term_bucket", "shard"]).take(first)
+        yield pa.RecordBatch.from_arrays(
+            [
+                *(c.combine_chunks() for c in keys.columns),
+                pa.array(df),
+                pa.array(np.add.reduceat(ctf_row, first)),
+                block_max,
+                block_last,
+                block_offset,
+                blobs,
+            ],
+            schema=_POSTINGS_ARROW,
+        )
+
+
+def _encode_sorted(rows: DataFrame, fields) -> DataFrame:
+    """One shuffle onto (term, shard), a sort by doc id inside each run,
+    and one encode call per Arrow batch."""
+    return (
+        rows.repartition(*_RUN_KEY)
+        .sortWithinPartitions(*_RUN_KEY, "doc_id")
+        .mapInArrow(lambda batches: _encode_runs(batches, fields), schema=POSTINGS_SCHEMA)
+    )
+
+
+def _token_fields(table: pa.Table):
+    """Raw token rows, one per (doc, field): each adds its frequency to its
+    field and to ctf."""
+    field = table["field"].to_numpy()
+    freq = table["frequency"].to_numpy().astype(np.int64)
+    return (*(np.where(field == f, freq, 0) for f in FIELD_IDS), freq)
+
+
+def _posting_fields(table: pa.Table):
+    """Decoded posting rows, one per (doc, term)."""
+    f1, f2, f4 = (table[c].to_numpy() for c in ("f1", "f2", "f4"))
+    return f1, f2, f4, f1 + f2 + f4
 
 
 def merge_postings(segments: list[DataFrame]) -> DataFrame:
@@ -149,13 +225,14 @@ def merge_postings(segments: list[DataFrame]) -> DataFrame:
     the doc are dropped, not just overridden per (term, doc)).
 
     Plan: decode each segment's blobs to per-(term, doc) rows
-    (mapInPandas, no shuffle), derive each doc's owning segment with a
-    map-side-combined max over the uniformly distributed doc_id key, keep
-    only rows from the owner, then regroup on the same bounded (term,
-    shard) groups as the build and re-encode. Three shuffles — owner agg
-    (doc_id), owner join (doc_id, exchange reused from the agg), re-encode
-    groupBy (term, shard) — all on uniform or doc-range-capped keys; a
-    head term never funnels through one reducer.
+    (mapInArrow over ``codec.decode_postings_batch``, no shuffle), derive
+    each doc's owning segment with a map-side-combined max over the
+    uniformly distributed doc_id key, keep only rows from the owner, then
+    re-encode through the build's sorted-run encoder on the same bounded
+    (term, shard) runs. Three shuffles — owner agg (doc_id), owner join
+    (doc_id, exchange reused from the agg), re-encode repartition (term,
+    shard) — all on uniform or doc-range-capped keys; a head term never
+    funnels through one reducer.
 
     ``df``/``ctf`` are recomputed per (term, shard) row, consistent with
     build_postings' per-shard semantics. Merging disjoint-doc segments is
@@ -170,54 +247,14 @@ def merge_postings(segments: list[DataFrame]) -> DataFrame:
     # a materialization barrier the blob decode — the most expensive stage —
     # executes twice per merge (same lineage-breaking pattern as
     # connected_components / build_news_tables)
-    decoded = tagged.mapInPandas(
-        _decode_rows, schema=_DECODED_SCHEMA
-    ).localCheckpoint(eager=True)
+    decoded = tagged.select(
+        "term", "term_bucket", "shard", "postings", "_segment"
+    ).mapInArrow(_decode_batches, schema=_DECODED_SCHEMA).localCheckpoint(eager=True)
     owner = decoded.groupBy("doc_id").agg(F.max("_segment").alias("_owner"))
-    kept = (
-        decoded.join(owner, "doc_id")
-        .filter(F.col("_segment") == F.col("_owner"))
-        .withColumn("ctf_row", F.col("f1") + F.col("f2") + F.col("f4"))
-    )
-    return kept.groupBy("term", "shard").applyInPandas(
-        lambda pdf: _encode_group(pdf), schema=POSTINGS_SCHEMA
-    )
-
-
-def _encode_token_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    """One (term, shard) group of RAW token rows -> one postings row.
-
-    The per-doc field pivot happens here (numpy scatter-add over the
-    doc-id factorization) instead of in a separate Spark aggregation, so
-    the build needs a single shuffle. ``np.unique`` returns doc ids
-    sorted ascending — the order the codec requires."""
-    import numpy as np
-
-    d = pdf["doc_id"].to_numpy()
-    f = pdf["field"].to_numpy()
-    q = pdf["frequency"].to_numpy(dtype=np.int64)
-    ids, inv = np.unique(d, return_inverse=True)
-    f1 = np.zeros(len(ids), dtype=np.int64)
-    f2 = np.zeros(len(ids), dtype=np.int64)
-    f4 = np.zeros(len(ids), dtype=np.int64)
-    for arr, fv in ((f1, 1), (f2, 2), (f4, 4)):
-        m = f == fv
-        np.add.at(arr, inv[m], q[m])
-    blob, block_max, block_last, block_offset = encode_postings(
-        ids.tolist(), f1.tolist(), f2.tolist(), f4.tolist()
-    )
-    return pd.DataFrame(
-        {
-            "term": [pdf["term"].iloc[0]],
-            "term_bucket": [int(pdf["term_bucket"].iloc[0])],
-            "shard": [int(pdf["shard"].iloc[0])],
-            "df": [len(ids)],
-            "ctf": [int(q.sum())],
-            "block_max": [block_max],
-            "block_last": [block_last],
-            "block_offset": [block_offset],
-            "postings": [blob],
-        }
+    kept = decoded.join(owner, "doc_id").filter(F.col("_segment") == F.col("_owner"))
+    return _encode_sorted(
+        kept.select("term", "term_bucket", "shard", "doc_id", "f1", "f2", "f4"),
+        _posting_fields,
     )
 
 
@@ -231,20 +268,21 @@ def build_postings(
     ``df``/``ctf`` per row are per-shard; whole-term statistics live in
     term_statistics. Callers size ``n_shards`` via :func:`n_shards_for`.
 
-    ONE shuffle (r05): raw token rows cluster straight onto the bounded
-    (term, shard) groups and the per-doc field pivot runs inside the
-    encode task (numpy scatter-add) rather than as a prior
-    groupBy(term, doc_id) aggregation. The dropped aggregation's map-side
-    combine only collapsed the ~1.1 rows/(term, doc) field split, so the
-    fused plan shuffles almost the same bytes once instead of nearly
-    twice — measured 27-33% faster at both local[16] and local[4] on the
-    200k-page corpus, bit-identical output. Skew stays bounded exactly as
-    before: the shard component caps every group at ~corpus/n_shards
-    postings (invariant 6)."""
+    ONE shuffle: raw token rows hash onto (term, shard), are sorted by
+    (term, shard, doc_id) inside each partition, and reach Python one Arrow
+    batch at a time (``mapInArrow``). ``codec.encode_postings_batch`` then
+    encodes every (term, shard) run of the batch in NumPy, pivoting each
+    doc's field rows into its posting, with one call per batch instead of
+    one pandas call per group (1,978 groups on a 4k-page corpus). A run
+    that crosses a batch edge is carried into the next batch. The output
+    rows are byte-identical to the per-group encoder's. Skew stays bounded
+    as before: the shard component caps every run at ~corpus/n_shards
+    postings (invariant 6), and a task holds one run plus one batch."""
     salted = tokens.withColumn("shard", shard_col(n_shards)).withColumn(
         "term_bucket",
         F.pmod(F.xxhash64("term"), F.lit(n_term_buckets)).cast("int"),
     )
-    return salted.groupBy("term", "shard").applyInPandas(
-        _encode_token_group, schema=POSTINGS_SCHEMA
+    return _encode_sorted(
+        salted.select("term", "term_bucket", "shard", "doc_id", "field", "frequency"),
+        _token_fields,
     )

@@ -16,8 +16,8 @@ then link graph BEFORE pagerank; bm25 stats independent):
 Each stage writes parquet under ``out_root/<table>``, then replaces its
 commit marker ``out_root/_checkpoints/<stage>.json`` (lineage + per-file
 metrics, checkpoints.py). A rerun after any interruption skips committed
-stages whose fingerprints match — kill-and-resume converges to
-byte-identical tables (tested).
+stages whose fingerprints match — kill-and-resume converges to tables
+with the same rows as a clean build (tested).
 
 Scale notes:
 - postings are written ``partitionBy('term_bucket')`` so query IN-list scans
@@ -26,7 +26,9 @@ Scale notes:
 - ``n_shards`` defaults from corpus size (postings.n_shards_for).
 - documents/tokens write through snappy parquet; all stage outputs are
   deterministic (no wall clock in data, stable doc ids), so resume at any
-  parallelism yields identical bytes.
+  parallelism yields identical rows. Not identical files: two JVMs write
+  the same rows with different parquet footer bytes (the order of a
+  column chunk's encodings list, for one).
 """
 
 from __future__ import annotations

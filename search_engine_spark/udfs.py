@@ -24,7 +24,7 @@ from pyspark.sql.functions import pandas_udf
 
 from .extract import parse_page
 from .normalization import normalize_url, registrable_domain
-from .simhash_impl import simhash_text
+from .simhash_impl import simhash_batch
 from .tokenizer import tokenize
 
 PARSED_PAGE_SCHEMA = T.StructType(
@@ -130,7 +130,7 @@ def registrable_domain_udf(url: pd.Series) -> pd.Series:
 
 @pandas_udf(T.LongType())
 def simhash_udf(content: pd.Series) -> pd.Series:
-    return content.map(lambda c: simhash_text(c or ""))
+    return pd.Series(simhash_batch(content.tolist()), index=content.index)
 
 
 def word_count_col(content_col: str) -> F.Column:

@@ -13,6 +13,7 @@ from search_engine_spark.codec import (
     decode_postings,
     decode_postings_batch,
     encode_postings,
+    encode_postings_batch,
     postings_count,
     weighted_tf,
 )
@@ -120,6 +121,60 @@ def test_batch_decode_sizes_and_extremes():
     assert got_counts.tolist() == [0, 1, 127, 128, 129, 257] == counts
     assert [a.tolist() for a in got] == list(columns)
     assert _INT64_MIN in columns[0] and _INT64_MAX in columns[0]
+
+
+def _encode_each_batched(lists):
+    """encode_postings_batch over the lists concatenated -> per-list
+    (blob, block_max, block_last, block_offset), as encode_postings gives."""
+    cat = lambda k: [v for lst in lists for v in lst[k]]  # noqa: E731
+    df, blobs, bmax, blast, boff = encode_postings_batch(
+        [len(lst[0]) for lst in lists], cat(0), cat(1), cat(2), cat(3)
+    )
+    assert df.tolist() == [len(set(lst[0])) for lst in lists]
+    return [
+        (blobs[i].as_py(), bmax[i].as_py(), blast[i].as_py(), boff[i].as_py())
+        for i in range(len(lists))
+    ]
+
+
+def test_batch_encode_equals_encode_postings():
+    """Runs across block edges, the int64 extremes, frequencies that need
+    multi-byte varints and zero field counts: each run's blob and skip
+    arrays equal encode_postings' for it."""
+    rng = random.Random(11)
+    lists = []
+    for n in (1, 127, 128, 129, 256, 257):
+        ids = {_INT64_MIN, _INT64_MAX} if n > 1 else {_INT64_MAX}
+        while len(ids) < n:
+            ids.add(rng.randint(_INT64_MIN, _INT64_MAX))
+        f = lambda: [rng.choice([0, 0, 1, 127, 2**14, 2**21, 2**40]) for _ in range(n)]  # noqa: E731
+        lists.append((sorted(ids), f(), f(), f()))
+    lists.append(([_INT64_MIN], [0], [0], [0]))
+    assert _encode_each_batched(lists) == [encode_postings(*lst) for lst in lists]
+
+
+@given(st.lists(st.integers(min_value=0, max_value=300), min_size=1, max_size=5), st.integers(0, 2**32))
+@settings(max_examples=40, deadline=None)
+def test_batch_encode_random_runs(sizes, seed):
+    rng = random.Random(seed)
+    lists = [_random_case(rng, n) for n in sizes if n]
+    assert _encode_each_batched(lists) == [encode_postings(*lst) for lst in lists]
+
+
+def test_batch_encode_sums_rows_of_one_doc():
+    """Rows repeating a doc id inside a run are one posting (the field
+    pivot); the same id at the next run's start opens a new posting."""
+    df, blobs, *_ = encode_postings_batch(
+        [3, 2], [5, 5, 9, 9, 12], [1, 0, 0, 0, 0], [0, 2, 0, 4, 0], [0, 3, 7, 0, 1]
+    )
+    assert df.tolist() == [2, 2]
+    assert blobs[0].as_py() == encode_postings([5, 9], [1, 0], [2, 0], [3, 7])[0]
+    assert blobs[1].as_py() == encode_postings([9, 12], [0, 0], [4, 0], [0, 1])[0]
+
+
+def test_batch_encode_empty():
+    df, blobs, bmax, blast, boff = encode_postings_batch([], [], [], [], [])
+    assert df.size == len(blobs) == len(bmax) == len(blast) == len(boff) == 0
 
 
 def test_compression_is_real():

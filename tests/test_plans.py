@@ -6,6 +6,7 @@ plan."""
 import contextlib
 import io
 import os
+import re
 import tempfile
 
 import pytest
@@ -68,6 +69,21 @@ def test_term_stats_plan_is_two_phase_skew_free(spark, built):
     assert "Expand" not in plan, plan
     # partial aggregation precedes both exchanges
     assert plan.count("partial_") >= 2, plan
+
+
+def test_postings_plan_is_one_shuffle_and_batch_encode(spark, built):
+    """One Python call per Arrow batch over (term, shard)-sorted runs, not
+    one per group, and still exactly one shuffle."""
+    from search_engine_spark.operators.postings import build_postings
+
+    tokens = spark.read.parquet(os.path.join(built, "tokens"))
+    plan = _formatted_plan(build_postings(tokens, n_shards=2))
+    assert "FlatMapGroupsInPandas" not in plan, plan
+    assert "MapInArrow" in plan, plan
+    assert len(re.findall(r"^\(\d+\) Exchange$", plan, re.M)) == 1, plan
+    assert "hashpartitioning(term" in plan and "shard" in plan.split(
+        "hashpartitioning(term", 1
+    )[1].split(")", 1)[0], plan
 
 
 def test_search_topk_is_distributed_topk(spark):

@@ -3,10 +3,14 @@
 import pytest
 from pyspark.sql import functions as F
 
-from search_engine_spark.codec import decode_postings
+from search_engine_spark.codec import decode_postings, encode_postings
 from search_engine_spark.corpus import FIXED_NOW, generate_pages, pages_dataframe
 from search_engine_spark.operators.documents import build_documents
-from search_engine_spark.operators.postings import build_postings
+from search_engine_spark.operators.postings import (
+    POSTINGS_SCHEMA,
+    build_postings,
+    shard_col,
+)
 from search_engine_spark.operators.tokens import build_tokens
 
 
@@ -362,3 +366,81 @@ def test_interactive_conf_overlapping_scopes_restore_original(
     # ...and the outer exit restores the TRUE originals, not the profile
     assert conf.get("spark.sql.adaptive.enabled", None) == orig_aqe
     assert conf.get("spark.sql.shuffle.partitions", None) == orig_parts
+
+
+_INT64_MIN, _INT64_MAX = -(2**63), 2**63 - 1
+
+
+def _reference_rows(tokens, n_shards, n_term_buckets):
+    """Each (term, shard) group's row, pivoted and encoded in pure Python
+    by ``codec.encode_postings``; shard and bucket from the Spark columns."""
+    salted = tokens.select(
+        "doc_id",
+        "term",
+        "field",
+        "frequency",
+        shard_col(n_shards).alias("shard"),
+        F.pmod(F.xxhash64("term"), F.lit(n_term_buckets)).cast("int").alias("bucket"),
+    ).collect()
+    groups = {}
+    for r in salted:
+        g = groups.setdefault((r["term"], r["bucket"], r["shard"]), {})
+        fields = g.setdefault(r["doc_id"], {1: 0, 2: 0, 4: 0})
+        fields[r["field"]] += r["frequency"]
+    rows = []
+    for (term, bucket, shard), docs in groups.items():
+        ids = sorted(docs)
+        blob, bmax, blast, boff = encode_postings(
+            ids, *([docs[d][f] for d in ids] for f in (1, 2, 4))
+        )
+        ctf = sum(sum(v.values()) for v in docs.values())
+        rows.append((term, bucket, shard, len(ids), ctf, bmax, blast, boff, blob))
+    return sorted(rows)
+
+
+def _postings_rows(postings):
+    return sorted(
+        (r["term"], r["term_bucket"], r["shard"], r["df"], r["ctf"],
+         r["block_max"], r["block_last"], r["block_offset"], bytes(r["postings"]))
+        for r in postings.collect()
+    )
+
+
+@pytest.mark.parametrize("n_shards", [1, 3])
+def test_build_postings_bytes_equal_reference_encoder(spark, n_shards):
+    """Runs of 1-257 postings (block edges at 128), the int64 extremes,
+    frequencies of 2^14 and more, docs missing fields, several shards, and
+    7-row Arrow batches so every long run crosses many batch edges."""
+    import random
+
+    rng = random.Random(5)
+    rows = []
+    for n in (1, 127, 128, 129, 256, 257):
+        ids = {_INT64_MIN, _INT64_MAX} if n > 1 else {0}
+        while len(ids) < n:
+            ids.add(rng.randint(_INT64_MIN, _INT64_MAX))
+        for doc in ids:
+            rows.append((doc, f"t{n}", 4, rng.choice([1, 2, 2**14, 2**20])))
+            for field in (1, 2):
+                if rng.random() < 0.4:
+                    rows.append((doc, f"t{n}", field, rng.choice([1, 3, 2**14 + 1])))
+    rng.shuffle(rows)
+    tokens = spark.createDataFrame(
+        rows, "doc_id long, term string, field short, frequency int"
+    ).repartition(3)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        got = _postings_rows(build_postings(tokens, n_shards=n_shards, n_term_buckets=8))
+    finally:
+        spark.conf.set(key, before)
+    assert got == _reference_rows(tokens, n_shards, 8)
+    assert {r[2] for r in got} == set(range(n_shards))
+
+
+def test_build_postings_empty_tokens(spark):
+    tokens = spark.createDataFrame([], "doc_id long, term string, field short, frequency int")
+    postings = build_postings(tokens, n_shards=2)
+    assert postings.schema == POSTINGS_SCHEMA
+    assert postings.collect() == []

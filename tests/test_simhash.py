@@ -3,6 +3,7 @@
 from search_engine_spark.simhash_impl import (
     hamming64,
     simhash64,
+    simhash_batch,
     simhash_text,
     to_signed64,
 )
@@ -38,3 +39,19 @@ def test_empty_content():
 def test_duplicate_features_accumulate_weight():
     # Simhash(list) weights duplicates; ordering must not matter
     assert simhash64(["a", "b", "a"]) == simhash64(["a", "a", "b"])
+
+
+def test_simhash_batch_equals_simhash_text():
+    contents = [
+        "spark builds a distributed inverted index today",
+        None,
+        "",
+        "   \t\n",
+        "a a a b b",
+        "b b a a a",
+        "tab\tnew\nline\u3000ideographic\u00a0nbsp\u2003em\x1cfs\x85nel",
+        "héllo wörld 日本語 日本語 日本語 ok",
+        "the quick brown fox jumps over the lazy dog " * 20,
+    ]
+    assert simhash_batch(contents).tolist() == [simhash_text(c) for c in contents]
+    assert simhash_batch([]).tolist() == []
