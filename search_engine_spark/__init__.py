@@ -6,8 +6,9 @@ re-expressed Spark-first:
 
 - input: a ``pages(url, warc_ts, html, text, lang)`` table (parquet/Iceberg)
 - extraction / tokenization: vectorized Arrow (pandas) UDFs, no per-row Python
-- inverted index: term-bucketed postings DataFrames with docID-delta +
-  varint-compressed posting lists and block-max metadata (WAND pruning)
+- inverted index: term-bucketed postings DataFrames with ordinal-delta +
+  varint-compressed posting lists (dense per-shard doc ordinals) and
+  block-max metadata (WAND pruning)
 - statistics: per-term DF/CTF + BM25 idf (Robertson/Lucene formula, matching
   the reference ``bm25_stats.py:21``)
 - link graph + PageRank: iterative DataFrame job (d=0.85, 20 iterations,

@@ -1,22 +1,29 @@
-"""Posting-list codec: docID-delta + varint, block-independent, with
+"""Posting-list codec: ordinal-delta + varint, block-independent, with
 block-max / block-last / block-offset skip metadata.
 
 The Spark-native inverted index stores one row per (term, shard) with a
-binary posting list (north_rule). Blocks of BLOCK_SIZE postings are
-independently decodable so block-max WAND can skip whole blocks without
-touching their bytes:
+binary posting list (north_rule). A posting names its document by ordinal:
+the document's rank by doc id among its shard's documents
+(``operators/postings.py`` numbers them and stores the ordinal -> doc id
+map). Ordinals are dense, so the delta between two postings of a list is
+small and its varint short; the sparse 64-bit doc ids took 8-9 bytes per
+delta. Blocks of BLOCK_SIZE postings are independently decodable so
+block-max WAND can skip whole blocks without touching their bytes:
 
     blob   := varint(n_postings) block*
-    block  := varint(first_docid_unsigned)        # absolute, restarts deltas
-              [varint(docid_delta)] * (block_len - 1)   # interleaved with:
+    block  := varint(first_ordinal)               # absolute, restarts deltas
+              [varint(ordinal_delta)] * (block_len - 1)   # interleaved with:
               per posting: varint(f_title) varint(f_desc) varint(f_body)
+
+Every value is a non-negative integer below 2^63; encoding a negative one
+raises ``ValueError``.
 
 Alongside the blob, three skip arrays (one entry per block) ride in table
 columns so pruning never deserializes the blob:
 
 - ``block_max``  : max weighted tf (3.2*f1 + 1.7*f2 + 1.0*f4) in the block —
   times idf at query time this bounds any doc's contribution (WAND)
-- ``block_last`` : last (signed) doc id in the block — cursor seeks jump
+- ``block_last`` : last ordinal in the block — cursor seeks jump
   straight to the first block whose last >= target
 - ``block_offset``: byte offset of the block in the blob — random access
 
@@ -41,7 +48,6 @@ import numpy as np
 import pyarrow as pa
 
 BLOCK_SIZE = 128
-_U63 = 1 << 63
 
 # field weights, reference search_service.py:22-26
 W_TITLE = 3.2
@@ -50,6 +56,8 @@ W_BODY = 1.0
 
 
 def _write_varint(buf: bytearray, value: int) -> None:
+    if value < 0:
+        raise ValueError(f"varint of a negative value {value}")
     while True:
         b = value & 0x7F
         value >>= 7
@@ -72,43 +80,34 @@ def _read_varint(data: bytes, pos: int) -> tuple[int, int]:
         shift += 7
 
 
-def to_unsigned(doc_id: int) -> int:
-    """int64 doc id -> order-preserving uint64 (add 2^63)."""
-    return doc_id + _U63
-
-
-def to_signed(u: int) -> int:
-    return u - _U63
-
-
 def weighted_tf(ft: int, fd: int, fb: int) -> float:
     """Reference field-weighted frequency (search_service.py:18-27)."""
     return W_TITLE * ft + W_DESC * fd + W_BODY * fb
 
 
 def encode_postings(
-    doc_ids: list[int], f_title: list[int], f_desc: list[int], f_body: list[int]
+    ordinals: list[int], f_title: list[int], f_desc: list[int], f_body: list[int]
 ) -> tuple[bytes, list[float], list[int], list[int]]:
-    """Encode one (term, shard) posting list (doc_ids sorted ascending int64).
+    """Encode one (term, shard) posting list: ``ordinals`` strictly
+    ascending, each in [0, 2^63).
 
     Returns (blob, block_max, block_last, block_offset).
     """
     buf = bytearray()
-    _write_varint(buf, len(doc_ids))
+    _write_varint(buf, len(ordinals))
     block_max: list[float] = []
     block_last: list[int] = []
     block_offset: list[int] = []
     cur_max = 0.0
-    prev_u = 0
-    for i, doc in enumerate(doc_ids):
-        u = to_unsigned(doc)
+    prev = 0
+    for i, doc in enumerate(ordinals):
         if i % BLOCK_SIZE == 0:
             block_offset.append(len(buf))
-            _write_varint(buf, u)  # absolute restart
+            _write_varint(buf, doc)  # absolute restart
             cur_max = 0.0
         else:
-            _write_varint(buf, u - prev_u)
-        prev_u = u
+            _write_varint(buf, doc - prev)
+        prev = doc
         ft, fd, fb = f_title[i], f_desc[i], f_body[i]
         _write_varint(buf, ft)
         _write_varint(buf, fd)
@@ -116,7 +115,7 @@ def encode_postings(
         w = W_TITLE * ft + W_DESC * fd + W_BODY * fb
         if w > cur_max:
             cur_max = w
-        if (i + 1) % BLOCK_SIZE == 0 or i + 1 == len(doc_ids):
+        if (i + 1) % BLOCK_SIZE == 0 or i + 1 == len(ordinals):
             block_max.append(cur_max)
             block_last.append(doc)
     return bytes(buf), block_max, block_last, block_offset
@@ -127,7 +126,7 @@ def decode_block(
 ) -> tuple[list[int], list[int], list[int], list[int]]:
     """Decode one block given its byte offset and posting count."""
     pos = offset
-    doc_ids: list[int] = []
+    ordinals: list[int] = []
     f_title: list[int] = []
     f_desc: list[int] = []
     f_body: list[int] = []
@@ -135,14 +134,14 @@ def decode_block(
     for i in range(n_in_block):
         v, pos = _read_varint(data, pos)
         prev = v if i == 0 else prev + v
-        doc_ids.append(to_signed(prev))
+        ordinals.append(prev)
         ft, pos = _read_varint(data, pos)
         fd, pos = _read_varint(data, pos)
         fb, pos = _read_varint(data, pos)
         f_title.append(ft)
         f_desc.append(fd)
         f_body.append(fb)
-    return doc_ids, f_title, f_desc, f_body
+    return ordinals, f_title, f_desc, f_body
 
 
 def postings_count(data: bytes) -> int:
@@ -161,9 +160,9 @@ def block_length(n_postings: int, block_idx: int, n_blocks: int) -> int:
 def decode_postings(
     data: bytes,
 ) -> tuple[list[int], list[int], list[int], list[int]]:
-    """Decode the whole list -> (doc_ids, f_title, f_desc, f_body)."""
+    """Decode the whole list -> (ordinals, f_title, f_desc, f_body)."""
     n, pos = _read_varint(data, 0)
-    doc_ids: list[int] = []
+    ordinals: list[int] = []
     f_title: list[int] = []
     f_desc: list[int] = []
     f_body: list[int] = []
@@ -171,22 +170,22 @@ def decode_postings(
     for i in range(n):
         v, pos = _read_varint(data, pos)
         prev = v if i % BLOCK_SIZE == 0 else prev + v
-        doc_ids.append(to_signed(prev))
+        ordinals.append(prev)
         ft, pos = _read_varint(data, pos)
         fd, pos = _read_varint(data, pos)
         fb, pos = _read_varint(data, pos)
         f_title.append(ft)
         f_desc.append(fd)
         f_body.append(fb)
-    return doc_ids, f_title, f_desc, f_body
+    return ordinals, f_title, f_desc, f_body
 
 
 def decode_postings_batch(
     blobs: list,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Decode many blobs in one vectorized pass -> (counts, doc_ids, f_title,
+    """Decode many blobs in one vectorized pass -> (counts, ordinals, f_title,
     f_desc, f_body): ``counts[i]`` postings of ``blobs[i]``, and the blobs'
-    postings concatenated in blob order (doc_ids int64, frequencies uint64),
+    postings concatenated in blob order (ordinals int64, frequencies uint64),
     equal to ``decode_postings`` of each blob in turn."""
     buf = np.frombuffer(b"".join(blobs), dtype=np.uint8)
     # a varint ends at its first byte without the continuation bit; byte k
@@ -213,15 +212,14 @@ def decode_postings_batch(
     is_posting[header] = False
     fields = values[is_posting].reshape(-1, 4)
 
-    # doc ids: an absolute value at each block restart, deltas after it;
+    # ordinals: an absolute value at each block restart, deltas after it;
     # the uint64 prefix sums wrap, but every difference of them is exact
     first = np.repeat(np.cumsum(counts) - counts, counts)
     restart = (np.arange(fields.shape[0]) - first) % BLOCK_SIZE == 0
     running = np.cumsum(fields[:, 0])
     block_base = (running - fields[:, 0])[restart]
-    unsigned = running - block_base[np.cumsum(restart) - 1]
-    doc_ids = (unsigned ^ np.uint64(_U63)).view(np.int64)
-    return counts, doc_ids, fields[:, 1], fields[:, 2], fields[:, 3]
+    ordinals = (running - block_base[np.cumsum(restart) - 1]).view(np.int64)
+    return counts, ordinals, fields[:, 1], fields[:, 2], fields[:, 3]
 
 
 def _varints(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -250,31 +248,34 @@ def _varints(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
 
 
 def encode_postings_batch(
-    run_lengths, doc_ids, f_title, f_desc, f_body
+    run_lengths, ordinals, f_title, f_desc, f_body
 ) -> tuple[np.ndarray, pa.BinaryArray, pa.ListArray, pa.ListArray, pa.ListArray]:
     """Encode many posting lists in one vectorized pass, equal to
     ``encode_postings`` of each list in turn.
 
-    List ``r`` is the next ``run_lengths[r]`` rows of ``doc_ids`` (int64)
-    and the three frequency arrays (non-negative int64). A run's rows are
-    sorted by doc id; rows that repeat a doc id are summed into one posting,
-    which pivots one row per (doc, field) into one posting per doc.
+    List ``r`` is the next ``run_lengths[r]`` rows of ``ordinals``
+    (non-negative int64) and the three frequency arrays (non-negative
+    int64). A run's rows are sorted by ordinal; rows that repeat an ordinal
+    are summed into one posting, which pivots one row per (doc, field) into
+    one posting per doc.
 
     Returns ``(df, blobs, block_max, block_last, block_offset)``: ``df[r]``
     postings of list ``r``, the blobs as one ``BinaryArray`` over a single
     buffer, and the three skip arrays as ``ListArray``s, one list per run.
     """
     run_lengths = np.asarray(run_lengths, dtype=np.int64)
-    doc_ids = np.asarray(doc_ids, dtype=np.int64)
+    ordinals = np.asarray(ordinals, dtype=np.int64)
+    if ordinals.size and ordinals.min() < 0:
+        raise ValueError(f"negative ordinal {ordinals.min()}")
     n_runs = run_lengths.size
     row_first = np.cumsum(run_lengths) - run_lengths
 
-    # one posting per (run, doc): rows of a run are sorted by doc id
-    new_posting = np.ones(doc_ids.size, dtype=bool)
-    new_posting[1:] = doc_ids[1:] != doc_ids[:-1]
+    # one posting per (run, doc): rows of a run are sorted by ordinal
+    new_posting = np.ones(ordinals.size, dtype=bool)
+    new_posting[1:] = ordinals[1:] != ordinals[:-1]
     new_posting[row_first] = True
     posting_row = np.flatnonzero(new_posting)
-    docs = doc_ids[posting_row]
+    docs = ordinals[posting_row]
     f1, f2, f4 = (
         np.add.reduceat(np.asarray(f, dtype=np.int64), posting_row)
         for f in (f_title, f_desc, f_body)
@@ -284,20 +285,19 @@ def encode_postings_batch(
     df = np.diff(np.append(post_first, n_post))
     run_of = np.repeat(np.arange(n_runs), df)
 
-    # an absolute unsigned id at each block start, the delta to the previous
-    # posting elsewhere (exact in uint64: ids ascend inside a block)
+    # the ordinal itself at each block start, the delta to the previous
+    # posting elsewhere (ordinals ascend inside a block)
     restart = (np.arange(n_post) - post_first[run_of]) % BLOCK_SIZE == 0
-    unsigned = docs.view(np.uint64) ^ np.uint64(_U63)
-    id_value = unsigned.copy()
-    id_value[1:] -= unsigned[:-1]
-    id_value[restart] = unsigned[restart]
+    id_value = docs.copy()
+    id_value[1:] -= docs[:-1]
+    id_value[restart] = docs[restart]
 
     # blob r is varint(df[r]) then four varints per posting
     header = np.arange(n_runs) + 4 * post_first
     at = run_of + 1 + 4 * np.arange(n_post)
     values = np.empty(n_runs + 4 * n_post, dtype=np.uint64)
     values[header] = df
-    values[at] = id_value
+    values[at] = id_value.view(np.uint64)
     values[at + 1] = f1
     values[at + 2] = f2
     values[at + 3] = f4

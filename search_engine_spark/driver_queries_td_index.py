@@ -741,18 +741,18 @@ FULL OUTER JOIN extw e USING (word)
 
 # --------------------------------------------------------------------------
 # Postings-codec framing parity (north_rule: "per-term docID-delta +
-# varint-compressed posting lists"). The Spark side runs the REAL
-# ``codec.encode_postings`` over each term's posting list (grouped-map
-# Arrow stage, exactly how ``operators/postings.py`` builds the index) and
-# reports per-term framing stats: blob byte length, block count, and
-# checksums of both skip arrays. The oracle recomputes every number from
-# first principles — an exact integer varint-length ladder over the
-# docID-delta stream, 128-posting block restarts (absolute first docid is
-# written order-preserving-unsigned, i.e. +2^63, hence the HUGEINT
-# intermediates — cast away before output per invariant 1), and the three
-# per-posting tf varints (title/desc = 0 here: the documents table is
-# body-only). Agreement proves the compression framing itself, not just
-# decoded query results, without shipping bytes across engines.
+# varint-compressed posting lists"). Both sides number the documents that
+# have tokens by doc_id rank (``dense_rank() OVER (ORDER BY doc_id) - 1``,
+# one shard: the ordinals ``operators/postings.py`` stores). The Spark side
+# runs the REAL ``codec.encode_postings`` over each term's ordinal list
+# (grouped-map Arrow stage) and reports per-term framing stats: blob byte
+# length, block count, and checksums of both skip arrays. The oracle
+# recomputes every number from first principles — an exact integer
+# varint-length ladder over the ordinal-delta stream, 128-posting block
+# restarts (the absolute first ordinal), and the three per-posting tf
+# varints (title/desc = 0 here: the documents table is body-only).
+# Agreement proves the compression framing itself, not just decoded query
+# results, without shipping bytes across engines.
 # --------------------------------------------------------------------------
 def q_postings_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
@@ -767,10 +767,15 @@ def q_postings_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("term"),
     )
     tf = toks.groupBy("term", "doc_id").agg(F.count(F.lit(1)).alias("tf"))
+    ranked = tf.select(
+        "term",
+        (F.dense_rank().over(Window.orderBy("doc_id")) - 1).alias("ordinal"),
+        "tf",
+    )
 
     def encode_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id")
-        ids = [int(d) for d in pdf["doc_id"]]
+        pdf = pdf.sort_values("ordinal")
+        ids = [int(d) for d in pdf["ordinal"]]
         tfs = [int(t) for t in pdf["tf"]]
         zeros = [0] * len(ids)
         blob, block_max, block_last, block_offset = encode_postings(
@@ -794,7 +799,7 @@ def q_postings_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sum_block_max_tf long, sum_block_last long"
     )
     return (
-        tf.groupBy("term")
+        ranked.groupBy("term")
         .applyInPandas(encode_group, out_schema)
         .orderBy("term")
     )
@@ -811,9 +816,8 @@ def _varint_len_sql(expr: str) -> str:
 
 
 def _postings_bytes_sql() -> str:
-    u63 = 1 << 63
-    first_len = _varint_len_sql(f"(CAST(doc_id AS HUGEINT) + {u63})")
-    delta_len = _varint_len_sql("CAST(doc_id - prev AS HUGEINT)")
+    first_len = _varint_len_sql("CAST(ordinal AS HUGEINT)")
+    delta_len = _varint_len_sql("CAST(ordinal - prev AS HUGEINT)")
     tf_len = _varint_len_sql("CAST(tf AS HUGEINT)")
     header_len = _varint_len_sql("CAST(sum(n_in_block) AS HUGEINT)")
     return f"""
@@ -822,14 +826,17 @@ WITH toks AS (
   FROM documents
 ),
 tf AS (SELECT term, doc_id, count(*) AS tf FROM toks GROUP BY term, doc_id),
+ranked AS (
+  SELECT term, dense_rank() OVER (ORDER BY doc_id) - 1 AS ordinal, tf FROM tf
+),
 seq AS (
-  SELECT term, doc_id, tf,
-         row_number() OVER (PARTITION BY term ORDER BY doc_id) - 1 AS i,
-         lag(doc_id) OVER (PARTITION BY term ORDER BY doc_id) AS prev
-  FROM tf
+  SELECT term, ordinal, tf,
+         row_number() OVER (PARTITION BY term ORDER BY ordinal) - 1 AS i,
+         lag(ordinal) OVER (PARTITION BY term ORDER BY ordinal) AS prev
+  FROM ranked
 ),
 per AS (
-  SELECT term, doc_id, tf, i // 128 AS blk,
+  SELECT term, ordinal, tf, i // 128 AS blk,
          (CASE WHEN i % 128 = 0 THEN {first_len} ELSE {delta_len} END)
          + 2 + {tf_len} AS nbytes
   FROM seq
@@ -838,7 +845,7 @@ blk AS (
   SELECT term, blk,
          count(*) AS n_in_block,
          max(tf) AS block_max_tf,
-         max(doc_id) AS block_last,
+         max(ordinal) AS block_last,
          sum(nbytes) AS block_bytes
   FROM per GROUP BY term, blk
 )

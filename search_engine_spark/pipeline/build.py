@@ -56,6 +56,13 @@ from .checkpoints import CheckpointLog, fingerprint, write_json_atomic
 # code's values change for the same inputs (even in the last bits), so a
 # root written by the earlier code rebuilds that table once
 PAGERANK_IMPL = "csr"
+# part of postings' lineage, likewise: the blob format. A root written
+# before postings held per-shard ordinals rebuilds that table once
+POSTINGS_CODEC = "ordinals"
+# no min/max statistics (footer or column index) for the binary blob column:
+# no reader prunes on a blob's bytes, and they held up to half of a small
+# file's footer
+POSTINGS_WRITE_OPTIONS = {"parquet.column.statistics.enabled#postings": "false"}
 
 
 @dataclass
@@ -132,14 +139,14 @@ def _derive_tables(
     # wall at local[16] and more at wider parallelism, where idle waves at
     # stage boundaries cost proportionally more). Stage outputs and their
     # commit markers are disjoint paths, so no write needs a lock.
-    def run_stage(name: str, fp: str, producer, partition_by=None) -> None:
+    def run_stage(name: str, fp: str, producer, partition_by=None, options=None) -> None:
         out_path = os.path.join(out_root, name)
         if log.is_complete(name, fp, out_path):
             result.stages_skipped.append(name)
         else:
             log.clear(name)
             t0 = time.perf_counter()
-            io.replace(producer(), name, partition_by=partition_by)
+            io.replace(producer(), name, partition_by=partition_by, options=options)
             log.record(name, fp, out_path, int((time.perf_counter() - t0) * 1000))
             result.stages_run.append(name)
         result.tables[name] = out_path
@@ -188,7 +195,12 @@ def _derive_tables(
     shards = n_shards if f_count is None else n_shards_for(f_count.result())
     fp_post = fingerprint(
         "postings",
-        {**lineage, "n_shards": shards, "n_term_buckets": n_term_buckets},
+        {
+            **lineage,
+            "n_shards": shards,
+            "n_term_buckets": n_term_buckets,
+            "codec": POSTINGS_CODEC,
+        },
         [fp_tokens],
     )
     fp_pr = fingerprint(
@@ -219,6 +231,7 @@ def _derive_tables(
                     tokens, n_shards=shards, n_term_buckets=n_term_buckets
                 ),
                 ["term_bucket"],
+                POSTINGS_WRITE_OPTIONS,
             ),
             pool.submit(
                 run_stage,

@@ -6,10 +6,14 @@ serving index) is served from driver memory. ``__init__`` builds, once:
 - each document's dense ordinal: its rank in url order, so comparing
   ordinals is comparing urls;
 - per term, the ordinals of its postings and each posting's baked
-  contribution ``idf * weighted_tf`` (idf 1.0 for a term missing from
-  term_statistics), the blobs decoded in a few vectorized passes
-  (``codec.decode_postings_batch``); a posting whose doc is missing from
-  documents is dropped;
+  contribution ``idf * weighted_tf``, the blobs decoded in a few
+  vectorized passes (``codec.decode_postings_batch``). idf is
+  ``term_stats.idf_py`` of the documents collected and the term's
+  ``doc_frequency``, as the oracle computes it (1.0 for a term missing from
+  term_statistics). A blob holds shard ordinals: each shard's map row
+  (``operators/postings.py``) turns them into url ordinals, with one lookup
+  per document and one gather per posting; a posting whose doc is missing
+  from documents is dropped;
 - per ordinal, the document's (title, description, url) and the fields the
   intent re-rank reads (``intent.doc_fields``).
 
@@ -30,9 +34,11 @@ An unpinned engine plans the same steps as Spark jobs (SURVEY.md §3.1
 "Spark rebuild"):
 
 1. driver: collect the <= |terms| idf rows (broadcast-scale).
-2. scan postings WHERE term IN (...) — partition-prunes on term_bucket when
-   the table is written partitioned, plus parquet min/max skipping on term.
-3. groupBy(shard) -> applyInPandas: shard-local block-max WAND top-k.
+2. scan postings WHERE term IN (..., MAP_TERM) — the query terms' rows and
+   each shard's ordinal map row; partition-prunes on term_bucket when the
+   table is written partitioned, plus parquet min/max skipping on term.
+3. groupBy(shard) -> applyInPandas: shard-local block-max WAND top-k over
+   ordinals, mapped back to doc ids through the shard's map row.
    Each shard emits <= candidate_limit rows (+boundary ties).
 4. join document metadata on the surviving <= k * n_shards rows only, then
    global TakeOrderedAndProject by (token_score DESC, url ASC).
@@ -44,6 +50,7 @@ exact (any doc in the global top-k is in its shard's top-k).
 
 from __future__ import annotations
 
+import bisect
 import itertools
 import threading
 from contextlib import contextmanager
@@ -56,6 +63,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..codec import BLOCK_SIZE, W_BODY, W_DESC, W_TITLE, decode_postings_batch
+from ..operators.postings import MAP_TERM, map_ids, ordinal_maps
+from ..operators.term_stats import idf_py
 from .analysis import QueryContext, search_context
 from .intent import doc_fields, intent_score_fields, rerank
 from .search import SearchResponse, SearchResult
@@ -88,7 +97,12 @@ _CANDIDATE_SCHEMA = T.StructType(
 
 
 def _make_shard_scorer(idf_by_term: dict, k: int, acc_decoded=None, acc_total=None):
+    """One shard's rows (its query terms' and its ordinal map row) ->
+    WAND top-k candidates, their ordinals mapped back to doc ids."""
+
     def scorer(pdf: pd.DataFrame) -> pd.DataFrame:
+        is_map = pdf["term"] == MAP_TERM
+        doc_ids = map_ids(bytes(pdf["postings"][is_map].iloc[0]))
         entries = [
             TermPostings(
                 term=r.term,
@@ -98,7 +112,7 @@ def _make_shard_scorer(idf_by_term: dict, k: int, acc_decoded=None, acc_total=No
                 block_last=list(r.block_last),
                 block_offset=list(r.block_offset),
             )
-            for r in pdf.itertuples()
+            for r in pdf[~is_map].itertuples()
         ]
         stats: dict = {}
         rows = score_shard_wand(entries, k, stats)
@@ -111,9 +125,13 @@ def _make_shard_scorer(idf_by_term: dict, k: int, acc_decoded=None, acc_total=No
                  "token_score": pd.Series(dtype="float64"),
                  "matched_terms": pd.Series(dtype="int32")}
             )
-        docs, scores, matched = zip(*rows)
+        ordinals, scores, matched = zip(*rows)
         return pd.DataFrame(
-            {"doc_id": docs, "token_score": scores, "matched_terms": matched}
+            {
+                "doc_id": doc_ids[list(ordinals)],
+                "token_score": scores,
+                "matched_terms": matched,
+            }
         )
 
     return scorer
@@ -275,10 +293,12 @@ class PostingsSearchEngine:
         # filter itself then prunes row groups via parquet min/max. Only
         # applied when the build's modulus is known — a mismatched modulus
         # would silently drop valid partitions.
-        term_filter = F.col("term").isin(terms)
+        # each shard's ordinal map row rides along with its query terms' rows
+        scan_terms = [*terms, MAP_TERM]
+        term_filter = F.col("term").isin(scan_terms)
         if self.n_term_buckets is not None:
             term_filter = (
-                F.col("term_bucket").isin(self._query_buckets(terms)) & term_filter
+                F.col("term_bucket").isin(self._query_buckets(scan_terms)) & term_filter
             )
         hits = self.postings.filter(term_filter).select(
             "shard", "term", "block_max", "block_last", "block_offset", "postings"
@@ -387,31 +407,57 @@ class _PinnedIndex:
         self.fields = [doc_fields(*d) for d in self.docs]
         ordinal_ids = docs.column("doc_id").to_numpy()
 
-        stats = term_statistics.select("term", "idf").toArrow()
-        idf = dict(zip(stats.column("term").to_pylist(), stats.column("idf").to_pylist()))
+        # idf as the oracle computes it, from N and df (term_stats.idf_py)
+        doc_total = len(self.docs) or 1
+        stats = term_statistics.select("term", "doc_frequency").toArrow()
+        idf = {
+            t: idf_py(doc_total, df)
+            for t, df in zip(
+                stats.column("term").to_pylist(), stats.column("doc_frequency").to_pylist()
+            )
+        }
         lists = (
             postings.select("term", "shard", "postings")
             .toArrow()
             .sort_by([("term", "ascending"), ("shard", "ascending")])
         )
         terms = lists.column("term").to_pylist()
-        row_idf = np.array([idf.get(t, 1.0) for t in terms], dtype=np.float64)
+        shards = lists.column("shard").to_numpy()
         blobs = lists.column("postings")
-        sizes = pc.binary_length(blobs).to_numpy(zero_copy_only=False)
+        # MAP_TERM sorts first: rows [0, n_maps) are the shards' ordinal maps.
+        # Each shard ordinal maps to its document's url ordinal, or -1 for an
+        # orphan (a map id missing from documents; one past every document's
+        # id lands at searchsorted's end): one lookup per document
+        n_maps = bisect.bisect_right(terms, MAP_TERM)
+        base, map_doc_ids = ordinal_maps(
+            shards[:n_maps].tolist(), blobs[:n_maps].to_pylist()
+        )
         by_id = np.argsort(ordinal_ids)
         sorted_ids = ordinal_ids[by_id]
+        pos = np.searchsorted(sorted_ids, map_doc_ids)
+        found = pos < sorted_ids.size
+        found[found] = sorted_ids[pos[found]] == map_doc_ids[found]
+        url_ord = np.full(pos.size, -1, dtype=np.int64)
+        url_ord[found] = by_id[pos[found]]
+
+        terms, shards, blobs = terms[n_maps:], shards[n_maps:], blobs[n_maps:]
+        missing = set(shards.tolist()) - base.keys()
+        if missing:
+            raise ValueError(f"postings shards {sorted(missing)} have no ordinal map row")
+        row_base = np.array([base[s] for s in shards.tolist()], dtype=np.int64)
+        row_idf = np.array([idf.get(t, 1.0) for t in terms], dtype=np.float64)
+        sizes = pc.binary_length(blobs).to_numpy(zero_copy_only=False)
         ords, contrib = [np.empty(0, np.int32)], [np.empty(0)]
         kept, blocks = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
         for a, b in _row_batches(sizes, _DECODE_BATCH_BYTES):
-            counts, doc_ids, f1, f2, f4 = decode_postings_batch(blobs[a:b].to_pylist())
-            # doc_id -> ordinal; a doc_id past every document's id lands at
-            # searchsorted's end and is dropped with the other orphans
-            pos = np.searchsorted(sorted_ids, doc_ids)
-            found = pos < sorted_ids.size
-            found[found] = sorted_ids[pos[found]] == doc_ids[found]
+            counts, ordinals, f1, f2, f4 = decode_postings_batch(blobs[a:b].to_pylist())
+            row = np.repeat(np.arange(b - a), counts)
+            # shard ordinal -> url ordinal: one gather per posting
+            doc = url_ord[row_base[a:b][row] + ordinals]
+            found = doc >= 0
             weighted = W_TITLE * f1[found] + W_DESC * f2[found] + W_BODY * f4[found]
-            row = np.repeat(np.arange(b - a), counts)[found]
-            ords.append(by_id[pos[found]].astype(np.int32))
+            row = row[found]
+            ords.append(doc[found].astype(np.int32))
             contrib.append(row_idf[a:b][row] * weighted)
             kept.append(np.bincount(row, minlength=b - a))
             blocks.append(-(-counts // BLOCK_SIZE))

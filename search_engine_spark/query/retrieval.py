@@ -12,9 +12,11 @@ Spark plan (deliberately):
 - idf lookup: the per-query term-stats slice is at most ``len(query_terms)``
   rows — broadcast it; COALESCE(idf, 1.0) keeps terms missing from the stats
   table scoring at 1.0 (``search_service.py:21``).
-- per-doc aggregation: hash agg; Catalyst plans partial (map-side) + final
-  automatically, so the shuffle carries one row per (doc, partition) not one
-  per token row.
+- per-doc aggregation: each doc's matching token rows are collected, sorted
+  by (term, field) and folded in that order (``aggregate``), the order the
+  oracle sums in (CLAUDE.md invariant 4): an order-unspecified ``SUM`` could
+  score two docs with the same frequencies differently in the last bit, and
+  split a tie that the url decides.
 - top-k: orderBy + limit compiles to TakeOrderedAndProject — per-partition
   heap top-k then a single reduce; no global sort materializes. Tie-break
   (token_score DESC, url ASC) is part of rank identity.
@@ -54,17 +56,28 @@ def score_candidates(
         term_statistics.filter(F.col("term").isin(terms)).select("term", "idf")
     )
 
+    contribution = (
+        F.col("frequency").cast("double")
+        * F.coalesce(F.col("idf"), F.lit(1.0))
+        * field_weight_col()
+    )
     scored = (
         tokens.filter(F.col("term").isin(terms))
         .join(query_stats, "term", "left")
         .groupBy("doc_id")
         .agg(
-            F.sum(
-                F.col("frequency").cast("double")
-                * F.coalesce(F.col("idf"), F.lit(1.0))
-                * field_weight_col()
-            ).alias("token_score"),
-            F.countDistinct("term").alias("matched_terms"),
+            F.array_sort(
+                F.collect_list(F.struct("term", "field", contribution.alias("c")))
+            ).alias("rows")
+        )
+        .select(
+            "doc_id",
+            F.aggregate("rows", F.lit(0.0), lambda acc, r: acc + r["c"]).alias(
+                "token_score"
+            ),
+            F.size(F.array_distinct(F.transform("rows", lambda r: r["term"])))
+            .cast("long")
+            .alias("matched_terms"),
         )
     )
 

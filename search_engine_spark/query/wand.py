@@ -4,7 +4,8 @@ Runs inside one executor task per shard (document-partitioned search): every
 query term's posting list for the shard's doc range is available locally, so
 classic DAAT WAND applies, with block-level skipping powered by the codec's
 skip arrays (block_max / block_last / block_offset) — pruned blocks are never
-deserialized.
+deserialized. A doc is named by its shard ordinal, as the codec stores it;
+the caller maps ordinals to doc ids through the shard's map row.
 
 Scoring matches the reference exactly: contribution of term t to doc d is
 ``idf(t) * (3.2*f_title + 1.7*f_desc + 1.0*f_body)`` with idf defaulting to
@@ -172,7 +173,7 @@ class _Cursor:
 
 
 def score_shard_exhaustive(entries: list) -> dict:
-    """Decode-everything scorer -> {doc_id: (score, matched_terms)}."""
+    """Decode-everything scorer -> {ordinal: (score, matched_terms)}."""
     from ..codec import decode_postings
 
     acc: dict = {}
@@ -190,7 +191,7 @@ def score_shard_exhaustive(entries: list) -> dict:
 
 
 def score_shard_wand(entries: list, k: int, stats: dict | None = None) -> list:
-    """Block-max WAND top-k -> [(doc_id, score, matched_terms)], every doc
+    """Block-max WAND top-k -> [(ordinal, score, matched_terms)], every doc
     scoring >= the kth score included (boundary ties preserved).
 
     ``stats`` (optional dict) accumulates ``blocks_decoded`` and

@@ -64,8 +64,15 @@ class TableIO:
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         raise NotImplementedError
 
-    def replace(self, df: DataFrame, table: str, partition_by: list[str] | None = None) -> None:
-        """TRUNCATE+rebuild (S7): atomically swap the table's contents."""
+    def replace(
+        self,
+        df: DataFrame,
+        table: str,
+        partition_by: list[str] | None = None,
+        options: dict[str, str] | None = None,
+    ) -> None:
+        """TRUNCATE+rebuild (S7): atomically swap the table's contents.
+        ``options`` are writer options (e.g. parquet settings)."""
         raise NotImplementedError
 
     def append(self, df: DataFrame, table: str) -> None:
@@ -118,8 +125,14 @@ class ParquetIO(TableIO):
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         return spark.read.parquet(self._path(table))
 
-    def replace(self, df: DataFrame, table: str, partition_by: list[str] | None = None) -> None:
-        w = df.write.mode("overwrite")
+    def replace(
+        self,
+        df: DataFrame,
+        table: str,
+        partition_by: list[str] | None = None,
+        options: dict[str, str] | None = None,
+    ) -> None:
+        w = df.write.mode("overwrite").options(**(options or {}))
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(self._path(table))
@@ -212,8 +225,16 @@ class IcebergIO(TableIO):
             )
         return spark.read.table(self._ident(table))
 
-    def replace(self, df: DataFrame, table: str, partition_by: list[str] | None = None) -> None:
+    def replace(
+        self,
+        df: DataFrame,
+        table: str,
+        partition_by: list[str] | None = None,
+        options: dict[str, str] | None = None,
+    ) -> None:
         w = df.writeTo(self._ident(table)).using("iceberg")
+        for k, v in (options or {}).items():
+            w = w.option(k, v)
         if partition_by:
             w = w.partitionedBy(*[F.col(c) for c in partition_by])
         w.createOrReplace()

@@ -1,7 +1,11 @@
-"""Varint/delta postings codec: round-trip + skip-metadata properties."""
+"""Varint/delta postings codec: round-trip + skip-metadata properties.
+
+A posting list holds ordinals: non-negative, below 2^63."""
 
 import math
 import random
+
+import pytest
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -22,7 +26,7 @@ from search_engine_spark.codec import (
 def _random_case(rng, n):
     ids = set()
     while len(ids) < n:
-        ids.add(rng.randint(-(2**63), 2**63 - 1))
+        ids.add(rng.randint(0, 2**63 - 1))
     doc_ids = sorted(ids)
     f = lambda: [rng.randint(0, 5000) for _ in range(n)]  # noqa: E731
     return doc_ids, f(), f(), f()
@@ -61,25 +65,41 @@ def test_empty():
 
 
 def test_extreme_doc_ids():
-    ids = [-(2**63), -1, 0, 1, 2**63 - 1]
+    """The ordinal range's ends: 0 and 2^63 - 1 (a 9-byte varint)."""
+    ids = [0, 1, 2, 2**62, 2**63 - 1]
     one = [1] * 5
     blob, _, blast, _ = encode_postings(ids, one, one, one)
     assert decode_postings(blob)[0] == ids
     assert blast == [2**63 - 1]
 
 
-_INT64_MIN, _INT64_MAX = -(2**63), 2**63 - 1
+def test_negative_values_raise():
+    """A negative ordinal (or a list out of order, a negative delta) raises
+    rather than looping in the varint writer."""
+    one = [1]
+    with pytest.raises(ValueError):
+        encode_postings([-1], one, one, one)
+    with pytest.raises(ValueError):
+        encode_postings([5, 3], [1, 1], [1, 1], [1, 1])
+    with pytest.raises(ValueError):
+        encode_postings([3], one, one, [-2])
+    with pytest.raises(ValueError):
+        encode_postings_batch([2], [3, -1], [1, 1], [1, 1], [1, 1])
+
+
+_ORD_MIN, _ORD_MAX = 0, 2**63 - 1
 
 
 @st.composite
 def _posting_blob(draw):
-    """One encoded list: 0-257 postings across block boundaries, the int64
-    extremes (10-byte varints) when drawn, zero frequencies among others."""
+    """One encoded list: 0-257 postings across block boundaries, the
+    ordinal extremes (a 9-byte varint) when drawn, zero frequencies among
+    others."""
     n = draw(st.sampled_from([0, 1, 127, 128, 129, 257]))
     rng = random.Random(draw(st.integers(min_value=0, max_value=2**32)))
-    ids = set(draw(st.sets(st.sampled_from([_INT64_MIN, _INT64_MAX]))))
+    ids = set(draw(st.sets(st.sampled_from([_ORD_MIN, _ORD_MAX]))))
     while len(ids) < n:
-        ids.add(rng.randint(_INT64_MIN, _INT64_MAX))
+        ids.add(rng.randint(_ORD_MIN, _ORD_MAX))
     doc_ids = sorted(ids)[:n]
     f = lambda: [rng.choice([0, 0, 1, 127, 128, 5000, 2**35]) for _ in doc_ids]  # noqa: E731
     return encode_postings(doc_ids, f(), f(), f())[0]
@@ -110,9 +130,9 @@ def test_batch_decode_sizes_and_extremes():
     rng = random.Random(7)
     blobs = []
     for n in (0, 1, 127, 128, 129, 257):
-        ids = {_INT64_MIN, _INT64_MAX} if n > 1 else {_INT64_MAX} if n else set()
+        ids = {_ORD_MIN, _ORD_MAX} if n > 1 else {_ORD_MAX} if n else set()
         while len(ids) < n:
-            ids.add(rng.randint(_INT64_MIN, _INT64_MAX))
+            ids.add(rng.randint(_ORD_MIN, _ORD_MAX))
         ids = sorted(ids)
         zeros = [0] * n
         blobs.append(encode_postings(ids, zeros, [1] * n, zeros)[0])
@@ -120,7 +140,7 @@ def test_batch_decode_sizes_and_extremes():
     got_counts, *got = decode_postings_batch(blobs)
     assert got_counts.tolist() == [0, 1, 127, 128, 129, 257] == counts
     assert [a.tolist() for a in got] == list(columns)
-    assert _INT64_MIN in columns[0] and _INT64_MAX in columns[0]
+    assert _ORD_MIN in columns[0] and _ORD_MAX in columns[0]
 
 
 def _encode_each_batched(lists):
@@ -138,18 +158,18 @@ def _encode_each_batched(lists):
 
 
 def test_batch_encode_equals_encode_postings():
-    """Runs across block edges, the int64 extremes, frequencies that need
-    multi-byte varints and zero field counts: each run's blob and skip
+    """Runs across block edges, ordinals 0 and 2^63 - 1, frequencies that
+    need multi-byte varints and zero field counts: each run's blob and skip
     arrays equal encode_postings' for it."""
     rng = random.Random(11)
     lists = []
     for n in (1, 127, 128, 129, 256, 257):
-        ids = {_INT64_MIN, _INT64_MAX} if n > 1 else {_INT64_MAX}
+        ids = {_ORD_MIN, _ORD_MAX} if n > 1 else {_ORD_MAX}
         while len(ids) < n:
-            ids.add(rng.randint(_INT64_MIN, _INT64_MAX))
+            ids.add(rng.randint(_ORD_MIN, _ORD_MAX))
         f = lambda: [rng.choice([0, 0, 1, 127, 2**14, 2**21, 2**40]) for _ in range(n)]  # noqa: E731
         lists.append((sorted(ids), f(), f(), f()))
-    lists.append(([_INT64_MIN], [0], [0], [0]))
+    lists.append(([_ORD_MIN], [0], [0], [0]))
     assert _encode_each_batched(lists) == [encode_postings(*lst) for lst in lists]
 
 
@@ -188,9 +208,9 @@ def test_compression_is_real():
 # ---------------------------------------------------------------------------
 # Byte-length formula parity: the postings_bytes pair's DuckDB oracle
 # recomputes blob sizes from an integer varint-length ladder. Prove (a) the
-# framing formula matches the real encoder for arbitrary signed ids and tf
+# framing formula matches the real encoder for arbitrary ordinals and tf
 # streams, and (b) the SQL ladder text itself is exact at every 2^(7k)
-# boundary, including the HUGEINT range used for block-restart ids.
+# boundary, up to the top of the uint64 range.
 # ---------------------------------------------------------------------------
 def _vlen(v: int) -> int:
     assert v >= 0
@@ -199,11 +219,10 @@ def _vlen(v: int) -> int:
 
 def _formula_bytes(doc_ids, f1, f2, f4):
     total = _vlen(len(doc_ids))
-    prev_u = 0
+    prev = 0
     for i, d in enumerate(doc_ids):
-        u = d + 2**63
-        total += _vlen(u) if i % BLOCK_SIZE == 0 else _vlen(u - prev_u)
-        prev_u = u
+        total += _vlen(d) if i % BLOCK_SIZE == 0 else _vlen(d - prev)
+        prev = d
         total += _vlen(f1[i]) + _vlen(f2[i]) + _vlen(f4[i])
     return total
 

@@ -116,6 +116,53 @@ def test_pagerank_impl_change_rebuilds_only_document_authority(
     )
 
 
+def test_postings_codec_change_rebuilds_only_postings(
+    spark, pages, clean_build, tmp_path_factory, monkeypatch
+):
+    """A root whose postings were written in another blob format rebuilds
+    that one table, and keeps every other stage."""
+    root, _ = clean_build
+    copy = str(tmp_path_factory.mktemp("postings_codec"))
+    shutil.rmtree(copy)
+    shutil.copytree(root, copy)
+    monkeypatch.setattr(build_module, "POSTINGS_CODEC", "doc-ids")
+    r = build_index(
+        spark, pages, copy, FIXED_NOW, n_shards=2, pagerank_iterations=PR_ITERS
+    )
+    assert r.stages_run == ["postings"]
+    monkeypatch.undo()
+    r = build_index(
+        spark, pages, copy, FIXED_NOW, n_shards=2, pagerank_iterations=PR_ITERS
+    )
+    assert r.stages_run == ["postings"]
+    assert _table_snapshot(spark, copy, "postings") == _table_snapshot(
+        spark, root, "postings"
+    )
+
+
+def test_postings_blob_column_keeps_no_statistics(clean_build):
+    """No min/max statistics for the binary ``postings`` column, neither in
+    the footer nor as a column index; the other columns keep theirs."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    root, _ = clean_build
+    files = glob.glob(os.path.join(root, "postings", "term_bucket=*", "*.parquet"))
+    assert files
+    for path in files:
+        meta = pq.ParquetFile(path).metadata
+        for g in range(meta.num_row_groups):
+            group = meta.row_group(g)
+            columns = {
+                group.column(c).path_in_schema: group.column(c)
+                for c in range(group.num_columns)
+            }
+            assert not columns["postings"].is_stats_set, path
+            assert not columns["postings"].has_column_index, path
+            assert columns["term"].is_stats_set, path
+
+
 def test_crash_before_marker_reruns_the_stage(
     spark, pages, clean_build, tmp_path_factory, monkeypatch
 ):

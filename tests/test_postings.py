@@ -7,10 +7,13 @@ from search_engine_spark.codec import decode_postings, encode_postings
 from search_engine_spark.corpus import FIXED_NOW, generate_pages, pages_dataframe
 from search_engine_spark.operators.documents import build_documents
 from search_engine_spark.operators.postings import (
+    MAP_TERM,
     POSTINGS_SCHEMA,
     build_postings,
+    map_ids,
     shard_col,
 )
+from search_engine_spark.operators.term_stats import idf_py
 from search_engine_spark.operators.tokens import build_tokens
 
 
@@ -31,11 +34,25 @@ def _expected_matrix(tokens):
     return want
 
 
+def _shard_maps(postings_rows):
+    """shard -> its doc ids by ordinal, from the MAP_TERM rows."""
+    return {
+        r["shard"]: map_ids(bytes(r["postings"])).tolist()
+        for r in postings_rows
+        if r["term"] == MAP_TERM
+    }
+
+
 def _decode_table(postings_rows):
+    """Every term's postings, ordinals mapped to doc ids through the map."""
+    maps = _shard_maps(postings_rows)
     got = {}
     order_ok = True
     for r in sorted(postings_rows, key=lambda r: (r["term"], r["shard"])):
-        ids, f1, f2, f4 = decode_postings(bytes(r["postings"]))
+        if r["term"] == MAP_TERM:
+            continue
+        ordinals, f1, f2, f4 = decode_postings(bytes(r["postings"]))
+        ids = [maps[r["shard"]][o] for o in ordinals]
         assert ids == sorted(ids)
         assert r["df"] == len(ids)
         assert len(r["block_max"]) == len(r["block_last"]) == len(r["block_offset"])
@@ -85,8 +102,33 @@ def test_ctf_matches_tokens(built):
     rows = build_postings(tokens, n_shards=3).collect()
     got = {}
     for r in rows:
-        got[r["term"]] = got.get(r["term"], 0) + r["ctf"]
+        if r["term"] != MAP_TERM:
+            got[r["term"]] = got.get(r["term"], 0) + r["ctf"]
     assert got == want
+
+
+def test_one_ordinal_map_row_per_shard(built):
+    """Each shard has one MAP_TERM row: df = ctf = 0, empty skip arrays, and
+    the shard's token doc ids, each once, ascending (ordinal = rank)."""
+    _, tokens = built
+    want = {}
+    for r in tokens.select(shard_col(3).alias("shard"), "doc_id").distinct().collect():
+        want.setdefault(r["shard"], []).append(r["doc_id"])
+    rows = [r for r in build_postings(tokens, n_shards=3).collect() if r["term"] == MAP_TERM]
+    assert sorted(r["shard"] for r in rows) == sorted(want) == [0, 1, 2]
+    for r in rows:
+        assert (r["df"], r["ctf"]) == (0, 0)
+        assert r["block_max"] == r["block_last"] == r["block_offset"] == []
+        assert map_ids(bytes(r["postings"])).tolist() == sorted(want[r["shard"]])
+
+
+def test_build_postings_rejects_the_map_term(spark):
+    tokens = spark.createDataFrame(
+        [(1, "alpha", 4, 1), (2, MAP_TERM, 4, 1)],
+        "doc_id long, term string, field short, frequency int",
+    )
+    with pytest.raises(ValueError, match="reserved term"):
+        build_postings(tokens, n_shards=1)
 
 
 def _top_terms(term_stats, n):
@@ -192,6 +234,7 @@ def _wand_search(postings_rows, docs_by_id, idf, q, limit, offset):
     from search_engine_spark.query.wand import TermPostings, score_shard_wand
 
     ctx = search_context(q, limit, offset)
+    maps = _shard_maps(postings_rows)
     by_shard = {}
     for r in postings_rows:
         if r["term"] in ctx.query_terms:
@@ -206,10 +249,10 @@ def _wand_search(postings_rows, docs_by_id, idf, q, limit, offset):
                 )
             )
     candidates = [
-        (*docs_by_id[d], s, m)
-        for entries in by_shard.values()
-        for d, s, m in score_shard_wand(entries, ctx.candidate_limit)
-        if d in docs_by_id
+        (*docs_by_id[maps[shard][o]], s, m)
+        for shard, entries in by_shard.items()
+        for o, s, m in score_shard_wand(entries, ctx.candidate_limit)
+        if maps[shard][o] in docs_by_id
     ]
     candidates.sort(key=lambda c: (-c[3], c[2]))
     ranked = sorted(
@@ -227,6 +270,15 @@ def _answer(resp):
     return [(r.title, r.description, r.url, r.score) for r in resp.results], resp.count
 
 
+def _oracle_idf(docs, term_stats):
+    """idf as the oracle computes it: idf_py of N documents and df."""
+    n = docs.count() or 1
+    return {
+        r["term"]: idf_py(n, r["doc_frequency"])
+        for r in term_stats.select("term", "doc_frequency").collect()
+    }
+
+
 def test_pinned_search_equals_wand_and_intent_score(
     docs, postings3, term_stats, pinned_engine, monkeypatch
 ):
@@ -238,7 +290,7 @@ def test_pinned_search_equals_wand_and_intent_score(
     monkeypatch.setattr(PS, "_DECODE_BATCH_BYTES", 512)
     batched = PS.PostingsSearchEngine(docs, postings3, term_stats, pin_shard_layout=True)
     postings_rows = postings3.collect()
-    idf = {r["term"]: r["idf"] for r in term_stats.select("term", "idf").collect()}
+    idf = _oracle_idf(docs, term_stats)
     docs_by_id = {
         r[0]: (r[1], r[2], r[3])
         for r in docs.select("doc_id", "title", "description", "url").collect()
@@ -259,12 +311,40 @@ def test_pinned_search_equals_wand_and_intent_score(
         assert _answer(batched.search(q, limit, offset)) == want, q
 
 
+def test_pinned_idf_is_idf_py_of_doc_frequency(docs, postings3, term_stats, pinned_engine):
+    """Every term's baked contributions are idf_py(N, df) * weighted_tf of
+    its postings, in (shard, ordinal) order: the oracle's idf, not Spark's
+    ``ln``, which is one ulp off it for some terms."""
+    from search_engine_spark.codec import weighted_tf
+
+    idf = _oracle_idf(docs, term_stats)
+    doc_ids = {r[0] for r in docs.select("doc_id").collect()}
+    rows = postings3.collect()
+    maps = _shard_maps(rows)
+    want = {}
+    for r in sorted(rows, key=lambda r: (r["term"], r["shard"])):
+        if r["term"] == MAP_TERM:
+            continue
+        ordinals, f1, f2, f4 = decode_postings(bytes(r["postings"]))
+        want.setdefault(r["term"], []).extend(
+            idf[r["term"]] * weighted_tf(f1[i], f2[i], f4[i])
+            for i, o in enumerate(ordinals)
+            if maps[r["shard"]][o] in doc_ids
+        )
+    index = pinned_engine._pinned
+    assert index.by_term.keys() == want.keys()
+    for term, contrib in want.items():
+        lo, hi, _ = index.by_term[term]
+        assert index.contrib[lo:hi].tolist() == contrib, term
+
+
 def _tiny_pinned_engine(spark):
     """Four documents and two terms over two shards. ``alpha`` has orphan
-    postings (doc ids with no document): one between the documents' ids and
+    postings (map ids with no document): one between the documents' ids and
     one past all of them. ``omega`` has no term_statistics row. Documents 9
     and 11 hold the largest doc id and url and never contain ``alpha``."""
-    from search_engine_spark.codec import encode_postings
+    import numpy as np
+
     from search_engine_spark.query.postings_search import PostingsSearchEngine
 
     docs = [
@@ -279,11 +359,16 @@ def _tiny_pinned_engine(spark):
         ("omega", 0): {3: (0, 0, 1)},
         ("omega", 1): {9: (1, 1, 3)},
     }
-    rows = []
+    maps = {0: [-7, 3, 5], 1: [9, 2**62]}
+    rows = [
+        (MAP_TERM, shard, [], [], [], np.array(ids, "<i8").tobytes())
+        for shard, ids in maps.items()
+    ]
     for (term, shard), postings in sorted(lists.items()):
         ids = sorted(postings)
         blob, block_max, block_last, block_offset = encode_postings(
-            ids, *([postings[d][i] for d in ids] for i in range(3))
+            [maps[shard].index(d) for d in ids],
+            *([postings[d][i] for d in ids] for i in range(3)),
         )
         rows.append((term, shard, block_max, block_last, block_offset, blob))
     postings = spark.createDataFrame(
@@ -291,7 +376,7 @@ def _tiny_pinned_engine(spark):
         "term string, shard int, block_max array<double>, block_last array<bigint>, "
         "block_offset array<int>, postings binary",
     )
-    stats = spark.createDataFrame([("alpha", 0.75)], "term string, idf double")
+    stats = spark.createDataFrame([("alpha", 2)], "term string, doc_frequency bigint")
     documents = spark.createDataFrame(
         docs, "doc_id bigint, title string, description string, url string"
     )
@@ -300,9 +385,10 @@ def _tiny_pinned_engine(spark):
 
 
 def test_pinned_drops_orphan_postings_and_defaults_idf(spark):
-    """An orphan posting past every doc id (searchsorted's end of array) is
-    dropped, not mapped onto the last ordinal; a term missing from
-    term_statistics scores with idf 1.0."""
+    """Orphan postings (a map id between the documents' ids, and one past
+    every doc id, at searchsorted's end of array) are dropped, not mapped
+    onto a neighbouring document; a term missing from term_statistics
+    scores with idf 1.0, and alpha's idf is idf_py(4 documents, df 2)."""
     from search_engine_spark.codec import weighted_tf
 
     engine, postings_rows, docs_by_id = _tiny_pinned_engine(spark)
@@ -318,7 +404,7 @@ def test_pinned_drops_orphan_postings_and_defaults_idf(spark):
     lo, hi, _ = engine._pinned.by_term["omega"]
     assert engine._pinned.contrib[lo:hi].tolist() == [weighted_tf(0, 0, 1), weighted_tf(1, 1, 3)]
     for q in ("alpha", "alpha omega", "omega alpha"):
-        want = _wand_search(postings_rows, docs_by_id, {"alpha": 0.75}, q, 10, 0)
+        want = _wand_search(postings_rows, docs_by_id, {"alpha": idf_py(4, 2)}, q, 10, 0)
         assert _answer(engine.search(q, 10, 0)) == want, q
     assert engine.scan_stats()["blocks_decoded"] == engine.scan_stats()["blocks_total"] > 0
 
@@ -372,8 +458,10 @@ _INT64_MIN, _INT64_MAX = -(2**63), 2**63 - 1
 
 
 def _reference_rows(tokens, n_shards, n_term_buckets):
-    """Each (term, shard) group's row, pivoted and encoded in pure Python
-    by ``codec.encode_postings``; shard and bucket from the Spark columns."""
+    """Each (term, shard) group's row, pivoted, numbered (a doc's rank by
+    doc id among its shard's docs) and encoded in pure Python by
+    ``codec.encode_postings``, plus each shard's map row; shard and bucket
+    from the Spark columns."""
     salted = tokens.select(
         "doc_id",
         "term",
@@ -382,19 +470,29 @@ def _reference_rows(tokens, n_shards, n_term_buckets):
         shard_col(n_shards).alias("shard"),
         F.pmod(F.xxhash64("term"), F.lit(n_term_buckets)).cast("int").alias("bucket"),
     ).collect()
-    groups = {}
+    groups, shard_docs = {}, {}
     for r in salted:
         g = groups.setdefault((r["term"], r["bucket"], r["shard"]), {})
         fields = g.setdefault(r["doc_id"], {1: 0, 2: 0, 4: 0})
         fields[r["field"]] += r["frequency"]
+        shard_docs.setdefault(r["shard"], set()).add(r["doc_id"])
+    ordinal = {s: {d: i for i, d in enumerate(sorted(ids))} for s, ids in shard_docs.items()}
     rows = []
     for (term, bucket, shard), docs in groups.items():
         ids = sorted(docs)
         blob, bmax, blast, boff = encode_postings(
-            ids, *([docs[d][f] for d in ids] for f in (1, 2, 4))
+            [ordinal[shard][d] for d in ids], *([docs[d][f] for d in ids] for f in (1, 2, 4))
         )
         ctf = sum(sum(v.values()) for v in docs.values())
         rows.append((term, bucket, shard, len(ids), ctf, bmax, blast, boff, blob))
+    map_bucket = (
+        tokens.sparkSession.range(1)
+        .select(F.pmod(F.xxhash64(F.lit(MAP_TERM)), F.lit(n_term_buckets)).cast("int"))
+        .first()[0]
+    )
+    for shard, ids in shard_docs.items():
+        blob = b"".join(d.to_bytes(8, "little", signed=True) for d in sorted(ids))
+        rows.append((MAP_TERM, map_bucket, shard, 0, 0, [], [], [], blob))
     return sorted(rows)
 
 
@@ -408,9 +506,10 @@ def _postings_rows(postings):
 
 @pytest.mark.parametrize("n_shards", [1, 3])
 def test_build_postings_bytes_equal_reference_encoder(spark, n_shards):
-    """Runs of 1-257 postings (block edges at 128), the int64 extremes,
-    frequencies of 2^14 and more, docs missing fields, several shards, and
-    7-row Arrow batches so every long run crosses many batch edges."""
+    """Runs of 1-257 postings (block edges at 128), the int64 extremes as
+    doc ids, frequencies of 2^14 and more, docs missing fields, several
+    shards, and 7-row Arrow batches so every long run crosses many batch
+    edges."""
     import random
 
     rng = random.Random(5)

@@ -14,7 +14,7 @@ from search_engine_spark.query.wand import (
 
 
 def _make_tp(term, idf, postings):
-    """postings: dict doc_id -> (f1, f2, f4)"""
+    """postings: dict ordinal -> (f1, f2, f4)"""
     ids = sorted(postings)
     f1 = [postings[d][0] for d in ids]
     f2 = [postings[d][1] for d in ids]
@@ -54,7 +54,7 @@ def _random_case(rng, n_terms, n_docs, density, zipf_idf=True):
         postings = {}
         for d in range(n_docs):
             if rng.random() < density:
-                postings[rng.randint(-(2**62), 2**62)] = (
+                postings[rng.randint(0, 2**63 - 1)] = (
                     rng.randint(0, 3),
                     rng.randint(0, 3),
                     rng.randint(1, 50),
@@ -74,7 +74,7 @@ def test_single_term():
 def test_multi_term_overlapping_docs():
     rng = random.Random(2)
     # shared doc space so docs match multiple terms
-    docs = [rng.randint(-(2**62), 2**62) for _ in range(800)]
+    docs = [rng.randint(0, 2**63 - 1) for _ in range(800)]
     entries = []
     for t in range(4):
         postings = {
