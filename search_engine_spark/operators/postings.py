@@ -35,8 +35,8 @@ reserved term ``MAP_TERM`` (``""``; the tokenizer never emits it, and
 doc ids in ordinal order as little-endian int64, with ``df = ctf = 0`` and
 empty skip arrays. A reader decodes a shard's ordinals through that row.
 
-Sizing: ``n_shards = ceil(n_docs / docs_per_shard)``. At docs_per_shard=2^22
-(~4M) each (head-term, shard) run stays ~4M postings ≈ tens of MB decoded —
+Sizing: ``n_shards = ceil(n_docs / DEFAULT_DOCS_PER_SHARD)``. At 2^22 (~4M)
+each (head-term, shard) run stays ~4M postings ≈ tens of MB decoded —
 executor-safe. The numbering collects the distinct doc ids to the driver
 (12 B per document, also shipped to each encode task), the one part of the
 stage that grows with the whole corpus.
@@ -59,7 +59,9 @@ from ..xxhash import term_bucket
 from .tokens import FIELD_IDS
 
 DEFAULT_DOCS_PER_SHARD = 4_194_304  # 2^22
-DEFAULT_TERM_BUCKETS = 64
+# the term_bucket modulus every index writer uses; readers take it from the
+# build's build_meta.json, never from here
+TERM_BUCKETS = 16
 # the term of each shard's ordinal -> doc_id map row (module docstring)
 MAP_TERM = ""
 _U64 = float(1 << 64)
@@ -90,8 +92,8 @@ def shard_col(n_shards: int) -> F.Column:
     )
 
 
-def n_shards_for(n_docs: int, docs_per_shard: int = DEFAULT_DOCS_PER_SHARD) -> int:
-    return max(1, math.ceil(n_docs / docs_per_shard))
+def n_shards_for(n_docs: int) -> int:
+    return max(1, math.ceil(n_docs / DEFAULT_DOCS_PER_SHARD))
 
 
 def map_ids(blob: bytes) -> np.ndarray:
@@ -368,13 +370,15 @@ def merge_postings(segments: list[DataFrame]) -> DataFrame:
 def build_postings(
     tokens: DataFrame,
     n_shards: int = 1,
-    n_term_buckets: int = DEFAULT_TERM_BUCKETS,
+    n_term_buckets: int = TERM_BUCKETS,
 ) -> DataFrame:
     """tokens -> compressed per-(term, shard) postings rows, plus one
     ordinal map row per shard (module docstring).
 
     ``df``/``ctf`` per row are per-shard; whole-term statistics live in
-    term_statistics. Callers size ``n_shards`` via :func:`n_shards_for`.
+    term_statistics. The index writers (``pipeline.build._derive_tables``)
+    size ``n_shards`` from the document count via :func:`n_shards_for` and
+    pass the ``TERM_BUCKETS`` modulus.
 
     The numbering runs first, as its own Spark job: the distinct
     (shard, doc_id) pairs are collected and ranked on the driver. It also

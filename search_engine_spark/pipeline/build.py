@@ -23,7 +23,10 @@ Scale notes:
 - postings are written ``partitionBy('term_bucket')`` so query IN-list scans
   partition-prune; at cluster scale this is an Iceberg table with a bucket
   transform — the parquet layout here is the same physical idea.
-- ``n_shards`` defaults from corpus size (postings.n_shards_for).
+- no writer takes a layout setting: ``n_shards`` follows the document count
+  (postings.n_shards_for), the term_bucket modulus is postings.TERM_BUCKETS
+  and PageRank runs its reference iteration count, so a build and an ingest
+  of the same pages write the same tables.
 - documents/tokens write through snappy parquet; all stage outputs are
   deterministic (no wall clock in data, stable doc ids), so resume at any
   parallelism yields identical rows. Not identical files: two JVMs write
@@ -45,8 +48,8 @@ from pyspark.sql import DataFrame, SparkSession
 from ..operators.documents import build_documents, latest_by_url
 from ..operators.fingerprints import build_fingerprints, exact_dedup
 from ..operators.link_graph import build_links_resolved
-from ..operators.pagerank import build_document_authority
-from ..operators.postings import build_postings, n_shards_for
+from ..operators.pagerank import ITERATIONS, build_document_authority
+from ..operators.postings import TERM_BUCKETS, build_postings, n_shards_for
 from ..operators.term_stats import build_term_statistics
 from ..operators.tokens import build_tokens
 from ..sources.tableio import ParquetIO
@@ -74,38 +77,19 @@ class BuildResult:
 
 
 def build_index(
-    spark: SparkSession,
-    pages: DataFrame,
-    out_root: str,
-    now: datetime,
-    *,
-    build_id: str = "default",
-    dedup: bool = True,
-    n_shards: int | None = None,
-    n_term_buckets: int = 16,
-    pagerank_iterations: int = 20,
+    spark: SparkSession, pages: DataFrame, out_root: str, now: datetime
 ) -> BuildResult:
-    """Run (or resume) the full build. ``build_id`` + params + stage chain
-    form the lineage fingerprints; rerunning with identical inputs is a no-op.
+    """Run (or resume) the full build. ``now`` + stage chain form the
+    lineage fingerprints; rerunning with identical inputs is a no-op.
     """
 
     def make_documents() -> DataFrame:
         # upsert-by-url first (worker.py:200-214): re-crawled urls keep only
         # their latest snapshot
-        d = build_documents(latest_by_url(pages), now)
-        if dedup:
-            d = exact_dedup(d)
-        return d
+        return exact_dedup(build_documents(latest_by_url(pages), now))
 
     return _derive_tables(
-        spark,
-        out_root,
-        {"build_id": build_id, "now": now.isoformat(), "dedup": dedup},
-        make_documents,
-        build_tokens,
-        n_shards=n_shards,
-        n_term_buckets=n_term_buckets,
-        pagerank_iterations=pagerank_iterations,
+        spark, out_root, {"now": now.isoformat()}, make_documents, build_tokens
     )
 
 
@@ -115,17 +99,16 @@ def _derive_tables(
     lineage: dict,
     make_documents: Callable[[], DataFrame],
     make_tokens: Callable[[DataFrame], DataFrame],
-    *,
-    n_shards: int | None,
-    n_term_buckets: int,
-    pagerank_iterations: int,
 ) -> BuildResult:
     """The stage DAG every index writer runs: ``make_documents()`` is the
     documents table, ``make_tokens(documents)`` the tokens table, and the
     rest derive from those two. ``lineage`` is the root of every stage
     fingerprint, so it must change whenever the two producers' output can.
+    The layout takes no setting: the shard count follows the document count
+    (``n_shards_for``), the term_bucket modulus is ``TERM_BUCKETS`` and
+    PageRank runs the reference ``ITERATIONS``.
     """
-    log = CheckpointLog(spark, out_root)
+    log = CheckpointLog(out_root)
     result = BuildResult(out_root=out_root)
     # all stage writes go through the storage seam (sources/tableio.py):
     # ParquetIO here; an Iceberg deployment swaps in IcebergIO, whose
@@ -168,7 +151,7 @@ def _derive_tables(
         # overlapped with wave 1 instead of as a serial step between waves
         # (every fixed serial second costs a wide cluster proportionally
         # more); as a future, its .result() re-raises any failure
-        f_count = pool.submit(documents.count) if n_shards is None else None
+        f_count = pool.submit(documents.count)
         f_fprints = pool.submit(
             run_stage,
             "document_fingerprints",
@@ -192,20 +175,20 @@ def _derive_tables(
     # -- wave 2: term_statistics || postings (consumers of tokens) ||
     # pagerank (consumer of links) || spellcheck dictionary (documents)
     fp_stats = fingerprint("term_statistics", lineage, [fp_tokens])
-    shards = n_shards if f_count is None else n_shards_for(f_count.result())
+    shards = n_shards_for(f_count.result())
     fp_post = fingerprint(
         "postings",
         {
             **lineage,
             "n_shards": shards,
-            "n_term_buckets": n_term_buckets,
+            "n_term_buckets": TERM_BUCKETS,
             "codec": POSTINGS_CODEC,
         },
         [fp_tokens],
     )
     fp_pr = fingerprint(
         "document_authority",
-        {**lineage, "iterations": pagerank_iterations, "pagerank": PAGERANK_IMPL},
+        {**lineage, "iterations": ITERATIONS, "pagerank": PAGERANK_IMPL},
         [fp_docs, fp_links],
     )
     fp_dict = fingerprint("spellcheck_dictionary", lineage, [fp_docs])
@@ -228,7 +211,7 @@ def _derive_tables(
                 "postings",
                 fp_post,
                 lambda: build_postings(
-                    tokens, n_shards=shards, n_term_buckets=n_term_buckets
+                    tokens, n_shards=shards, n_term_buckets=TERM_BUCKETS
                 ),
                 ["term_bucket"],
                 POSTINGS_WRITE_OPTIONS,
@@ -237,9 +220,7 @@ def _derive_tables(
                 run_stage,
                 "document_authority",
                 fp_pr,
-                lambda: build_document_authority(
-                    documents, links, iterations=pagerank_iterations
-                ),
+                lambda: build_document_authority(documents, links),
             ),
             pool.submit(run_stage, "spellcheck_dictionary", fp_dict, make_dictionary),
         ]
@@ -251,7 +232,7 @@ def _derive_tables(
     # writer, and the swap is atomic
     write_json_atomic(
         os.path.join(out_root, "build_meta.json"),
-        {"n_shards": shards, "n_term_buckets": n_term_buckets},
+        {"n_shards": shards, "n_term_buckets": TERM_BUCKETS},
     )
     return result
 

@@ -33,7 +33,6 @@ import os
 from datetime import datetime, timezone
 
 import pyarrow.parquet as pq
-from pyspark.sql import SparkSession
 
 CHECKPOINT_DIR = "_checkpoints"
 
@@ -68,7 +67,7 @@ def parquet_files(path: str) -> list[str]:
 
 
 class CheckpointLog:
-    def __init__(self, spark: SparkSession, root: str) -> None:
+    def __init__(self, root: str) -> None:
         self.root = root
         self.path = os.path.join(root, CHECKPOINT_DIR)
 

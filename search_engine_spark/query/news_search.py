@@ -3,8 +3,8 @@
 :281-309) over the news-domain tables.
 
 1. driver-side query analysis (shared with web search)
-2. candidate retrieval: FLAT tf*idf — ``SUM(frequency * COALESCE(idf, 1.0))``
-   with NO field weights (the news query scores only field-4 article text),
+2. candidate retrieval: FLAT tf*idf — ``SUM(frequency * COALESCE(idf, 1.0))``,
+   folded over each article's rows in term order, with NO field weights (the news query scores only field-4 article text),
    idf from the SHARED web-corpus term_statistics, top candidate_limit by
    (token_score DESC, url ASC)
 3. intent re-rank (same native-Column formula as web) **plus the flat
@@ -69,17 +69,28 @@ class NewsSearchEngine:
                 "term", "idf"
             )
         )
+        contribution = F.col("frequency").cast("double") * F.coalesce(
+            "idf", F.lit(1.0)
+        )
+        # an article's score folds its rows in term order, never an
+        # order-unspecified sum (CLAUDE.md invariant 4), so articles with
+        # equal frequencies tie to the last bit and url decides the cut
         scored = (
             self.article_tokens.filter(F.col("term").isin(terms))
             .join(query_stats, "term", "left")
             .groupBy("article_url")
             .agg(
-                F.sum(
-                    F.col("frequency").cast("double")
-                    * F.coalesce("idf", F.lit(1.0))
-                ).alias("token_score"),
+                F.array_sort(
+                    F.collect_list(F.struct("term", contribution.alias("c")))
+                ).alias("rows")
+            )
+            .select(
+                "article_url",
+                F.aggregate("rows", F.lit(0.0), lambda acc, r: acc + r["c"]).alias(
+                    "token_score"
+                ),
                 # one token row per (article, term, field=4): count == distinct
-                F.count(F.lit(1)).alias("matched_terms"),
+                F.size("rows").cast("long").alias("matched_terms"),
             )
         )
         meta = self.articles.select(

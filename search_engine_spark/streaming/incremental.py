@@ -20,7 +20,8 @@ rebuild). This module maps that onto Structured Streaming:
   4. run the build DAG (``pipeline.build``) on the merged state:
      documents = exact_dedup(documents_raw), tokens = tokens_raw of the
      surviving documents, and every other table derived from those two
-     exactly as ``build_index`` derives it — faithful to the reference's
+     exactly as ``build_index`` derives it (same shard count, term_bucket
+     modulus and PageRank rounds) — faithful to the reference's
      TRUNCATE+rebuild batch jobs. The DAG's lineage root holds the raw
      tables' file listing, so each batch rebuilds every stage
 - exact dedup is re-derived per batch from documents_raw, so an update that
@@ -48,14 +49,7 @@ from ..sources.tableio import ParquetIO
 
 
 def apply_batch(
-    spark: SparkSession,
-    batch_pages: DataFrame,
-    out_root: str,
-    now: datetime,
-    *,
-    n_shards: int = 1,
-    n_term_buckets: int = 16,
-    pagerank_iterations: int = 20,
+    spark: SparkSession, batch_pages: DataFrame, out_root: str, now: datetime
 ) -> None:
     """Fold one micro-batch of pages into the index tables under out_root."""
     io = ParquetIO(out_root)
@@ -92,18 +86,11 @@ def apply_batch(
         lambda documents: io.read(spark, "tokens_raw").join(
             documents.select("doc_id"), "doc_id", "left_semi"
         ),
-        n_shards=n_shards,
-        n_term_buckets=n_term_buckets,
-        pagerank_iterations=pagerank_iterations,
     )
 
 
 def run_micro_batch_pipeline(
-    spark: SparkSession,
-    pages_dir: str,
-    out_root: str,
-    now: datetime,
-    **params,
+    spark: SparkSession, pages_dir: str, out_root: str, now: datetime
 ) -> int:
     """Drain all unprocessed page files (Trigger.AvailableNow) into the index.
 
@@ -115,7 +102,7 @@ def run_micro_batch_pipeline(
     def _foreach(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        apply_batch(spark, batch_df, out_root, now, **params)
+        apply_batch(spark, batch_df, out_root, now)
         processed["n"] += 1
 
     stream = spark.readStream.schema(PAGES).parquet(pages_dir)

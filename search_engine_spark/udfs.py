@@ -98,20 +98,6 @@ def make_extract_map(now: datetime):
     return extract_batches
 
 
-def make_extract_udf(now: datetime):
-    """(url, html) -> parsed-page struct; ``now`` frozen into the plan.
-
-    Prefer ``make_extract_map`` in pipelines (single evaluation); this form
-    remains for per-column use where only one field is consumed.
-    """
-
-    @pandas_udf(PARSED_PAGE_SCHEMA)
-    def extract_page(url: pd.Series, html: pd.Series) -> pd.DataFrame:
-        return _parse_batch(url, html, now)
-
-    return extract_page
-
-
 @pandas_udf(TOKEN_MAP_TYPE)
 def tokenize_udf(text: pd.Series) -> pd.Series:
     """text -> {stemmed term: frequency} (reference tokenizer.py:36-40)."""

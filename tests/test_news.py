@@ -352,6 +352,39 @@ def test_news_search_empty_and_missing_engine(spark, term_stats, feeds_df):
     assert api.news_search("x") == {"results": [], "count": 0}
 
 
+def test_news_token_score_is_a_term_order_fold(spark):
+    """Two articles with equal frequencies for three terms score == however
+    their token rows arrive, and the tie goes to the smaller url."""
+    from search_engine_spark.query.news_search import NewsSearchEngine
+    from search_engine_spark.tokenizer import tokenize
+
+    q = "data query spark"
+    terms = sorted(tokenize(q))
+    # (0.1 + 0.2) + 0.3 != (0.3 + 0.2) + 0.1: the sum depends on its order
+    idf = dict(zip(terms, (0.1, 0.2, 0.3)))
+    first, second = "https://news.example/a", "https://news.example/b"
+    # one partition; the first url's rows arrive in reverse term order
+    tokens = spark.createDataFrame(
+        [(first, t, 4, 1) for t in reversed(terms)]
+        + [(second, t, 4, 1) for t in terms],
+        "article_url string, term string, field short, frequency int",
+    ).coalesce(1)
+    articles = spark.createDataFrame(
+        [(u, "title", "", None, None) for u in (first, second)],
+        "url string, title string, description string, author string, "
+        "published_at_s long",
+    )
+    stats = spark.createDataFrame(list(idf.items()), "term string, idf double")
+    fold = 0.0
+    for t in terms:
+        fold += idf[t]
+
+    rows = NewsSearchEngine(articles, tokens, stats).candidates_df(q).collect()
+    assert [r["url"] for r in rows] == [first, second]
+    assert [r["token_score"] for r in rows] == [fold, fold]
+    assert [r["matched_terms"] for r in rows] == [3, 3]
+
+
 # ---------------------------------------------------------------------------
 # Persisted news build + loader (batch analog of the fetch cycle)
 # ---------------------------------------------------------------------------

@@ -7,6 +7,7 @@ import shutil
 import pytest
 
 from search_engine_spark.corpus import FIXED_NOW, generate_pages, pages_dataframe
+from search_engine_spark.operators import postings
 from search_engine_spark.pipeline import build as build_module
 from search_engine_spark.pipeline.build import build_index, load_engines
 from search_engine_spark.pipeline.checkpoints import CheckpointLog
@@ -21,7 +22,17 @@ TABLES = [
     "document_authority",
     "spellcheck_dictionary",
 ]
-PR_ITERS = 5  # keep test builds fast; 20-iter parity is covered in test_graph
+# the 89-document corpus below takes 2 shards at 64 documents a shard and 3
+# at 32 (postings.n_shards_for)
+TWO_SHARDS = 64
+THREE_SHARDS = 32
+
+
+@pytest.fixture(scope="module", autouse=True)
+def two_shards():
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(postings, "DEFAULT_DOCS_PER_SHARD", TWO_SHARDS)
+        yield
 
 
 @pytest.fixture(scope="module")
@@ -32,9 +43,7 @@ def pages(spark):
 @pytest.fixture(scope="module")
 def clean_build(spark, pages, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("clean"))
-    result = build_index(
-        spark, pages, root, FIXED_NOW, n_shards=2, pagerank_iterations=PR_ITERS
-    )
+    result = build_index(spark, pages, root, FIXED_NOW)
     return root, result
 
 
@@ -59,33 +68,31 @@ def test_full_build_writes_all_stages(clean_build):
     assert result.stages_skipped == []
     for t in TABLES:
         assert os.path.exists(os.path.join(root, t, "_SUCCESS"))
+    with open(os.path.join(root, "build_meta.json")) as f:
+        assert json.load(f) == {"n_shards": 2, "n_term_buckets": 16}
 
 
 def test_rerun_skips_everything(spark, pages, clean_build, tmp_path_factory):
     root, _ = clean_build
-    r2 = build_index(
-        spark, pages, root, FIXED_NOW, n_shards=2, pagerank_iterations=PR_ITERS
-    )
+    r2 = build_index(spark, pages, root, FIXED_NOW)
     assert r2.stages_run == []
     assert sorted(r2.stages_skipped) == sorted(TABLES)
 
 
 def test_param_change_invalidates_only_dependents(
-    spark, pages, clean_build, tmp_path_factory
+    spark, pages, clean_build, tmp_path_factory, monkeypatch
 ):
     root, _ = clean_build
     copy = str(tmp_path_factory.mktemp("reshard"))
     shutil.rmtree(copy)
     shutil.copytree(root, copy)
-    r = build_index(
-        spark, pages, copy, FIXED_NOW, n_shards=3, pagerank_iterations=PR_ITERS
-    )
+    monkeypatch.setattr(postings, "DEFAULT_DOCS_PER_SHARD", THREE_SHARDS)
+    r = build_index(spark, pages, copy, FIXED_NOW)
     assert r.stages_run == ["postings"]
     # stepping back to the first layout must rebuild postings: the marker
     # left by the first build names a table the 3-shard build replaced
-    r = build_index(
-        spark, pages, copy, FIXED_NOW, n_shards=2, pagerank_iterations=PR_ITERS
-    )
+    monkeypatch.undo()
+    r = build_index(spark, pages, copy, FIXED_NOW)
     assert r.stages_run == ["postings"]
     assert _table_snapshot(spark, copy, "postings") == _table_snapshot(
         spark, root, "postings"
@@ -102,14 +109,10 @@ def test_pagerank_impl_change_rebuilds_only_document_authority(
     shutil.rmtree(copy)
     shutil.copytree(root, copy)
     monkeypatch.setattr(build_module, "PAGERANK_IMPL", "spark-loop")
-    r = build_index(
-        spark, pages, copy, FIXED_NOW, n_shards=2, pagerank_iterations=PR_ITERS
-    )
+    r = build_index(spark, pages, copy, FIXED_NOW)
     assert r.stages_run == ["document_authority"]
     monkeypatch.undo()
-    r = build_index(
-        spark, pages, copy, FIXED_NOW, n_shards=2, pagerank_iterations=PR_ITERS
-    )
+    r = build_index(spark, pages, copy, FIXED_NOW)
     assert r.stages_run == ["document_authority"]
     assert _table_snapshot(spark, copy, "document_authority") == _table_snapshot(
         spark, root, "document_authority"
@@ -126,14 +129,10 @@ def test_postings_codec_change_rebuilds_only_postings(
     shutil.rmtree(copy)
     shutil.copytree(root, copy)
     monkeypatch.setattr(build_module, "POSTINGS_CODEC", "doc-ids")
-    r = build_index(
-        spark, pages, copy, FIXED_NOW, n_shards=2, pagerank_iterations=PR_ITERS
-    )
+    r = build_index(spark, pages, copy, FIXED_NOW)
     assert r.stages_run == ["postings"]
     monkeypatch.undo()
-    r = build_index(
-        spark, pages, copy, FIXED_NOW, n_shards=2, pagerank_iterations=PR_ITERS
-    )
+    r = build_index(spark, pages, copy, FIXED_NOW)
     assert r.stages_run == ["postings"]
     assert _table_snapshot(spark, copy, "postings") == _table_snapshot(
         spark, root, "postings"
@@ -177,14 +176,11 @@ def test_crash_before_marker_reruns_the_stage(
         raise RuntimeError("killed before the marker")
 
     monkeypatch.setattr(CheckpointLog, "record", killed)
+    monkeypatch.setattr(postings, "DEFAULT_DOCS_PER_SHARD", THREE_SHARDS)
     with pytest.raises(RuntimeError, match="killed before the marker"):
-        build_index(
-            spark, pages, copy, FIXED_NOW, n_shards=3, pagerank_iterations=PR_ITERS
-        )
+        build_index(spark, pages, copy, FIXED_NOW)
     monkeypatch.undo()
-    r = build_index(
-        spark, pages, copy, FIXED_NOW, n_shards=2, pagerank_iterations=PR_ITERS
-    )
+    r = build_index(spark, pages, copy, FIXED_NOW)
     assert r.stages_run == ["postings"]
     assert _table_snapshot(spark, copy, "postings") == _table_snapshot(
         spark, root, "postings"
@@ -200,9 +196,7 @@ def test_kill_and_resume_matches_clean_build(
     shutil.copytree(root, crashed)
     for t in ["term_statistics", "postings", "document_authority"]:
         shutil.rmtree(os.path.join(crashed, t))
-    r = build_index(
-        spark, pages, crashed, FIXED_NOW, n_shards=2, pagerank_iterations=PR_ITERS
-    )
+    r = build_index(spark, pages, crashed, FIXED_NOW)
     assert sorted(r.stages_run) == [
         "document_authority",
         "postings",
@@ -216,7 +210,7 @@ def test_kill_and_resume_matches_clean_build(
 
 def test_lineage_manifest_has_per_partition_metrics(spark, clean_build):
     root, _ = clean_build
-    log = CheckpointLog(spark, root)
+    log = CheckpointLog(root)
     rows = log.stage_rows("documents")
     summary = [r for r in rows if r["partition_id"] == -1]
     parts = [r for r in rows if r["partition_id"] >= 0]
@@ -232,14 +226,7 @@ def test_parallelism_determinism(spark, pages, clean_build, tmp_path_factory):
     stand-in for the N vs 4N executor determinism requirement)."""
     root, _ = clean_build
     b = str(tmp_path_factory.mktemp("par_b"))
-    build_index(
-        spark,
-        pages.repartition(16),
-        b,
-        FIXED_NOW,
-        n_shards=2,
-        pagerank_iterations=PR_ITERS,
-    )
+    build_index(spark, pages.repartition(16), b, FIXED_NOW)
     for t in TABLES:
         assert _table_snapshot(spark, root, t) == _table_snapshot(spark, b, t), t
 
@@ -290,9 +277,7 @@ def test_failed_meta_write_keeps_the_old_meta(
 
     monkeypatch.setattr(json, "dump", torn_dump)
     with pytest.raises(OSError, match="disk full"):
-        build_index(
-            spark, pages, copy, FIXED_NOW, n_shards=2, pagerank_iterations=PR_ITERS
-        )
+        build_index(spark, pages, copy, FIXED_NOW)
     monkeypatch.undo()
     with open(meta_path) as f:
         assert json.load(f) == old_meta
@@ -310,6 +295,4 @@ def test_failed_doc_count_surfaces_its_cause(spark, pages, tmp_path, monkeypatch
     # the concrete DataFrame class (pyspark 4 splits classic/connect)
     monkeypatch.setattr(type(pages), "count", broken_count)
     with pytest.raises(RuntimeError, match="doc count failed"):
-        build_index(
-            spark, pages, str(tmp_path), FIXED_NOW, pagerank_iterations=PR_ITERS
-        )
+        build_index(spark, pages, str(tmp_path), FIXED_NOW)

@@ -27,11 +27,7 @@ def _formatted_plan(df) -> str:
 def built(spark, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("planidx"))
     build_index(
-        spark,
-        pages_dataframe(spark, generate_pages(600, seed=42)),
-        root,
-        FIXED_NOW,
-        pagerank_iterations=3,
+        spark, pages_dataframe(spark, generate_pages(600, seed=42)), root, FIXED_NOW
     )
     return root
 

@@ -1,6 +1,7 @@
 """Incremental micro-batch pipeline == batch build over the same effective pages."""
 
 import dataclasses
+import json
 import os
 from datetime import timedelta
 
@@ -9,6 +10,7 @@ import pytest
 from search_engine_spark.corpus import FIXED_NOW, generate_pages, pages_dataframe
 from search_engine_spark.pipeline.build import build_index
 from search_engine_spark.operators import documents as documents_mod
+from search_engine_spark.operators import postings
 from search_engine_spark.streaming.incremental import (
     apply_batch,
     run_micro_batch_pipeline,
@@ -24,7 +26,9 @@ TABLES = [
     "document_authority",
     "spellcheck_dictionary",
 ]
-PR_ITERS = 5
+# the 106 documents of all pages take 2 shards at 64 documents a shard
+# (postings.n_shards_for)
+TWO_SHARDS = 64
 
 
 def _snapshot(spark, root, table):
@@ -61,58 +65,67 @@ def chunks():
     return chunk_a, chunk_b
 
 
-def test_incremental_equals_batch(spark, chunks, tmp_path_factory):
+@pytest.fixture(scope="module")
+def batch_root(spark, chunks, tmp_path_factory):
+    """A batch build over ALL pages (upsert-by-url inside build_index)."""
     chunk_a, chunk_b = chunks
+    out = str(tmp_path_factory.mktemp("batch"))
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(postings, "DEFAULT_DOCS_PER_SHARD", TWO_SHARDS)
+        build_index(spark, pages_dataframe(spark, chunk_a + chunk_b), out, FIXED_NOW)
+    return out
+
+
+def test_incremental_equals_batch(
+    spark, chunks, batch_root, tmp_path_factory, monkeypatch
+):
+    chunk_a, chunk_b = chunks
+    monkeypatch.setattr(postings, "DEFAULT_DOCS_PER_SHARD", TWO_SHARDS)
     pages_dir = str(tmp_path_factory.mktemp("pages_stream"))
     out_inc = str(tmp_path_factory.mktemp("inc"))
-    out_batch = str(tmp_path_factory.mktemp("batch"))
 
     # batch 1: chunk A only
     pages_dataframe(spark, chunk_a).write.mode("append").parquet(pages_dir)
-    n1 = run_micro_batch_pipeline(
-        spark, pages_dir, out_inc, FIXED_NOW, n_shards=2, pagerank_iterations=PR_ITERS
-    )
+    n1 = run_micro_batch_pipeline(spark, pages_dir, out_inc, FIXED_NOW)
     assert n1 == 1
     docs_after_a = spark.read.parquet(os.path.join(out_inc, "documents")).count()
     assert docs_after_a > 0
 
     # batch 2: chunk B (new pages + an UPDATE of a chunk-A url)
     pages_dataframe(spark, chunk_b).write.mode("append").parquet(pages_dir)
-    n2 = run_micro_batch_pipeline(
-        spark, pages_dir, out_inc, FIXED_NOW, n_shards=2, pagerank_iterations=PR_ITERS
-    )
+    n2 = run_micro_batch_pipeline(spark, pages_dir, out_inc, FIXED_NOW)
     assert n2 == 1
 
     # re-run with nothing new: no batches processed
-    n3 = run_micro_batch_pipeline(
-        spark, pages_dir, out_inc, FIXED_NOW, n_shards=2, pagerank_iterations=PR_ITERS
-    )
+    n3 = run_micro_batch_pipeline(spark, pages_dir, out_inc, FIXED_NOW)
     assert n3 == 0
 
     # foreachBatch is at-least-once: replaying batch 2 changes nothing
-    apply_batch(
-        spark,
-        pages_dataframe(spark, chunk_b),
-        out_inc,
-        FIXED_NOW,
-        n_shards=2,
-        pagerank_iterations=PR_ITERS,
-    )
-
-    # batch build over ALL pages (upsert-by-url inside build_index)
-    all_pages = pages_dataframe(spark, chunk_a + chunk_b)
-    build_index(
-        spark,
-        all_pages,
-        out_batch,
-        FIXED_NOW,
-        n_shards=2,
-        n_term_buckets=16,
-        pagerank_iterations=PR_ITERS,
-    )
+    apply_batch(spark, pages_dataframe(spark, chunk_b), out_inc, FIXED_NOW)
 
     for t in TABLES:
-        assert _snapshot(spark, out_inc, t) == _snapshot(spark, out_batch, t), t
+        assert _snapshot(spark, out_inc, t) == _snapshot(spark, batch_root, t), t
+
+
+def test_ingest_sizes_shards_as_a_build_does(
+    spark, chunks, batch_root, tmp_path_factory, monkeypatch
+):
+    """Neither writer takes a layout setting: an ingest of the pages that
+    need 2 shards writes the 2-shard tables a build of them writes."""
+    chunk_a, chunk_b = chunks
+    monkeypatch.setattr(postings, "DEFAULT_DOCS_PER_SHARD", TWO_SHARDS)
+    pages_dir = str(tmp_path_factory.mktemp("pages_once"))
+    out_inc = str(tmp_path_factory.mktemp("inc_once"))
+    pages_dataframe(spark, chunk_a + chunk_b).write.mode("append").parquet(pages_dir)
+    assert run_micro_batch_pipeline(spark, pages_dir, out_inc, FIXED_NOW) == 1
+
+    metas = []
+    for root in (out_inc, batch_root):
+        with open(os.path.join(root, "build_meta.json")) as f:
+            metas.append(json.load(f))
+    assert metas[0] == metas[1] == {"n_shards": 2, "n_term_buckets": 16}
+    for t in TABLES:
+        assert _snapshot(spark, out_inc, t) == _snapshot(spark, batch_root, t), t
 
 
 def test_update_actually_changed_the_document(spark, chunks, tmp_path_factory):
@@ -122,18 +135,14 @@ def test_update_actually_changed_the_document(spark, chunks, tmp_path_factory):
     pages_dir = str(tmp_path_factory.mktemp("pages2"))
     out = str(tmp_path_factory.mktemp("inc2"))
     pages_dataframe(spark, chunk_a).write.mode("append").parquet(pages_dir)
-    run_micro_batch_pipeline(
-        spark, pages_dir, out, FIXED_NOW, n_shards=1, pagerank_iterations=2
-    )
+    run_micro_batch_pipeline(spark, pages_dir, out, FIXED_NOW)
     before = (
         spark.read.parquet(os.path.join(out, "documents_raw"))
         .filter(f"url = '{updated_url}'")
         .first()
     )
     pages_dataframe(spark, chunk_b).write.mode("append").parquet(pages_dir)
-    run_micro_batch_pipeline(
-        spark, pages_dir, out, FIXED_NOW, n_shards=1, pagerank_iterations=2
-    )
+    run_micro_batch_pipeline(spark, pages_dir, out, FIXED_NOW)
     after = (
         spark.read.parquet(os.path.join(out, "documents_raw"))
         .filter(f"url = '{updated_url}'")
@@ -148,9 +157,7 @@ def test_batch_pages_are_extracted_once(spark, chunks, tmp_path, monkeypatch):
     read the batch's documents."""
     chunk_a, chunk_b = chunks
     out = str(tmp_path)
-    apply_batch(
-        spark, pages_dataframe(spark, chunk_a), out, FIXED_NOW, pagerank_iterations=2
-    )
+    apply_batch(spark, pages_dataframe(spark, chunk_a), out, FIXED_NOW)
 
     rows_parsed = spark.sparkContext.accumulator(0)
     real = documents_mod.make_extract_map
@@ -166,7 +173,5 @@ def test_batch_pages_are_extracted_once(spark, chunks, tmp_path, monkeypatch):
         return lambda batches: extract(counted(batches))
 
     monkeypatch.setattr(documents_mod, "make_extract_map", counting_extract_map)
-    apply_batch(
-        spark, pages_dataframe(spark, chunk_b), out, FIXED_NOW, pagerank_iterations=2
-    )
+    apply_batch(spark, pages_dataframe(spark, chunk_b), out, FIXED_NOW)
     assert rows_parsed.value == len({p.url for p in chunk_b})
