@@ -246,24 +246,48 @@ def load_engines(
 ):
     """Convenience: open the built tables and return both search engines.
 
+    The open reads only committed tables: the files each table's commit
+    marker (``_checkpoints/<table>.json``) names. A table without a marker
+    (never built, or cleared while a rewrite runs) raises ``ValueError``
+    naming it. Each engine's Spark handles take their schema from the
+    first committed file's footer, so opening them runs no Spark job.
+
     A long-lived query service passes ``pin_shard_layout=True``: the
-    postings engine collects the posting lists, idf and the document fields
+    postings engine loads the posting lists, idf and the document fields
     into driver memory once at open (at most
-    ``postings_search.MAX_SERVING_DOCUMENTS`` documents), decodes them into
+    ``postings_search.MAX_SERVING_DOCUMENTS`` documents, checked against
+    the documents marker before any file is read), decodes them into
     per-term arrays of document ordinals and baked score contributions, and
-    precomputes what the intent re-rank reads of each document. It then
-    serves every search from those arrays, with no Spark job. ``interactive=True``
-    scopes the serving configs around the Spark search actions of an
-    unpinned engine. Batch/one-shot callers keep the defaults: nothing is
-    collected, each search runs partition-pruned parquet scans.
+    precomputes what the intent re-rank reads of each document. It reads
+    those columns with pyarrow from exactly the committed files, so the
+    open runs no Spark job, and it serves every search from the arrays,
+    with no Spark job either. ``interactive=True`` scopes the serving
+    configs around the Spark search actions of an unpinned engine.
+    Batch/one-shot callers keep the defaults: nothing is collected, each
+    search runs partition-pruned parquet scans.
     """
-    from ..query.postings_search import PostingsSearchEngine
+    from ..query.postings_search import (
+        PINNED_SCHEMAS,
+        PostingsSearchEngine,
+        check_serving_budget,
+    )
     from ..query.search import SearchEngine
 
-    documents = spark.read.parquet(os.path.join(out_root, "documents"))
-    tokens = spark.read.parquet(os.path.join(out_root, "tokens"))
-    stats = spark.read.parquet(os.path.join(out_root, "term_statistics"))
-    postings = spark.read.parquet(os.path.join(out_root, "postings"))
+    log = CheckpointLog(out_root)
+    committed = {
+        t: log.committed(t) for t in ("documents", "tokens", "term_statistics", "postings")
+    }
+    pinned_tables = None
+    if pin_shard_layout:
+        check_serving_budget(committed["documents"].num_rows)
+        pinned_tables = tuple(
+            committed[t].arrow(PINNED_SCHEMAS[t])
+            for t in ("documents", "postings", "term_statistics")
+        )
+    documents, tokens, stats, postings = (
+        committed[t].dataframe(spark)
+        for t in ("documents", "tokens", "term_statistics", "postings")
+    )
     n_term_buckets = None
     meta_path = os.path.join(out_root, "build_meta.json")
     if os.path.exists(meta_path):
@@ -280,5 +304,6 @@ def load_engines(
             n_term_buckets=n_term_buckets,
             interactive=interactive,
             pin_shard_layout=pin_shard_layout,
+            pinned_tables=pinned_tables,
         ),
     )

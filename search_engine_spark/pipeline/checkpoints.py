@@ -12,6 +12,11 @@ Design:
 - ``input_fingerprint`` chains: sha256(stage name + params + upstream
   fingerprints), so ANY upstream change invalidates downstream stages while
   an interrupted build resumes exactly where it stopped
+- the marker's file list is what readers open: ``CheckpointLog.committed``
+  hands it to ``load_engines``, which reads exactly those files (and takes
+  each table's Spark schema from the first one's footer). A file in the
+  table directory that the marker does not name is never served, and a
+  table whose marker is gone (cleared while it is rewritten) is not opened
 - resume = skip the stage iff its marker carries the same fingerprint AND
   the output dir has a _SUCCESS marker; otherwise drop the marker, then
   recompute and overwrite (idempotent writes — reruns converge to the same
@@ -30,9 +35,15 @@ import contextlib
 import hashlib
 import json
 import os
+from dataclasses import dataclass
 from datetime import datetime, timezone
 
+import pyarrow as pa
 import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+from ..sources.tableio import parquet_files, read_parquet
 
 CHECKPOINT_DIR = "_checkpoints"
 
@@ -55,18 +66,50 @@ def write_json_atomic(path: str, obj: dict) -> None:
     os.replace(tmp, path)
 
 
-def parquet_files(path: str) -> list[str]:
-    """Data files of a parquet dir (partition subdirs included), relative
-    to ``path`` and sorted."""
-    return sorted(
-        os.path.relpath(os.path.join(d, n), path)
-        for d, _dirs, names in os.walk(path)
-        for n in names
-        if n.endswith(".parquet")
-    )
+@dataclass(frozen=True)
+class CommittedTable:
+    """A stage's table as its commit marker names it: the table directory,
+    and each committed data file (absolute path) with its row count."""
+
+    path: str
+    files: tuple[str, ...]
+    rows: tuple[int, ...]
+
+    @property
+    def num_rows(self) -> int:
+        return sum(self.rows)
+
+    def arrow(self, schema: pa.Schema) -> pa.Table:
+        """``schema``'s columns of exactly the committed files, cast to its
+        types. Nothing lists the directory, so a file the marker does not
+        name is never read; a file whose row count differs from the
+        marker's raises ``ValueError``."""
+        parts = []
+        for file, rows in zip(self.files, self.rows):
+            part = pq.ParquetFile(file).read(columns=schema.names)
+            if part.num_rows != rows:
+                raise ValueError(
+                    f"{file} holds {part.num_rows} rows; its commit marker says {rows}"
+                )
+            parts.append(part.cast(schema))
+        return pa.concat_tables(parts) if parts else schema.empty_table()
+
+    def dataframe(self, spark: SparkSession) -> DataFrame:
+        """A Spark handle on the table directory, its schema taken from the
+        first committed file's footer, so opening it runs no Spark job. A
+        table committed with no file (Spark writes none for an empty
+        partitioned table) has no footer: its handle has no rows and no
+        columns."""
+        if not self.files:
+            return spark.createDataFrame([], T.StructType())
+        return read_parquet(spark, self.path, self.files[0])
 
 
 class CheckpointLog:
+    """The build root's commit markers. A marker's file list is what
+    readers open (``committed``), not only an audit record: a table is
+    served as exactly the files its marker names."""
+
     def __init__(self, root: str) -> None:
         self.root = root
         self.path = os.path.join(root, CHECKPOINT_DIR)
@@ -108,6 +151,23 @@ class CheckpointLog:
                 "completed_at": datetime.now(timezone.utc).isoformat(),
                 "files": [{"file": n, "rows": r} for n, r in zip(names, rows)],
             },
+        )
+
+    def committed(self, stage: str) -> CommittedTable:
+        """The files the stage's marker names; ``ValueError`` naming the
+        stage when it has no marker (never built, or cleared by a rewrite
+        that has not committed), so a half-written table is never read."""
+        m = self._load(stage)
+        if m is None:
+            raise ValueError(
+                f"table {stage!r} has no commit marker under {self.path}: "
+                "it was never built, or a rewrite of it has not committed"
+            )
+        path = os.path.join(self.root, stage)
+        return CommittedTable(
+            path,
+            tuple(os.path.join(path, f["file"]) for f in m["files"]),
+            tuple(f["rows"] for f in m["files"]),
         )
 
     def stage_rows(self, stage: str) -> list:

@@ -1,7 +1,12 @@
 """Query execution over the compressed postings index.
 
 A pinned engine (``pin_shard_layout=True``, how ``load_engines`` opens a
-serving index) is served from driver memory. ``__init__`` builds, once:
+serving index) is served from driver memory. It is built from three Arrow
+tables, the ``PINNED_SCHEMAS`` columns of documents, postings and
+term_statistics. ``load_engines`` reads them with pyarrow from exactly the
+files each table's commit marker names, so the open runs no Spark job; an
+engine built on DataFrames collects the same selections with ``toArrow()``.
+Either way one decoder, ``_PinnedIndex``, builds, once:
 
 - each document's dense ordinal: its rank in url order, so comparing
   ordinals is comparing urls;
@@ -57,6 +62,7 @@ from contextlib import contextmanager
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -83,6 +89,21 @@ _INTERACTIVE_SAVED: dict[int, dict[str, str | None]] = {}
 # ~0.85 KB, the posting arrays (12 B per posting) ~1.0 KB, the per-term
 # offsets and term strings ~0.45 KB. So this budget is ~1.2 GB.
 MAX_SERVING_DOCUMENTS = 500_000
+# what a pinned engine reads of each table: these columns, in these types
+PINNED_SCHEMAS = {
+    "documents": pa.schema(
+        [
+            ("doc_id", pa.int64()),
+            ("title", pa.string()),
+            ("description", pa.string()),
+            ("url", pa.string()),
+        ]
+    ),
+    "postings": pa.schema(
+        [("term", pa.string()), ("shard", pa.int32()), ("postings", pa.binary())]
+    ),
+    "term_statistics": pa.schema([("term", pa.string()), ("doc_frequency", pa.int64())]),
+}
 # blob bytes the open decodes per NumPy pass: the decode's temporaries take
 # ~18 B per blob byte, so this bounds them at ~300 MB whatever the index size
 _DECODE_BATCH_BYTES = 16 << 20
@@ -94,6 +115,15 @@ _CANDIDATE_SCHEMA = T.StructType(
         T.StructField("matched_terms", T.IntegerType(), False),
     ]
 )
+
+
+def check_serving_budget(n_documents: int) -> None:
+    """``ValueError`` when ``n_documents`` exceed ``MAX_SERVING_DOCUMENTS``."""
+    if n_documents > MAX_SERVING_DOCUMENTS:
+        raise ValueError(
+            "a pinned search engine holds at most MAX_SERVING_DOCUMENTS = "
+            f"{MAX_SERVING_DOCUMENTS} documents in memory; this index has more"
+        )
 
 
 def _make_shard_scorer(idf_by_term: dict, k: int, acc_decoded=None, acc_total=None):
@@ -148,7 +178,12 @@ class PostingsSearchEngine:
         n_term_buckets: int | None = None,
         interactive: bool = False,
         pin_shard_layout: bool = False,
+        pinned_tables: tuple[pa.Table, pa.Table, pa.Table] | None = None,
     ) -> None:
+        """``pinned_tables`` are the ``PINNED_SCHEMAS`` selections of
+        (documents, postings, term_statistics) already in Arrow form, as
+        ``load_engines`` reads them from the committed files; without them
+        a pinned engine collects them from the DataFrames."""
         self.documents = documents
         self.postings = postings
         self.term_statistics = term_statistics
@@ -170,7 +205,9 @@ class PostingsSearchEngine:
         # Spark job (module docstring).
         self._pinned: _PinnedIndex | None = None
         if pin_shard_layout:
-            self._pinned = _PinnedIndex(documents, postings, term_statistics)
+            self._pinned = _PinnedIndex(
+                *(pinned_tables or _collect_pinned(documents, postings, term_statistics))
+            )
         # MUST match the modulus the postings were built with, or bucket
         # pruning silently drops valid partitions (CLAUDE.md invariant 7;
         # load_engines reads it from the build's meta file). When the
@@ -380,26 +417,33 @@ class PostingsSearchEngine:
         return SearchResponse(results=page, count=count)
 
 
+def _collect_pinned(
+    documents: DataFrame, postings: DataFrame, term_statistics: DataFrame
+) -> tuple[pa.Table, pa.Table, pa.Table]:
+    """The ``PINNED_SCHEMAS`` selections of the three DataFrames, collected
+    with ``toArrow()`` (documents stop one row past the budget)."""
+
+    def collect(df: DataFrame, table: str) -> pa.Table:
+        schema = PINNED_SCHEMAS[table]
+        return df.select(*schema.names).toArrow().cast(schema)
+
+    return (
+        collect(documents.limit(MAX_SERVING_DOCUMENTS + 1), "documents"),
+        collect(postings, "postings"),
+        collect(term_statistics, "term_statistics"),
+    )
+
+
 class _PinnedIndex:
     """A serving index in driver memory, indexed by dense ordinal (a
     document's rank in url order). ``by_term`` maps a term to (lo, hi,
     blocks): its postings are ``ords[lo:hi]`` (their documents) and
     ``contrib[lo:hi]`` (each one's ``idf * weighted_tf``), and its rows
-    hold ``blocks`` codec blocks."""
+    hold ``blocks`` codec blocks. Built from the ``PINNED_SCHEMAS``
+    selections of documents, postings and term_statistics."""
 
-    def __init__(
-        self, documents: DataFrame, postings: DataFrame, term_statistics: DataFrame
-    ) -> None:
-        docs = (
-            documents.select("doc_id", "title", "description", "url")
-            .limit(MAX_SERVING_DOCUMENTS + 1)
-            .toArrow()
-        )
-        if docs.num_rows > MAX_SERVING_DOCUMENTS:
-            raise ValueError(
-                "a pinned search engine holds at most MAX_SERVING_DOCUMENTS = "
-                f"{MAX_SERVING_DOCUMENTS} documents in memory; this index has more"
-            )
+    def __init__(self, docs: pa.Table, lists: pa.Table, stats: pa.Table) -> None:
+        check_serving_budget(docs.num_rows)
         docs = docs.sort_by([("url", "ascending"), ("doc_id", "ascending")])
         self.docs = list(
             zip(*(docs.column(c).to_pylist() for c in ("title", "description", "url")))
@@ -409,18 +453,13 @@ class _PinnedIndex:
 
         # idf as the oracle computes it, from N and df (term_stats.idf_py)
         doc_total = len(self.docs) or 1
-        stats = term_statistics.select("term", "doc_frequency").toArrow()
         idf = {
             t: idf_py(doc_total, df)
             for t, df in zip(
                 stats.column("term").to_pylist(), stats.column("doc_frequency").to_pylist()
             )
         }
-        lists = (
-            postings.select("term", "shard", "postings")
-            .toArrow()
-            .sort_by([("term", "ascending"), ("shard", "ascending")])
-        )
+        lists = lists.sort_by([("term", "ascending"), ("shard", "ascending")])
         terms = lists.column("term").to_pylist()
         shards = lists.column("shard").to_numpy()
         blobs = lists.column("postings")

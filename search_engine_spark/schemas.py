@@ -1,9 +1,13 @@
-"""Explicit StructType constants for every table in the engine.
+"""The input schema: the pages every index build starts from.
 
 Plays the role of the reference's Alembic migrations
-(``alembic/versions/0001_initial_schema.py`` ff.) as the single source of
-truth for schemas. In production these are Iceberg table DDLs; locally they
-back parquet reads/writes. No schema inference anywhere.
+(``alembic/versions/0001_initial_schema.py`` ff.) for the one table the
+engine does not write itself. A table the engine writes needs no constant
+here: Spark's parquet writer stores the table's schema in each data file's
+footer, and the build's and the serving open's reads take it from there
+(``sources.tableio.footer_schema``: ``ParquetIO.read`` uses one data file
+of the table directory, ``load_engines`` the first file the table's commit
+marker names), so they run no schema-inference job.
 """
 
 from __future__ import annotations
@@ -18,110 +22,5 @@ PAGES = T.StructType(
         T.StructField("html", T.BinaryType(), True),
         T.StructField("text", T.StringType(), True),
         T.StructField("lang", T.StringType(), True),
-    ]
-)
-
-# ---- document store (reference 0001_initial_schema.py:31-51) ---------------
-DOCUMENTS = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),  # xxhash64(url)
-        T.StructField("url", T.StringType(), False),
-        T.StructField("title", T.StringType(), True),
-        T.StructField("description", T.StringType(), True),
-        T.StructField("content", T.StringType(), True),
-        T.StructField("published_at", T.TimestampType(), True),
-        T.StructField("updated_at", T.TimestampType(), True),
-        T.StructField("word_count", T.IntegerType(), True),
-        T.StructField("quality_score", T.DoubleType(), True),
-        T.StructField("freshness_score", T.DoubleType(), True),
-        T.StructField("status", T.StringType(), False),
-    ]
-)
-
-# ---- inverted index, row form (reference 0001:63-75; fields worker.py:230-234)
-TOKENS = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("term", T.StringType(), False),
-        T.StructField("field", T.ShortType(), False),  # 1=title 2=desc 4=body
-        T.StructField("frequency", T.IntegerType(), False),
-    ]
-)
-
-# ---- Spark-native compressed postings (new capability; analog: idx_tokens_term)
-POSTINGS = T.StructType(
-    [
-        T.StructField("term", T.StringType(), False),
-        T.StructField("term_bucket", T.IntegerType(), False),
-        T.StructField("df", T.LongType(), False),
-        T.StructField("ctf", T.LongType(), False),
-        T.StructField("block_max", T.ArrayType(T.DoubleType()), True),
-        T.StructField("postings", T.BinaryType(), False),
-    ]
-)
-
-# ---- statistics (reference 0001:110-115; formula bm25_stats.py:16-27) -------
-TERM_STATISTICS = T.StructType(
-    [
-        T.StructField("term", T.StringType(), False),
-        T.StructField("doc_frequency", T.LongType(), False),
-        T.StructField("idf", T.DoubleType(), False),
-        T.StructField("avg_doc_len", T.DoubleType(), False),
-    ]
-)
-
-# ---- link graph (reference 0001:53-61, 98-102) ------------------------------
-LINKS_OUTGOING = T.StructType(
-    [
-        T.StructField("source_doc_id", T.LongType(), False),
-        T.StructField("target_url", T.StringType(), False),
-    ]
-)
-
-LINKS_RESOLVED = T.StructType(
-    [
-        T.StructField("source_doc_id", T.LongType(), False),
-        T.StructField("target_doc_id", T.LongType(), False),
-    ]
-)
-
-DOCUMENT_AUTHORITY = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("pagerank", T.DoubleType(), False),
-        T.StructField("inlink_count", T.IntegerType(), False),
-    ]
-)
-
-# ---- fingerprints (reference 0001:93-96; duplicate_detection.py) ------------
-DOCUMENT_FINGERPRINTS = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("content_sha256", T.StringType(), False),
-        T.StructField("simhash", T.LongType(), False),  # signed wrap
-    ]
-)
-
-# ---- spellcheck dictionary (reference 0003/0004/0008) -----------------------
-SPELLCHECK_DICTIONARY = T.StructType(
-    [
-        T.StructField("word", T.StringType(), False),
-        T.StructField("doc_frequency", T.LongType(), False),
-        T.StructField("total_frequency", T.LongType(), False),
-        T.StructField("external_frequency", T.LongType(), False),
-        T.StructField("popularity_score", T.DoubleType(), False),
-    ]
-)
-
-# ---- build lineage / resumability (north_rule) -------------------------------
-BUILD_CHECKPOINTS = T.StructType(
-    [
-        T.StructField("stage", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("input_fingerprint", T.StringType(), False),
-        T.StructField("rows_in", T.LongType(), True),
-        T.StructField("rows_out", T.LongType(), True),
-        T.StructField("wall_ms", T.LongType(), True),
-        T.StructField("completed_at", T.TimestampType(), True),
     ]
 )

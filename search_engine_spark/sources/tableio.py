@@ -30,10 +30,42 @@ deployments additionally need the runtime jar + catalog conf
 
 from __future__ import annotations
 
+import json
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+# the footer key under which Spark's parquet writer stores the DataFrame schema
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def footer_schema(path: str) -> T.StructType:
+    """The Spark schema the writer stored in the footer of the parquet file
+    at ``path``: the value Spark's schema inference reads, without its job."""
+    meta = pq.read_metadata(path).metadata
+    return T.StructType.fromJson(json.loads(meta[SPARK_SCHEMA_KEY]))
+
+
+def read_parquet(spark: SparkSession, path: str, schema_file: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema taken from the footer of
+    ``schema_file``, one of its data files, so opening the DataFrame runs
+    no Spark job. Spark appends the partition columns it finds in the
+    directory names, as inference does."""
+    return spark.read.schema(footer_schema(schema_file)).parquet(path)
+
+
+def parquet_files(path: str) -> list[str]:
+    """Data files of a parquet dir (partition subdirs included), relative
+    to ``path`` and sorted."""
+    return sorted(
+        os.path.relpath(os.path.join(d, n), path)
+        for d, _dirs, names in os.walk(path)
+        for n in names
+        if n.endswith(".parquet")
+    )
 
 
 def iceberg_available(spark: SparkSession, catalog: str) -> bool:
@@ -123,7 +155,16 @@ class ParquetIO(TableIO):
         )
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
-        return spark.read.parquet(self._path(table))
+        """The table, its schema taken from its first data file's footer.
+        Spark's inference also reads a single file's schema (schema
+        merging is off), but in a job of its own."""
+        path = self._path(table)
+        files = parquet_files(path)
+        if not files:
+            # no file, no footer: this only raises Spark's own error
+            # (UNABLE_TO_INFER_SCHEMA, or PATH_NOT_FOUND with no directory)
+            return spark.read.parquet(path)
+        return read_parquet(spark, path, os.path.join(path, files[0]))
 
     def replace(
         self,

@@ -19,6 +19,8 @@ like the reference.
 
 from __future__ import annotations
 
+import dataclasses
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -255,21 +257,16 @@ class SpellcheckService:
     """
 
     def __init__(self, spark: SparkSession, dictionary: DataFrame):
-        rows = dictionary.limit(MAX_DICTIONARY_WORDS + 1).collect()
-        if len(rows) > MAX_DICTIONARY_WORDS:
+        fields = [f.name for f in dataclasses.fields(DictEntry)]
+        table = dictionary.select(*fields).limit(MAX_DICTIONARY_WORDS + 1).toArrow()
+        if table.num_rows > MAX_DICTIONARY_WORDS:
             raise ValueError(
                 "spellcheck dictionary has more than MAX_DICTIONARY_WORDS = "
                 f"{MAX_DICTIONARY_WORDS} words; it must fit in driver memory"
             )
         self._entries: dict[str, DictEntry] = {
-            r["word"]: DictEntry(
-                word=r["word"],
-                doc_frequency=r["doc_frequency"],
-                total_frequency=r["total_frequency"],
-                external_frequency=r["external_frequency"],
-                popularity_score=r["popularity_score"],
-            )
-            for r in rows
+            row[0]: DictEntry(*row)
+            for row in zip(*(table.column(f).to_pylist() for f in fields))
         }
         # trigram -> words holding it, and each word's trigram count, over
         # the words eligible as candidates

@@ -43,9 +43,8 @@ from ..operators.documents import build_documents, latest_by_url
 from ..operators.fingerprints import exact_dedup
 from ..operators.tokens import build_tokens
 from ..pipeline.build import _derive_tables
-from ..pipeline.checkpoints import parquet_files
 from ..schemas import PAGES
-from ..sources.tableio import ParquetIO
+from ..sources.tableio import ParquetIO, parquet_files
 
 
 def apply_batch(

@@ -296,3 +296,186 @@ def test_failed_doc_count_surfaces_its_cause(spark, pages, tmp_path, monkeypatch
     monkeypatch.setattr(type(pages), "count", broken_count)
     with pytest.raises(RuntimeError, match="doc count failed"):
         build_index(spark, pages, str(tmp_path), FIXED_NOW)
+
+
+SERVED_TABLES = ["documents", "tokens", "term_statistics", "postings"]
+
+
+def _jobs_run_by(spark, fn):
+    """``fn()``'s result and the ids of the Spark jobs it ran."""
+    sc = spark.sparkContext
+    group = "pipeline-job-probe"
+    sc.setJobGroup(group, "count the Spark jobs of one call")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def _copy_root(root, tmp_path_factory, name):
+    copy = str(tmp_path_factory.mktemp(name))
+    shutil.rmtree(copy)
+    shutil.copytree(root, copy)
+    return copy
+
+
+def _titles(root, n=12):
+    import pyarrow.parquet as pq
+
+    files = CheckpointLog(root).committed("documents").files
+    titles = pq.read_table(files[0], columns=["title"]).column("title").to_pylist()
+    return sorted(t for t in titles if t)[:n]
+
+
+def _answers(engine, queries):
+    return [
+        (r.count, [(x.url, x.score) for x in r.results])
+        for r in (engine.search(q, 10) for q in queries)
+    ]
+
+
+def test_parquet_io_read_takes_the_footer_schema(spark, clean_build):
+    """ParquetIO.read gives every table the schema and rows Spark's
+    inference gives it (the postings partition column included), and
+    opening it runs no Spark job."""
+    from search_engine_spark.sources.tableio import ParquetIO
+
+    root, _ = clean_build
+    io = ParquetIO(root)
+    for t in TABLES:
+        got, jobs = _jobs_run_by(spark, lambda: io.read(spark, t))
+        assert jobs == [], t
+        want = spark.read.parquet(os.path.join(root, t))
+        assert got.schema == want.schema, t
+        assert sorted(got.collect()) == sorted(want.collect()), t
+    assert "term_bucket" in io.read(spark, "postings").columns
+
+
+def test_pinned_open_runs_no_spark_job(spark, clean_build):
+    root, _ = clean_build
+    load_engines(spark, root, interactive=True, pin_shard_layout=True)  # warm
+    _, jobs = _jobs_run_by(
+        spark, lambda: load_engines(spark, root, interactive=True, pin_shard_layout=True)
+    )
+    assert jobs == []
+
+
+def test_marker_fed_index_equals_dataframe_fed(spark, clean_build):
+    """The arrays decoded from the committed files' Arrow tables (what
+    load_engines opens) equal the ones an engine built on DataFrames
+    decodes, bit for bit."""
+    import numpy as np
+
+    from search_engine_spark.query.postings_search import (
+        PINNED_SCHEMAS,
+        PostingsSearchEngine,
+    )
+
+    root, _ = clean_build
+    log = CheckpointLog(root)
+    frames = [
+        spark.read.parquet(os.path.join(root, t))
+        for t in ("documents", "postings", "term_statistics")
+    ]
+    marker_fed = PostingsSearchEngine(
+        *frames,
+        pin_shard_layout=True,
+        pinned_tables=tuple(
+            log.committed(t).arrow(PINNED_SCHEMAS[t])
+            for t in ("documents", "postings", "term_statistics")
+        ),
+    )
+    df_fed = PostingsSearchEngine(*frames, pin_shard_layout=True)
+    _, opened = load_engines(spark, root, pin_shard_layout=True)
+    b = df_fed._pinned
+    assert len(b.docs) > 0 and len(b.by_term) > 0
+    for a in (marker_fed._pinned, opened._pinned):
+        assert a.docs == b.docs
+        assert a.fields == b.fields
+        assert a.by_term == b.by_term
+        assert a.ords.dtype == b.ords.dtype == np.int32
+        assert np.array_equal(a.ords.astype(np.int64), b.ords.astype(np.int64))
+        assert np.array_equal(a.contrib.view(np.int64), b.contrib.view(np.int64))
+
+
+def test_pinned_open_ignores_a_stray_postings_file(spark, clean_build, tmp_path_factory):
+    """A data file the postings marker does not name is never served, even
+    though a directory listing would read it."""
+    import glob
+
+    root, _ = clean_build
+    copy = _copy_root(root, tmp_path_factory, "stray")
+    files = sorted(
+        glob.glob(os.path.join(copy, "postings", "term_bucket=*", "*.parquet")),
+        key=os.path.getsize,
+    )
+    stray = os.path.join(os.path.dirname(files[0]), "part-99999-stray.snappy.parquet")
+    shutil.copy(files[-1], stray)
+    assert spark.read.parquet(os.path.join(copy, "postings")).count() > CheckpointLog(
+        copy
+    ).committed("postings").num_rows
+
+    queries = _titles(root)
+    _, clean = load_engines(spark, root, pin_shard_layout=True)
+    _, strayed = load_engines(spark, copy, pin_shard_layout=True)
+    want = _answers(clean, queries)
+    assert any(count for count, _ in want)
+    assert _answers(strayed, queries) == want
+
+
+@pytest.mark.parametrize("table", SERVED_TABLES)
+def test_open_refuses_a_table_without_marker(spark, clean_build, tmp_path_factory, table):
+    """The state CheckpointLog.clear leaves while a table is rewritten: the
+    open names the table instead of reading it half-written."""
+    root, _ = clean_build
+    copy = _copy_root(root, tmp_path_factory, f"no_marker_{table}")
+    CheckpointLog(copy).clear(table)
+    with pytest.raises(ValueError, match=f"'{table}'"):
+        load_engines(spark, copy, pin_shard_layout=True)
+
+
+def test_open_refuses_a_file_unlike_its_marker(spark, clean_build, tmp_path_factory):
+    root, _ = clean_build
+    copy = _copy_root(root, tmp_path_factory, "rows_mismatch")
+    marker = os.path.join(copy, "_checkpoints", "term_statistics.json")
+    with open(marker) as f:
+        m = json.load(f)
+    m["files"][0]["rows"] += 1
+    with open(marker, "w") as f:
+        json.dump(m, f)
+    with pytest.raises(ValueError, match="commit marker says"):
+        load_engines(spark, copy, pin_shard_layout=True)
+
+
+def test_open_checks_the_budget_before_reading_a_file(spark, clean_build, monkeypatch):
+    import pyarrow.parquet as pq
+
+    from search_engine_spark.query import postings_search
+
+    root, _ = clean_build
+    n_docs = CheckpointLog(root).committed("documents").num_rows
+    monkeypatch.setattr(postings_search, "MAX_SERVING_DOCUMENTS", n_docs - 1)
+
+    def no_read(*args, **kwargs):
+        raise AssertionError("a parquet file was read")
+
+    monkeypatch.setattr(pq, "ParquetFile", no_read)
+    monkeypatch.setattr(pq, "read_metadata", no_read)
+    with pytest.raises(ValueError, match=f"MAX_SERVING_DOCUMENTS = {n_docs - 1}"):
+        load_engines(spark, root, pin_shard_layout=True)
+
+
+def test_empty_index_opens_empty(spark, pages, tmp_path):
+    """An empty corpus commits a postings table with no file at all (Spark
+    writes none for an empty partitioned table); it opens as empty."""
+    root = str(tmp_path)
+    build_index(spark, pages.limit(0), root, FIXED_NOW)
+    assert CheckpointLog(root).committed("postings").files == ()
+    (_, engine), jobs = _jobs_run_by(
+        spark, lambda: load_engines(spark, root, pin_shard_layout=True)
+    )
+    assert jobs == []
+    assert engine._pinned.docs == [] and engine._pinned.by_term == {}
+    response = engine.search("spark table", 10)
+    assert response.results == [] and response.count == 0

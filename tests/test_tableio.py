@@ -191,3 +191,22 @@ def test_iceberg_merge_roundtrip(tmp_path):
     assert out["mor_articles_match"], "delta MERGE drifted from upsert_articles"
     assert out["cow_plan_replace_data"], "copy-on-write MERGE should plan ReplaceData"
     assert out["mor_plan_write_delta"], "merge-on-read MERGE should plan WriteDelta"
+
+
+@pytest.mark.parametrize("partitioned", [False, True])
+def test_read_without_a_data_file_raises_sparks_error(spark, io, tmp_path, partitioned):
+    """A directory holding no data file (an empty partitioned write leaves
+    only _SUCCESS) or no directory at all: read raises what Spark raises."""
+    from pyspark.errors import AnalysisException
+
+    empty = spark.createDataFrame([], "k long, v string")
+    io.replace(empty, "t", partition_by=["v"] if partitioned else None)
+    if partitioned:
+        with pytest.raises(AnalysisException, match="UNABLE_TO_INFER_SCHEMA"):
+            spark.read.parquet(str(tmp_path / "t"))
+        with pytest.raises(AnalysisException, match="UNABLE_TO_INFER_SCHEMA"):
+            io.read(spark, "t")
+    else:  # one empty file, whose footer still holds the schema
+        assert io.read(spark, "t").schema == spark.read.parquet(str(tmp_path / "t")).schema
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        io.read(spark, "missing")
