@@ -43,7 +43,7 @@ def format_results_markdown(response: SearchResponse) -> str:
 
 @dataclass
 class SearchAPI:
-    """search_web / search_news / spellcheck tools over built DataFrames."""
+    """search_web / search_news / spellcheck tools over opened engines."""
 
     engine: SearchEngine
     spellcheck: SpellcheckService | None = None

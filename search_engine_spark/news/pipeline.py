@@ -21,6 +21,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..pipeline.checkpoints import CheckpointLog
 from ..sources.tableio import ParquetIO, TableIO
 from .feeds import (
     ARTICLE_MERGE_SET,
@@ -81,7 +82,10 @@ def build_news_tables(
 def load_news_engine(spark: SparkSession, out_root: str, index_root: str | None = None):
     """Open the persisted news tables (+ the web index's term_statistics
     when available — the reference's news search uses the SHARED idf
-    table) and return a ready NewsSearchEngine."""
+    table) and return a ready NewsSearchEngine. The web table is opened
+    through its commit marker, as ``load_engines`` opens it: a
+    term_statistics directory whose marker is gone (a rewrite that has not
+    committed) raises ``CheckpointLog.committed``'s ``ValueError``."""
     from ..query.news_search import NewsSearchEngine
 
     io = ParquetIO(out_root)
@@ -90,7 +94,7 @@ def load_news_engine(spark: SparkSession, out_root: str, index_root: str | None 
     if index_root is not None and os.path.exists(
         os.path.join(index_root, "term_statistics")
     ):
-        stats = spark.read.parquet(os.path.join(index_root, "term_statistics"))
+        stats = CheckpointLog(index_root).committed("term_statistics").dataframe(spark)
     else:
         # no web index: every term falls back to idf 1.0 (COALESCE path)
         stats = spark.createDataFrame([], "term string, idf double")

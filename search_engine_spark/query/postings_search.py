@@ -35,6 +35,9 @@ concurrent searches:
 4. intent re-rank in Python (``intent.intent_score_fields``), order by
    (score DESC, ordinal), page.
 
+Steps 2-4 are ``rank_in_memory``, which the news engine
+(``query/news_search.py``) runs over its own arrays too.
+
 An unpinned engine plans the same steps as Spark jobs (SURVEY.md §3.1
 "Spark rebuild"):
 
@@ -56,7 +59,6 @@ exact (any doc in the global top-k is in its shard's top-k).
 from __future__ import annotations
 
 import bisect
-import itertools
 import threading
 from contextlib import contextmanager
 
@@ -372,27 +374,17 @@ class PostingsSearchEngine:
 
     def _ranked_in_memory(self, ctx: QueryContext) -> list:
         index = self._pinned
-        score = np.zeros(len(index.docs))
-        matched = np.zeros(len(index.docs), dtype=np.int32)
-        blocks = 0
+        ranges, blocks = [], 0
         for term in sorted(ctx.query_terms):
             postings = index.by_term.get(term)
             if postings is not None:
                 lo, hi, n_blocks = postings
-                ords = index.ords[lo:hi]
-                score[ords] += index.contrib[lo:hi]
-                matched[ords] += 1
+                ranges.append((lo, hi))
                 blocks += n_blocks
         with self._stats_lock:
             self._blocks_decoded += blocks
             self._blocks_total += blocks
-        hits = np.flatnonzero(matched)
-        top = hits[np.lexsort((hits, -score[hits]))[: ctx.candidate_limit]]
-        ranked = [
-            (intent_score_fields(ctx, s, m, index.fields[o]), o)
-            for o, s, m in zip(top.tolist(), score[top].tolist(), matched[top].tolist())
-        ]
-        ranked.sort(key=lambda r: (-r[0], r[1]))
+        ranked = rank_in_memory(index.ords, index.contrib, ranges, index.fields, ctx)
         return [(*index.docs[o], s) for s, o in ranked]
 
     def search(self, q: str, limit: int = 20, offset: int = 0) -> SearchResponse:
@@ -415,6 +407,43 @@ class PostingsSearchEngine:
         ]
         count = max(len(ranked), offset + len(page))
         return SearchResponse(results=page, count=count)
+
+
+def rank_in_memory(
+    ords: np.ndarray,
+    contrib: np.ndarray,
+    ranges: list[tuple[int, int]],
+    fields: list,
+    ctx: QueryContext,
+    bonus: float = 0.0,
+) -> list[tuple[float, int]]:
+    """Steps 2-4 of a search served from driver memory -> (score, ordinal)
+    pairs in rank order. ``ranges`` holds each query term's (lo, hi) into
+    ``ords`` (distinct ordinals) and ``contrib``, in ascending term order;
+    ``fields`` holds one ``intent.doc_fields`` per ordinal. ``bonus`` is added
+    to each intent score before the final sort (``x + bonus`` can tie where
+    ``x`` does not)."""
+    score = np.zeros(len(fields))
+    matched = np.zeros(len(fields), dtype=np.int32)
+    for lo, hi in ranges:
+        score[ords[lo:hi]] += contrib[lo:hi]
+        matched[ords[lo:hi]] += 1
+    hits = np.flatnonzero(matched)
+    top = hits[np.lexsort((hits, -score[hits]))[: ctx.candidate_limit]]
+    ranked = [
+        (intent_score_fields(ctx, s, m, fields[o]) + bonus, o)
+        for o, s, m in zip(top.tolist(), score[top].tolist(), matched[top].tolist())
+    ]
+    ranked.sort(key=lambda r: (-r[0], r[1]))
+    return ranked
+
+
+def term_runs(terms: pa.ChunkedArray) -> dict[str, tuple[int, int]]:
+    """Each term's rows [lo, hi) in a term-sorted column."""
+    codes = terms.combine_chunks().dictionary_encode()
+    edges = np.flatnonzero(np.diff(codes.indices.to_numpy())) + 1
+    bounds = np.concatenate(([0], edges, [len(terms)])).tolist()
+    return dict(zip(codes.dictionary.to_pylist(), zip(bounds[:-1], bounds[1:])))
 
 
 def _collect_pinned(
@@ -504,11 +533,10 @@ class _PinnedIndex:
         self.contrib = np.concatenate(contrib)
         start = np.concatenate(([0], np.cumsum(np.concatenate(kept))))  # each row's postings
         blocks = np.concatenate(blocks)
-        self.by_term: dict[str, tuple] = {}
-        for term, group in itertools.groupby(range(len(terms)), key=terms.__getitem__):
-            group = list(group)
-            lo, hi = start[group[0]], start[group[-1] + 1]
-            self.by_term[term] = (int(lo), int(hi), int(blocks[group].sum()))
+        self.by_term: dict[str, tuple] = {
+            term: (int(start[a]), int(start[b]), int(blocks[a:b].sum()))
+            for term, (a, b) in term_runs(lists.column("term")[n_maps:]).items()
+        }
 
 
 def _row_batches(sizes: np.ndarray, batch_bytes: int) -> list[tuple[int, int]]:

@@ -6,8 +6,7 @@ crosses the JVM<->Python boundary. Allowed slow-path surface (SURVEY.md §2.11):
 
 1. page extraction  (html -> struct)            — reference worker.py:56-137
 2. tokenization     (text -> map<term,int>)     — reference tokenizer.py:36-40
-3. url ops          (normalize / domain)        — reference normalization.py
-4. simhash64        (text -> long)              — reference duplicate_detection.py:63
+3. simhash64        (text -> long)              — reference duplicate_detection.py:63
 
 "now" is threaded in as a closure constant (a job parameter), never the wall
 clock, so executors at any parallelism produce identical outputs.
@@ -23,7 +22,6 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from .extract import parse_page
-from .normalization import normalize_url, registrable_domain
 from .simhash_impl import simhash_batch
 from .tokenizer import tokenize
 
@@ -102,16 +100,6 @@ def make_extract_map(now: datetime):
 def tokenize_udf(text: pd.Series) -> pd.Series:
     """text -> {stemmed term: frequency} (reference tokenizer.py:36-40)."""
     return text.map(lambda t: dict(tokenize(t or "")))
-
-
-@pandas_udf(T.StringType())
-def normalize_url_udf(url: pd.Series) -> pd.Series:
-    return url.map(lambda u: normalize_url(u or ""))
-
-
-@pandas_udf(T.StringType())
-def registrable_domain_udf(url: pd.Series) -> pd.Series:
-    return url.map(lambda u: registrable_domain(u or ""))
 
 
 @pandas_udf(T.LongType())

@@ -355,6 +355,8 @@ def test_news_search_empty_and_missing_engine(spark, term_stats, feeds_df):
 def test_news_token_score_is_a_term_order_fold(spark):
     """Two articles with equal frequencies for three terms score == however
     their token rows arrive, and the tie goes to the smaller url."""
+    import math
+
     from search_engine_spark.query.news_search import NewsSearchEngine
     from search_engine_spark.tokenizer import tokenize
 
@@ -379,10 +381,167 @@ def test_news_token_score_is_a_term_order_fold(spark):
     for t in terms:
         fold += idf[t]
 
-    rows = NewsSearchEngine(articles, tokens, stats).candidates_df(q).collect()
-    assert [r["url"] for r in rows] == [first, second]
-    assert [r["token_score"] for r in rows] == [fold, fold]
-    assert [r["matched_terms"] for r in rows] == [3, 3]
+    resp = NewsSearchEngine(articles, tokens, stats).search(q)
+    assert [r.url for r in resp.results] == [first, second]
+    # no query word is in a title or url, so past the fold's log1p the
+    # intent score adds only full coverage (25 + 40), then the 8.0 bonus
+    want = math.log1p(fold) * 12.0 + 25.0 + 40.0 + 8.0
+    assert [r.score for r in resp.results] == [want, want]
+
+
+def _news_frame(spark, articles, tokens, stats=()):
+    from search_engine_spark.query.news_search import NewsSearchEngine
+
+    return NewsSearchEngine(
+        spark.createDataFrame(
+            articles,
+            "url string, title string, description string, author string, "
+            "published_at_s long",
+        ),
+        spark.createDataFrame(
+            tokens, "article_url string, term string, field short, frequency int"
+        ),
+        spark.createDataFrame(list(stats), "term string, idf double"),
+    )
+
+
+def test_news_search_runs_no_spark_job(spark, feeds_df, term_stats):
+    """After construction a news search is driver-memory work only."""
+    from search_engine_spark.query.news_search import NewsSearchEngine
+
+    articles = parse_feeds(feeds_df)
+    engine = NewsSearchEngine(articles, article_tokens(articles), term_stats)
+    sc = spark.sparkContext
+    group = "news-search-jobs"
+    sc.setJobGroup(group, "a news search must not run a Spark job")
+    try:
+        for q, limit, offset in (("data query spark", 20, 0), ("story", 5, 3), ("zzzz", 5, 0)):
+            engine.search(q, limit, offset)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+def _reference_news_search(articles, tokens, idf, q, limit, offset):
+    """/search/news by hand: flat tf*idf folded in term order over each
+    article's token rows, the oracle's intent score + 8.0, (score desc, url
+    asc), and the reference count formula."""
+    from search_engine_spark import oracle
+
+    ctx = oracle.search_context(q, limit, offset)
+    if ctx is None:
+        return [], 0
+    wanted = set(ctx["query_terms"])
+    rows_by_url = {}
+    for url, term, frequency in tokens:
+        if url in articles and term in wanted:
+            rows_by_url.setdefault(url, []).append((term, frequency))
+    candidates = []
+    for url, rows in rows_by_url.items():
+        token_score = 0.0
+        for term, frequency in sorted(rows):
+            weight = idf.get(term)
+            token_score += frequency * (1.0 if weight is None else weight)
+        candidates.append((token_score, len(rows), url))
+    candidates.sort(key=lambda c: (-c[0], c[2]))
+    ranked = []
+    for token_score, matched, url in candidates[: ctx["candidate_limit"]]:
+        title, description = articles[url]
+        score = oracle.intent_score(
+            token_score=token_score,
+            matched_terms=matched,
+            total_terms=ctx["total_terms"],
+            query_phrase=ctx["query_phrase"],
+            query_compact=ctx["query_compact"],
+            query_words=ctx["query_words"],
+            title=title or "",
+            description=description or "",
+            url=url,
+        )
+        ranked.append((score + 8.0, url))
+    ranked.sort(key=lambda r: (-r[0], r[1]))
+    page = ranked[offset : offset + limit]
+    return page, max(len(ranked), offset + len(page))
+
+
+def test_news_search_matches_a_pure_python_reference(spark, feeds_df, term_stats):
+    import math
+
+    from search_engine_spark.query.news_search import NewsSearchEngine
+
+    articles_df = parse_feeds(feeds_df).cache()
+    tokens_df = article_tokens(articles_df).cache()
+    engine = NewsSearchEngine(articles_df, tokens_df, term_stats)
+    articles = {
+        r["url"]: (r["title"], r["description"])
+        for r in articles_df.select("url", "title", "description").collect()
+    }
+    assert len(articles) == 80
+    tokens = [
+        (r["article_url"], r["term"], r["frequency"])
+        for r in tokens_df.select("article_url", "term", "frequency").collect()
+    ]
+    idf = {r["term"]: r["idf"] for r in term_stats.select("term", "idf").collect()}
+    df = {}
+    for _, term, _ in tokens:
+        df[term] = df.get(term, 0) + 1
+    by_df = sorted(df, key=lambda t: (-df[t], t))
+    some_title = next(iter(articles.values()))[0]
+    queries = [
+        by_df[0],  # the commonest term
+        by_df[len(by_df) // 2],
+        by_df[-1],  # a rare term
+        f"{by_df[0]} {by_df[3]} {by_df[len(by_df) // 2]}",
+        "data query spark",
+        some_title,  # verbatim title: phrase bonus
+        some_title.upper(),
+        "the and of to",  # stopwords only: empty
+        "zzzzqqqqxxxx",  # unknown word: empty
+        f"{by_df[1]} zzzzqqqqxxxx",  # known + unknown (idf 1.0 path)
+    ]
+    hits = 0
+    for q in queries:
+        for limit, offset in ((20, 0), (5, 3), (3, 10), (100, 0)):
+            resp = engine.search(q, limit, offset)
+            want, want_count = _reference_news_search(articles, tokens, idf, q, limit, offset)
+            assert resp.count == want_count, (q, limit, offset)
+            assert [r.url for r in resp.results] == [u for _, u in want], (q, limit, offset)
+            for r, (score, _) in zip(resp.results, want):
+                assert math.isclose(r.score, score, rel_tol=1e-12), (q, r.url)
+            hits += len(want)
+    assert hits > 0
+    articles_df.unpersist()
+    tokens_df.unpersist()
+
+
+def test_news_engine_joins_tokens_to_articles(spark):
+    """A token row of a missing article is dropped and an article without
+    token rows never matches; a duplicate article url is an error."""
+    known = ("https://news.example/known", "Known story", "", None, 7)
+    quiet = ("https://news.example/quiet", "Quiet data story", "", None, None)
+    engine = _news_frame(
+        spark,
+        [known, quiet],
+        [(known[0], "data", 4, 2), ("https://news.example/gone", "data", 4, 5)],
+    )
+    resp = engine.search("data", limit=10)
+    assert [r.url for r in resp.results] == [known[0]]
+    assert resp.count == 1
+    assert resp.results[0].published_at_s == 7
+    with pytest.raises(ValueError, match="one row per url"):
+        _news_frame(spark, [known, known], [(known[0], "data", 4, 2)])
+    with pytest.raises(ValueError, match="one row per"):
+        _news_frame(spark, [known], [(known[0], "data", 4, 2), (known[0], "data", 4, 1)])
+
+
+def test_news_engine_over_serving_budget_raises(spark, feeds_df, term_stats, monkeypatch):
+    from search_engine_spark.query import postings_search
+    from search_engine_spark.query.news_search import NewsSearchEngine
+
+    articles = parse_feeds(feeds_df)
+    monkeypatch.setattr(postings_search, "MAX_SERVING_DOCUMENTS", 79)
+    with pytest.raises(ValueError, match="MAX_SERVING_DOCUMENTS = 79"):
+        NewsSearchEngine(articles, article_tokens(articles), term_stats)
 
 
 # ---------------------------------------------------------------------------
@@ -407,6 +566,40 @@ def test_build_news_tables_and_reload(spark, tmp_path):
     assert counts2["articles"] == counts["articles"]
     arts = spark.read.parquet(f"{out}/articles")
     assert arts.count() == arts.select("url").distinct().count()
+
+
+def test_load_news_engine_opens_term_statistics_through_its_marker(spark, tmp_path):
+    """The shared idf table is read from the files its commit marker names;
+    an index root without the table keeps idf 1.0, and a table whose marker
+    was cleared for a rewrite is not opened."""
+    from search_engine_spark.news.pipeline import build_news_tables, load_news_engine
+    from search_engine_spark.pipeline.checkpoints import CheckpointLog
+
+    out, index_root = str(tmp_path / "news"), str(tmp_path / "index")
+    feeds = spark.createDataFrame(synth_feeds(2, 3), "feed_url string, xml string")
+    build_news_tables(spark, feeds, out)
+    q = "data query spark"
+    plain = [(r.url, r.score) for r in load_news_engine(spark, out).search(q).results]
+    assert plain
+    assert [
+        (r.url, r.score) for r in load_news_engine(spark, out, index_root).search(q).results
+    ] == plain  # no term_statistics under the index root: idf 1.0
+
+    stats_dir = str(tmp_path / "index" / "term_statistics")
+    spark.createDataFrame(
+        [("data", 1, 5.0, 1.0, 1), ("queri", 1, 3.0, 1.0, 1)],
+        "term string, doc_frequency long, idf double, avg_doc_len double, ctf long",
+    ).coalesce(1).write.parquet(stats_dir)
+    log = CheckpointLog(index_root)
+    log.record("term_statistics", "fp", stats_dir, 0)
+    weighted = [(r.url, r.score) for r in load_news_engine(spark, out, index_root).search(q).results]
+    assert sorted(u for u, _ in weighted) == sorted(u for u, _ in plain)
+    pairs = list(zip(sorted(weighted), sorted(plain)))
+    assert all(w >= p for (_, w), (_, p) in pairs) and any(w > p for (_, w), (_, p) in pairs)
+
+    log.clear("term_statistics")
+    with pytest.raises(ValueError, match="'term_statistics' has no commit marker"):
+        load_news_engine(spark, out, index_root)
 
 
 # ---------------------------------------------------------------------------
